@@ -203,8 +203,10 @@ def ngram_nll_scores(documents: DataFrame, order: int,
     are scored; docs with < n tokens get no row.
 
     Scale shape (the same at every order, round 7): the corpus is
-    tokenized ONCE and every k-gram (k = 1..n) is hashed ONCE —
-    per position i, ``h_k(i) = xxhash64(tok_i, …, tok_{i+k−1})`` —
+    tokenized ONCE and every k-gram (k = 1..n) is hashed ONCE with
+    two-level hashing — each token's string is hashed once,
+    ``h_1(i) = xxhash64(tok_i)``, and every longer gram hashes those
+    LONGS, ``h_k(i) = xxhash64(h_1(i), …, h_1(i+k−1))`` for k ≥ 2 —
     into a lineage-cut per-document array of (h1..hn) structs; every
     downstream table re-slices those LONGS.  The per-doc DISTINCT-
     transition table groups (id, h_n) — 8-byte keys through the only
@@ -216,8 +218,9 @@ def ngram_nll_scores(documents: DataFrame, order: int,
     array lookups, not re-hashes); the logp table is built with
     2(n−1) equi-joins on LONG keys (AQE broadcasts the small sides)
     and joined back once on h_n.  Hash-keying merges two DISTINCT
-    grams only on a 64-bit collision among the observed grams
-    (~m²/2⁶⁵ — the same argument as the substring-span window keys
+    grams only on a 64-bit collision among the observed grams' keys
+    (for k ≥ 2 a collision of the token-hash tuples' hashes; still
+    ~m²/2⁶⁵ — the same argument as the substring-span window keys
     and paragraph election keys; k is fixed per table/join so gram
     lengths never share a key space, and the DuckDB oracle still
     counts by TEXT, cross-checking the shortcut at every graded SF).
@@ -247,8 +250,9 @@ def ngram_nll_scores(documents: DataFrame, order: int,
 
     from mc2skos_spark.functions.textstats import _once
 
-    # hash every k-gram ONCE: per position i (1-based), h_k =
-    # xxhash64(tok_i..tok_{i+k-1}) for k = 1..n, null past the
+    # hash every k-gram ONCE: per position i (1-based), h_1 =
+    # xxhash64(tok_i) and h_k = xxhash64(h_1(i)..h_1(i+k-1)) for
+    # k = 2..n (two-level, see below), null past the
     # document tail; the lineage cut materializes these long arrays
     # one time for all three consumers (transition table, lower-order
     # counts, suffix/context attachments).  F.get is 0-indexed and

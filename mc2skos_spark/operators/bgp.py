@@ -562,11 +562,14 @@ def materialize_rules(triples: DataFrame, rules,
     length per round because round k's derivations join round k's
     derivations — O(log diameter) rounds, the same curve as the
     closure operator.  Non-recursive rules (inverses, type markers,
-    scheme membership) finish in one round plus the empty-delta probe.
+    scheme membership) whose bodies read no predicate they derive
+    finish in ONE round: see the predicate test below.
 
     Iteration discipline (the `_cc_loop` shape): each round's new-delta
     is lazily ``localCheckpoint``-marked and materialized BY the
-    convergence count itself — one Spark job per round, since at bench
+    convergence action itself — a per-predicate count of the delta, so
+    one action per round both tests the fixpoint (no predicates → no
+    new triples) and names what the delta holds — since at bench
     scale iterative wall time is job count — and the accumulated graph
     re-checkpoints each round so the plan does not grow.  Every
     per-round shuffle is keyed (subj, pred, obj) — hash joins and
@@ -583,7 +586,12 @@ def materialize_rules(triples: DataFrame, rules,
     derived (and anti-joined away) in an earlier round, so the
     per-round new-triple sets — and therefore the fixpoint, the round
     count, and the divergence guard — are unchanged (pytest pins
-    semi-naive == naive on a deep chain).  Rules using property paths,
+    semi-naive == naive on a deep chain).  A delta-sourced pattern
+    whose predicate is a constant the previous round did not derive
+    filters the delta on a predicate it does not contain, so it is
+    provably empty and is not planned at all; when every rule is plain
+    and no pattern is left live, the next round could derive nothing
+    and the loop returns without running it.  Rules using property paths,
     OPTIONAL/UNION or other select kwargs fall back to full
     evaluation for that rule (delta-restricting a closure path is not
     sound), still anti-joined the same way.
@@ -606,16 +614,18 @@ def materialize_rules(triples: DataFrame, rules,
         raise ValueError("materialize_rules needs at least one rule")
     graph = (triples.select("subj", "pred", "obj").distinct()
              .localCheckpoint(eager=False))
+    all_plain = all(plain for *_, plain in norm)
     delta = None          # None -> full evaluation (round 1)
+    live = None           # per rule: the delta-scanned pattern indices
     for _ in range(max_rounds):
         derived = None
-        for template, where, kwargs, plain in norm:
+        for r, (template, where, kwargs, plain) in enumerate(norm):
             if delta is None or not plain:
                 parts = [construct_query(graph, template, where,
                                          **kwargs)]
             else:
                 parts = []
-                for i in range(len(where)):
+                for i in live[r]:
                     sources = [None] * len(where)
                     sources[i] = delta
                     parts.append(construct_query(
@@ -623,19 +633,24 @@ def materialize_rules(triples: DataFrame, rules,
                         pattern_sources=sources))
             for d in parts:
                 derived = d if derived is None else derived.unionByName(d)
-        # one job per round (the tc/pagerank loop shape): the full
-        # count materializes the LAZY checkpoint itself — every
-        # partition computes and pins under the count job, so the
-        # eager-checkpoint + limit(1)-probe pair (two scheduling
-        # round-trips per round) collapses into one action whose
-        # result IS the convergence test
+        # one action per round (the tc/pagerank loop shape): the
+        # per-predicate count materializes the LAZY checkpoint itself —
+        # every partition computes and pins under it — and its rows are
+        # both the convergence test and the next round's live predicates
         new = (derived.distinct()
                .join(graph, ["subj", "pred", "obj"], "left_anti")
                .localCheckpoint(eager=False))
-        if new.count() == 0:
+        fresh = {row["pred"] for row in
+                 new.groupBy("pred").count().collect()}
+        if not fresh:
             return graph
         graph = graph.unionByName(new).localCheckpoint(eager=False)
         delta = new
+        live = [[i for i, p in enumerate(where)
+                 if _is_var(p[1]) or p[1] in fresh] if plain else []
+                for _, where, _, plain in norm]
+        if all_plain and not any(live):
+            return graph
     raise RuntimeError(
         "rule materialization did not converge in %d rounds — a rule "
         "is deriving unbounded fresh triples" % max_rounds)

@@ -95,7 +95,9 @@ def connected_components(edges: DataFrame, max_rounds: int = 20,
     Min-label propagation with pointer compression over an undirected
     edge list.  Each round materializes via ``localCheckpoint`` (lineage
     cut) and the driver tests convergence with a count — the per-round
-    action the survey's lifecycle (§3) calls out.
+    action the survey's lifecycle (§3) calls out.  Raises
+    ``RuntimeError`` when ``max_rounds`` rounds pass without
+    convergence — partial labels are never returned.
 
     The candidate-edge set is orders of magnitude smaller than the
     triple table (only URIs sharing an identifier), so the loop's BIG
@@ -185,8 +187,7 @@ def _cc_loop(both: DataFrame, max_rounds: int,
         # label-pointer compression: relabel through the label table —
         # keeps round count O(log diameter) for long chains
         # lazy: the compressed labels materialize under the NEXT
-        # round's count job (or the caller's first action on the
-        # max_rounds exit) — no dedicated job for the compression
+        # round's count job — no dedicated job for the compression
         labels = (new_labels.alias("a")
                   .join(new_labels.select(
                       F.col("vertex").alias("comp"),
@@ -195,7 +196,8 @@ def _cc_loop(both: DataFrame, max_rounds: int,
                   .select("vertex",
                           F.coalesce("parent", "comp").alias("comp"))
                   .localCheckpoint(eager=False))
-    return labels
+    raise RuntimeError(
+        "connected components did not converge in %d rounds" % max_rounds)
 
 
 def mapping_from_edges(edges: DataFrame) -> DataFrame:

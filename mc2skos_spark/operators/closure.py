@@ -13,7 +13,10 @@ Path length doubles per round, so the driver loop runs O(log diameter)
 rounds; each round is one self-join + one dedup shuffle, lineage is cut
 with ``localCheckpoint`` (same loop discipline as the connected-
 components operator, ``operators/canonicalize.py:95``), and convergence
-is a driver-side count comparison.
+is a driver-side count comparison.  The count that materializes the
+deduplicated edge list seeds that comparison and sizes round 1's join,
+so an input that is already closed (a one-level hierarchy) stops after
+round 1: no round exists only to confirm the fixpoint.
 """
 
 from __future__ import annotations
@@ -29,50 +32,42 @@ def transitive_closure(edges: DataFrame, max_rounds: int = 20,
 
     Like the union-find loop, the per-round self-join runs at its own
     explicit width scaled to the materialized path count (~1M rows/
-    partition, floor 8, re-derived per round as the path set doubles):
-    both join inputs are ``repartition(width, join_key)``-ed, which
-    REPLACES the exchange the join would have planned anyway — the
-    session's ``spark.sql.shuffle.partitions`` is never read-modified,
-    so concurrent queries on a shared session keep their own width.
-    The grow-step ``distinct`` stays at session width (AQE coalesces;
-    map-side partial combine applies).
+    partition, floor 8, re-derived every round from the count the
+    previous round — or, for round 1, the deduplicated edge list —
+    already paid): both join inputs are ``repartition(width,
+    join_key)``-ed, which REPLACES the exchange the join would have
+    planned anyway — the session's ``spark.sql.shuffle.partitions`` is
+    never read-modified, so concurrent queries on a shared session keep
+    their own width.  The grow-step ``distinct`` stays at session width
+    (AQE coalesces; map-side partial combine applies).
+
+    Fixpoint test: a round whose path count equals the count before it
+    derived nothing, so the loop returns.  An already-closed input
+    therefore costs the edge-list job plus one round.  Raises
+    ``RuntimeError`` when ``max_rounds`` rounds pass without reaching
+    the fixpoint — a partial closure is never returned.
     """
+    # LAZY checkpoint + count: the count action itself materializes the
+    # checkpoint (one Spark job, not two) — at bench scale iterative-loop
+    # wall time is job count, not data (CLAUDE.md)
     paths = (edges.select("src", "dst").distinct()
-             .localCheckpoint())
-    # no up-front count job: the first round's count seeds n.  Round 1
-    # therefore has no explicit width — the join plans its own
-    # exchanges at session width and AQE right-sizes them from runtime
-    # statistics, which is exactly what an unknown-size input needs (a
-    # fixed floor width here would funnel a huge first-round self-join
-    # through too few tasks).  From round 2 on, the counted path size
-    # drives the explicit width as before.
-    n = -1
-    fixed_width = loop_partitions is not None
+             .localCheckpoint(eager=False))
+    n = paths.count()
     for _ in range(max_rounds):
-        if fixed_width:
-            width = loop_partitions
-        elif n < 0:
-            width = None            # round 1: planner + AQE decide
-        else:
-            width = max(8, n // 1_000_000)
-        left = paths.repartition(width, "dst") if width else paths
-        right = paths.repartition(width, "src") if width else paths
-        hops = (left.alias("a")
-                .join(right.alias("b"),
+        width = loop_partitions or max(8, n // 1_000_000)
+        hops = (paths.repartition(width, "dst").alias("a")
+                .join(paths.repartition(width, "src").alias("b"),
                       F.col("a.dst") == F.col("b.src"))
                 .select(F.col("a.src").alias("src"),
                         F.col("b.dst").alias("dst")))
-        # LAZY checkpoint + count: the count action itself materializes
-        # the round (one Spark job per round, not two) — at bench scale
-        # iterative-loop wall time is job count, not data (CLAUDE.md)
-        grown = (paths.unionByName(hops).distinct()
+        paths = (paths.unionByName(hops).distinct()
                  .localCheckpoint(eager=False))
-        m = grown.count()
-        paths = grown
+        m = paths.count()
         if m == n:   # fixpoint: no new reachable pair this round
-            break
+            return paths
         n = m
-    return paths
+    raise RuntimeError(
+        "transitive closure did not converge in %d rounds" % max_rounds)
 
 
 def cycle_members(edges: DataFrame, max_rounds: int = 20,

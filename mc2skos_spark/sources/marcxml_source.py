@@ -54,21 +54,22 @@ class MarcXmlReader(DataSourceReader):
 
     def __init__(self, options):
         # 'paths' (a JSON array) is the exact form: file names survive
-        # verbatim, commas included.  'path' (file, glob, or comma-list)
-        # stays for hand-typed use; it cannot express a comma in a name.
+        # verbatim, commas and glob metacharacters included.  'path'
+        # (file, glob, or comma-list) stays for hand-typed use; it
+        # cannot express a comma in a name.
         encoded = options.get("paths")
         pattern = options.get("path")
         if not encoded and not pattern:
             raise ValueError("marcxml source needs .option('paths', "
                              "<JSON array>) or .option('path', "
                              "<file, glob, or comma-list>)")
-        parts = (json.loads(encoded) if encoded
-                 else [p.strip() for p in pattern.split(",")])
-        paths: list[str] = []
-        for part in parts:
-            expanded = sorted(glob.glob(part)) if any(
-                c in part for c in "*?[") else [part]
-            paths.extend(expanded)
+        if encoded:
+            paths = json.loads(encoded)
+        else:
+            paths = []
+            for part in (p.strip() for p in pattern.split(",")):
+                paths.extend(sorted(glob.glob(part)) if any(
+                    c in part for c in "*?[") else [part])
         if not paths:
             raise ValueError("marcxml source matched no files for %r"
                              % (encoded or pattern))

@@ -418,6 +418,16 @@ def test_materialize_rules_fixpoint(spark):
     # idempotent: running again derives nothing new
     again = materialize_rules(out, rules)
     assert again.count() == out.count()
+    # a rule body reading no derived predicate needs ONE round: the
+    # inverse over a one-level hierarchy derives only narrower, which
+    # no body reads, so no empty-delta round is run
+    flat = spark.createDataFrame(
+        [("c1", "broader", "top"), ("c2", "broader", "top")],
+        "subj string, pred string, obj string")
+    inverse = materialize_rules(flat, rules[2:], max_rounds=1)
+    assert {tuple(r) for r in inverse.collect()} == {
+        ("c1", "broader", "top"), ("c2", "broader", "top"),
+        ("top", "narrower", "c1"), ("top", "narrower", "c2")}
     # divergence guard: a rule minting fresh terms forever
     div = [([("?b", "broader", "?new")],
             [("?a", "broader", "?b")],
@@ -472,3 +482,14 @@ def test_materialize_rules_semi_naive_equals_naive(spark):
     assert {r for r in got if r[1] == "pT"} == {
         ("x%d" % i, "pT", "x%d" % j)
         for i in range(34) for j in range(i + 1, 34)}
+    # chained predicates p→q→r→s: each round's delta holds only the
+    # predicate the NEXT rule reads, so a body pattern is live in
+    # exactly one round — skipping the dead ones must drop nothing
+    chained = [([("?a", "q", "?b")], [("?a", "p", "?b")]),
+               ([("?a", "r", "?b")], [("?a", "q", "?b")]),
+               ([("?a", "s", "?c")], [("?a", "r", "?b"),
+                                      ("?b", "p", "?c")])]
+    got = {tuple(r) for r in materialize_rules(t, chained).collect()}
+    assert got == {tuple(r) for r in naive(t, chained).collect()}
+    assert {r for r in got if r[1] == "s"} == {
+        ("x%d" % i, "s", "x%d" % (i + 2)) for i in range(32)}

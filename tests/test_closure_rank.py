@@ -27,9 +27,18 @@ def test_transitive_closure_chain_and_dag(spark):
     assert got == {("a", "b"), ("a", "c"), ("a", "d"),
                    ("b", "c"), ("b", "d"), ("c", "d"),
                    ("x", "c"), ("x", "d"), ("p", "q")}
-    # idempotent: closing a closed set adds nothing
+    # idempotent: closing a closed set adds nothing — and the count
+    # that materializes the edge list seeds the fixpoint test, so a
+    # closed input (here also a one-level hierarchy) needs ONE round
     closed = spark.createDataFrame([(s, d) for s, d in got], ["src", "dst"])
-    assert transitive_closure(closed).count() == len(got)
+    assert transitive_closure(closed, max_rounds=1).count() == len(got)
+    one_level = spark.createDataFrame(
+        [("a", "r"), ("b", "r"), ("c", "s")], ["src", "dst"])
+    assert transitive_closure(one_level, max_rounds=1).count() == 3
+    # a depth-3 chain cannot close in one round: the loop raises rather
+    # than return the partial closure
+    with pytest.raises(RuntimeError, match="did not converge in 1 round"):
+        transitive_closure(edges, max_rounds=1)
 
 
 def test_transitive_closure_deep_chain_log_rounds(spark):
@@ -39,6 +48,19 @@ def test_transitive_closure_deep_chain_log_rounds(spark):
         [(i, i + 1) for i in range(40)], ["src", "dst"])
     out = transitive_closure(edges, max_rounds=8)
     assert out.count() == 40 * 41 // 2
+
+
+def test_connected_components_raises_at_round_budget(spark):
+    """A 64-vertex chain needs several label-propagation rounds; with a
+    budget of one the loop raises instead of returning partial labels,
+    and with the default budget it labels every vertex 0."""
+    from mc2skos_spark.operators.canonicalize import connected_components
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(63)], ["src", "dst"])
+    with pytest.raises(RuntimeError, match="did not converge in 1 round"):
+        connected_components(edges, max_rounds=1)
+    labels = connected_components(edges).collect()
+    assert len(labels) == 64 and {r["comp"] for r in labels} == {0}
 
 
 def test_transitive_closure_random_graph_matches_python(spark):

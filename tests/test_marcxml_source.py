@@ -58,3 +58,23 @@ def test_comma_list_and_guards(spark):
         MarcXmlReader({"path": "/nonexistent/*.xml"})
     with pytest.raises(ValueError, match="path"):
         MarcXmlReader({})
+
+
+def test_exact_paths_keep_glob_metacharacters(spark, tmp_path):
+    """The JSON 'paths' form names files verbatim: a '[' in a file name
+    is not a glob class, so the file is read, not dropped."""
+    import json
+    record = ('<record><controlfield tag="001">r%d</controlfield>'
+              '</record>')
+    f = tmp_path / "vocab[1].xml"
+    f.write_text('<collection xmlns="http://www.loc.gov/MARC21/slim">'
+                 + record % 1 + record % 2 + '</collection>')
+    assert MarcXmlReader({"paths": json.dumps([str(f)])}).paths == [str(f)]
+    rows = read_marcxml(spark, [str(f)]).collect()
+    assert sorted(r["record_id"] for r in rows) == ["vocab[1]#0",
+                                                    "vocab[1]#1"]
+    assert {r["conv_id"] for r in rows} == {"vocab[1]"}
+    # the hand-typed form still globs: '[1]' is a class matching '1'
+    (tmp_path / "vocab1.xml").write_text(record % 3)
+    assert MarcXmlReader({"path": str(tmp_path / "vocab[1].xml")}
+                         ).paths == [str(tmp_path / "vocab1.xml")]

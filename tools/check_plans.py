@@ -74,7 +74,9 @@ ALLOW: dict[str, dict[str, str]] = {
     },
     "dsir_en_weights": {
         "BroadcastNestedLoopJoin":
-            "1-row target/raw total-count attach for the log-ratio",
+            "1-row rmap attach: the bucket→log-ratio map "
+            "(functions/dsir.py, one map row folded from the "
+            "`buckets`-row ratio table) broadcast onto the documents",
     },
     "sketch_distinct_tokens": {
         "BroadcastNestedLoopJoin":
