@@ -31,29 +31,54 @@ if _REPO_ROOT not in sys.path:
     sys.path.insert(0, _REPO_ROOT)
 
 
-#: per-path (splits, rows) parquet-footer cache for _t's widen check
-_SCAN_LAYOUT: dict = {}
+class _TableMeta:
+    """What ``_t`` knows about one table path: the file signature it
+    was learned from, Spark's inferred schema, and the scan layout
+    (``None`` until a widen decision needs it)."""
+
+    __slots__ = ("sig", "schema", "layout")
+
+    def __init__(self, sig: tuple, schema) -> None:
+        self.sig = sig
+        self.schema = schema
+        self.layout: tuple[int, int] | None = None
 
 
-def _scan_layout(path: str) -> tuple[int, int]:
-    """(row-group count, row count) across the file(s) at ``path`` —
-    driver-side footer metadata only, cached per path.  A parquet row
-    group is the atomic unit of scan parallelism: byte-range splits
-    beyond the row-group count produce empty tasks."""
-    if path not in _SCAN_LAYOUT:
-        import glob
+#: path -> _TableMeta; an entry whose signature no longer matches the
+#: files on disk is replaced, so a rewritten table is inferred again
+_TABLE_META: dict[str, _TableMeta] = {}
 
-        import pyarrow.parquet as pq
-        files = ([path] if os.path.isfile(path)
-                 else sorted(glob.glob(os.path.join(path, "*.parquet")))
-                 or sorted(glob.glob(os.path.join(path, "part-*"))))
-        rg = rows = 0
-        for f in files:
-            m = pq.ParquetFile(f).metadata
-            rg += m.num_row_groups
-            rows += m.num_rows
-        _SCAN_LAYOUT[path] = (max(rg, 1), rows)
-    return _SCAN_LAYOUT[path]
+
+def _table_meta(spark: SparkSession, path: str) -> _TableMeta:
+    """Metadata for the table at ``path``, cached per file signature:
+    ``(file, mtime_ns, size)`` of the file, or of each entry of a
+    directory that Spark would read (names starting with ``_`` or
+    ``.`` are hidden from Spark, so they are left out here too).  A
+    missing path raises ``FileNotFoundError`` naming it."""
+    files = ([os.path.join(path, f) for f in sorted(os.listdir(path))
+              if not f.startswith(("_", "."))]
+             if os.path.isdir(path) else [path])
+    sig = tuple((f, st.st_mtime_ns, st.st_size)
+                for f, st in ((f, os.stat(f)) for f in files))
+    meta = _TABLE_META.get(path)
+    if meta is None or meta.sig != sig:
+        meta = _TABLE_META[path] = _TableMeta(
+            sig, spark.read.parquet(path).schema)
+    return meta
+
+
+def _scan_layout(files: list[str]) -> tuple[int, int]:
+    """(row-group count, row count) across ``files`` — driver-side
+    footer metadata only.  A parquet row group is the atomic unit of
+    scan parallelism: byte-range splits beyond the row-group count
+    produce empty tasks."""
+    import pyarrow.parquet as pq
+    rg = rows = 0
+    for f in files:
+        m = pq.ParquetFile(f).metadata
+        rg += m.num_row_groups
+        rows += m.num_rows
+    return max(rg, 1), rows
 
 
 #: tables whose downstream operators are compute-heavy PER ROW
@@ -73,7 +98,11 @@ def _t(spark: SparkSession, sf_dir: str, name: str,
        widen: bool = True) -> DataFrame:
     _ship(spark)
     path = os.path.join(sf_dir, name + ".parquet")
-    df = spark.read.parquet(path)
+    # read with the schema cached per file signature: only the first
+    # read of a table, or of a rewritten one, pays Spark's inference (a
+    # one-task job); later reads launch no job until an action
+    meta = _table_meta(spark, path)
+    df = spark.read.schema(meta.schema).parquet(path)
     if widen and name in _WIDEN_TABLES:
         # unsplittable-input fix (optimization guide §2.5): the driver
         # testdata writes each table as ONE file with ONE row group, so
@@ -85,7 +114,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str,
         # content-defined).  Scale-adaptive, not local-tuned: a
         # production table with healthy row groups skips this
         # (splits >= cores/2), tiny correctness SFs skip it (row
-        # floor), and the decision reads only footer metadata.
+        # floor), and the decision reads only file metadata: a table
+        # with at least cores/2 files has at least that many splits, so
+        # no footer is opened for it.
         # Measured: text_lm5_nll at sf0.1 2.58 s -> 1.55 s.
         #
         # widen=False opts a CONSUMER out: filters and projections do
@@ -103,10 +134,14 @@ def _t(spark: SparkSession, sf_dir: str, name: str,
         # side gains; the heavy-regex/gram consumers (pii 0.51 vs
         # 3.6 s, gopher 0.58 vs 1.11, langid 0.47 vs 1.15, LM family,
         # classifier at 10x) keep it.
-        splits, rows = _scan_layout(path)
         cores = spark.sparkContext.defaultParallelism
-        if splits < max(cores // 2, 2) and rows >= 2000:
-            df = df.repartition(cores)
+        floor = max(cores // 2, 2)
+        if len(meta.sig) < floor:
+            if meta.layout is None:
+                meta.layout = _scan_layout([f for f, _, _ in meta.sig])
+            splits, rows = meta.layout
+            if splits < floor and rows >= 2000:
+                df = df.repartition(cores)
     return df
 
 

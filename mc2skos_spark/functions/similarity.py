@@ -60,8 +60,12 @@ def _dot_prefix(a, b, prefix: int):
 def suffix_norm(vec_col, prefix: int) -> "F.Column":
     """L2 norm of the elements after position ``prefix`` — the
     per-vector half of the Cauchy–Schwarz bound used to skip full dot
-    products for pairs that provably miss a similarity threshold."""
-    return _norm(F.slice(vec_col, int(prefix) + 1, 1 << 30))
+    products for pairs that provably miss a similarity threshold.  A
+    row no longer than ``prefix`` has an empty suffix (``slice``
+    rejects a negative length)."""
+    return _norm(F.slice(vec_col, int(prefix) + 1,
+                         F.greatest(F.size(vec_col) - int(prefix),
+                                    F.lit(0))))
 
 
 def cosine(a, b):

@@ -185,19 +185,33 @@ def triangle_counts(edges: DataFrame, src_col: str = "src",
     the wedge join cannot blow up on hot hubs: a celebrity node with
     10^6 followers has out-degree ~0 after orientation because its
     (degree, id) key is largest — its wedges are generated at its
-    low-degree neighbors instead.  Three shuffles total (degree agg,
-    wedge join, closing join), all equi-joins.
+    low-degree neighbors instead.  All joins are equi-joins.
+
+    The canonical edge set and the oriented edge set are each computed
+    once, behind a lazy ``localCheckpoint``: the degree aggregate and
+    both endpoint joins read the first, the two wedge sides and the
+    closing edge read the second.  Referenced as plain subtrees, every
+    copy would re-scan and re-deduplicate the input, and Spark could
+    not share their exchanges: the optimizer infers a different
+    not-null filter set for each copy, so no two are alike.  Without
+    broadcast joins that leaves eight shuffles: the distinct, the
+    degree aggregate (one exchange serves both endpoint joins), the
+    edge side of each endpoint join, the wedge join (both sides share
+    one exchange on the apex), the two sides of the closing join, and
+    the final count.  At small sizes AQE broadcasts the joins instead.
 
     The per-node counts are orientation-independent (the triangle SET
     is a property of the undirected graph), so the DuckDB oracle can
     use plain id-ordered a<b<c triple joins.
     """
+    # canonical edge set, computed once (see the docstring)
     e = (edges
          .filter(F.col(src_col) != F.col(dst_col))
          .select(F.least(src_col, dst_col).alias("a"),
                  F.greatest(src_col, dst_col).alias("b"))
          .na.drop()
-         .distinct())
+         .distinct()
+         .localCheckpoint(eager=False))
     deg = (e.select(F.col("a").alias("n"))
            .unionAll(e.select(F.col("b").alias("n")))
            .groupBy("n").agg(F.count(F.lit(1)).alias("d")))
@@ -209,10 +223,12 @@ def triangle_counts(edges: DataFrame, src_col: str = "src",
                    .withColumnRenamed("d", "db"), "b"))
     ka = F.struct(F.col("da").alias("d"), F.col("a").alias("n"))
     kb = F.struct(F.col("db").alias("d"), F.col("b").alias("n"))
+    # oriented edge set, computed once for its three consumers
     oriented = keyed.select(
         F.when(ka < kb, F.col("a")).otherwise(F.col("b")).alias("lo"),
         F.when(ka < kb, F.col("b")).otherwise(F.col("a")).alias("hi"),
-        F.when(ka < kb, kb).otherwise(ka).alias("hi_key"))
+        F.when(ka < kb, kb).otherwise(ka).alias("hi_key")
+    ).localCheckpoint(eager=False)
     w1 = oriented.select(F.col("lo").alias("x"), F.col("hi").alias("y"),
                          F.col("hi_key").alias("ky"))
     w2 = oriented.select(F.col("lo").alias("x"), F.col("hi").alias("z"),

@@ -116,3 +116,75 @@ def test_widen_unsplittable_scan(spark, tmp_path):
     df2 = entry_mod._t(spark, str(small), "documents")
     assert df2.rdd.getNumPartitions() == 1
     assert df2.count() == 2
+
+
+def test_widen_many_file_scan_opens_no_footer(spark, tmp_path,
+                                              monkeypatch):
+    """A documents table with at least cores/2 files already has that
+    many scan splits: _t decides against widening from the file count
+    alone and opens no parquet footer, however many rows it holds."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = tmp_path / "documents.parquet"
+    table.mkdir()
+    n_files, per_file = 6, 400
+    for k in range(n_files):
+        ids = list(range(k * per_file, (k + 1) * per_file))
+        pq.write_table(pa.table({
+            "doc_id": ids, "text": ["alpha beta %d" % i for i in ids]}),
+            str(table / ("part-%05d.parquet" % k)))
+    assert n_files >= max(spark.sparkContext.defaultParallelism // 2, 2)
+
+    opened = []
+    real = pq.ParquetFile
+
+    def counting(*args, **kwargs):
+        opened.append(args[0] if args else kwargs)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(pq, "ParquetFile", counting)
+    df = entry_mod._t(spark, str(tmp_path), "documents")
+    assert opened == []
+    assert "RoundRobinPartitioning" not in \
+        df._jdf.queryExecution().executedPlan().toString()
+    assert df.count() == n_files * per_file
+
+
+def test_repeated_read_launches_no_job(spark, tmp_path):
+    """Only the first _t of a table pays Spark's schema-inference job;
+    a second read of the unchanged file passes the cached schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table({"event_id": [1, 2, 3]}),
+                   str(tmp_path / "events.parquet"))
+    entry_mod._t(spark, str(tmp_path), "events")
+    sc = spark.sparkContext
+    group = "test-repeated-read-%d" % os.getpid()
+    sc.setJobGroup(group, "second read of an unchanged table")
+    try:
+        df = entry_mod._t(spark, str(tmp_path), "events")
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == []
+    assert df.columns == ["event_id"]
+
+
+def test_rewritten_table_is_inferred_again(spark, tmp_path):
+    """The schema cache is keyed by file signature, not by path: a file
+    rewritten with an extra column between two reads shows it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(pa.table({"event_id": [1, 2]}), path)
+    assert entry_mod._t(spark, str(tmp_path), "events").columns == \
+        ["event_id"]
+    pq.write_table(pa.table({"event_id": [3, 4], "value": [0.5, 1.5]}),
+                   path)
+    df = entry_mod._t(spark, str(tmp_path), "events")
+    assert df.columns == ["event_id", "value"]
+    assert sorted(tuple(r) for r in df.collect()) == [(3, 0.5), (4, 1.5)]

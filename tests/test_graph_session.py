@@ -158,11 +158,51 @@ def test_sessionize_rejects_nonpositive_gap(spark):
         sessionize(df, gap_seconds=0)
 
 
-def _tri(spark, pairs):
+def _tri_frame(spark, pairs, path=None):
+    """triangle_counts over ``pairs``; with ``path``, over a parquet
+    table of them written there and read back."""
     from mc2skos_spark.operators.graph import triangle_counts
     df = spark.createDataFrame(pairs, "src long, dst long")
+    if path is not None:
+        df.write.parquet(path)
+        df = spark.read.parquet(path)
+    return triangle_counts(df)
+
+
+def _tri(spark, pairs, path=None):
     return {r["node"]: r["n_triangles"]
-            for r in triangle_counts(df).collect()}
+            for r in _tri_frame(spark, pairs, path).collect()}
+
+
+def _brute_triangles(pairs):
+    """Per-node triangle counts of the undirected simple graph under
+    ``pairs``, by enumerating every id-ordered node triple's edges."""
+    und = {(min(a, b), max(a, b)) for a, b in pairs if a != b}
+    nodes = sorted({n for e in und for n in e})
+    out: dict = {}
+    for i, a in enumerate(nodes):
+        for j, b in enumerate(nodes[i + 1:], i + 1):
+            if (a, b) not in und:
+                continue
+            for c in nodes[j + 1:]:
+                if (a, c) in und and (b, c) in und:
+                    for v in (a, b, c):
+                        out[v] = out.get(v, 0) + 1
+    return out
+
+
+def _random_edges(seed, n_nodes=60, n_edges=300):
+    """Seeded random edges with reversed copies, duplicates and
+    self-loops mixed in."""
+    import random
+    rng = random.Random(seed)
+    pairs = [(rng.randrange(n_nodes), rng.randrange(n_nodes))
+             for _ in range(n_edges - 30)]
+    pairs += [(b, a) for a, b in rng.sample(pairs, 10)]
+    pairs += rng.sample(pairs, 10)
+    pairs += [(v, v) for v in rng.sample(range(n_nodes), 10)]
+    assert len(pairs) == n_edges
+    return pairs
 
 
 def test_triangles_k4_complete_graph(spark):
@@ -179,6 +219,25 @@ def test_triangles_canonicalize_directions_dups_loops(spark):
     # one triangle given as mixed directions + duplicates + self-loop
     edges = [(1, 2), (2, 1), (3, 2), (1, 3), (1, 1), (1, 3)]
     assert _tri(spark, edges) == {1: 1, 2: 1, 3: 1}
+
+
+def test_triangles_random_graph_matches_brute_force(spark):
+    pairs = _random_edges(seed=17)
+    want = _brute_triangles(pairs)
+    assert sum(want.values()) > 0
+    assert _tri(spark, pairs) == want
+
+
+def test_triangles_read_parquet_input_once(spark, tmp_path):
+    # the edge set and its orientation are computed once, so the
+    # result's plan holds at most one scan of the input, not one per
+    # reference to the edge set
+    pairs = _random_edges(seed=29)
+    res = _tri_frame(spark, pairs, str(tmp_path / "edges"))
+    plan = res._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") <= 1, plan
+    assert {r["node"]: r["n_triangles"] for r in res.collect()} == \
+        _brute_triangles(pairs)
 
 
 def test_triangles_hub_orientation_bounds_wedges(spark):

@@ -6,7 +6,11 @@ scans its physical plan for the node types that do not survive 100 TB:
 * ``CartesianProduct`` / ``BroadcastNestedLoopJoin`` — all-pairs joins
   (quadratic shuffle or unbounded nested loop);
 * ``BatchEvalPython`` — row-at-a-time Python UDF in the plan (the
-  Arrow-batched ``MapInPandas``/``ArrowEvalPython`` paths are allowed).
+  Arrow-batched ``MapInPandas``/``ArrowEvalPython`` paths are allowed);
+* a re-derived input — more than ``SCAN_MAX`` ``FileScan`` nodes of
+  one table, counted per table root path from the plan tree (plan
+  strings truncate long locations).  A relation that several branches
+  consume belongs behind one checkpoint, not re-scanned per branch.
 
 A tiny allowlist names the DELIBERATE exceptions — 1-row broadcast
 stats build sides where the nested-loop "join" is a constant attach —
@@ -19,7 +23,9 @@ Individual pytests already pin several plans; this tool is the
 registry-wide regression gate.
 
 Usage: ``python tools/check_plans.py [query ...] [--sf-dir DIR]
-[--json OUT]`` (default: all queries at /root/testdata/sf0.001).
+[--json OUT]`` (default: all queries at /root/testdata/sf0.001).  The
+JSON output gives each query's largest per-table scan count as
+``max_scans``.
 """
 
 from __future__ import annotations
@@ -34,6 +40,10 @@ if REPO not in sys.path:
 
 FORBIDDEN = ("CartesianProduct", "BroadcastNestedLoopJoin",
              "BatchEvalPython")
+
+#: most FileScan nodes of one table a plan may hold before the table
+#: counts as re-derived (reported as the pseudo-node "FileScan")
+SCAN_MAX = 4
 
 # query -> {node: why it is deliberately fine}
 ALLOW: dict[str, dict[str, str]] = {
@@ -91,7 +101,8 @@ ALLOW: dict[str, dict[str, str]] = {
 }
 
 #: (query, node) -> max tree occurrences permitted; default 1 for any
-#: allowlisted pair.  Raise ONLY with an inline justification.
+#: allowlisted pair (for "FileScan", the most scans of one table).
+#: Raise ONLY with an inline justification.
 ALLOW_MAX: dict[tuple[str, str], int] = {
     # lm_nll_scores attaches the SAME 1-row (total, v) stats frame
     # twice by design: once building the logp table and once for the
@@ -100,6 +111,31 @@ ALLOW_MAX: dict[tuple[str, str], int] = {
     ("text_lm_nll", "BroadcastNestedLoopJoin"): 2,
     ("text_lm_nll_xlm", "BroadcastNestedLoopJoin"): 2,
 }
+
+
+def file_scans(df) -> dict[str, int]:
+    """FileScan node count per table root path in ``df``'s physical
+    plan, walked as a tree.  An adaptive plan is walked in its initial
+    form (exchanges inserted, none yet reused); subquery plans count
+    too."""
+    counts: dict[str, int] = {}
+    todo = [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            todo.append(node.initialPlan())
+            continue
+        if cls == "InMemoryTableScanExec":
+            continue                      # a cache is materialized once
+        if cls == "FileSourceScanExec":
+            roots = node.relation().location().rootPaths()
+            for i in range(roots.size()):
+                root = roots.apply(i).toString()
+                counts[root] = counts.get(root, 0) + 1
+        for seq in (node.children(), node.innerChildren()):
+            todo.extend(seq.apply(i) for i in range(seq.size()))
+    return counts
 
 
 def main() -> None:
@@ -136,19 +172,24 @@ def main() -> None:
         try:
             df = queries[name](spark, sf_dir)
             plan = df._jdf.queryExecution().executedPlan().toString()
+            scans = file_scans(df)
         except Exception as exc:          # noqa: BLE001 — report, not die
             results[name] = {"ok": False, "error": repr(exc)[:300]}
             failed += 1
             print("%-30s ERROR %s" % (name, repr(exc)[:120]))
             continue
         counts = {n: plan.count(n) for n in FORBIDDEN if n in plan}
+        max_scans = max(scans.values(), default=0)
+        if max_scans > SCAN_MAX:
+            counts["FileScan"] = max_scans
         allow = ALLOW.get(name, {})
         allowed = {n for n, c in counts.items()
                    if n in allow and c <= ALLOW_MAX.get((name, n), 1)}
         bad = ["%s x%d" % (n, c) for n, c in counts.items()
                if n not in allowed]
         results[name] = {"ok": not bad, "forbidden": bad,
-                         "allowed": sorted(allowed)}
+                         "allowed": sorted(allowed),
+                         "max_scans": max_scans}
         if bad:
             failed += 1
             print("%-30s FORBIDDEN %s" % (name, bad))
@@ -161,11 +202,12 @@ def main() -> None:
     if out_json:
         with open(out_json, "w") as fp:
             json.dump({"sf_dir": sf_dir, "forbidden": FORBIDDEN,
-                       "results": results}, fp, indent=1, sort_keys=True)
+                       "scan_max": SCAN_MAX, "results": results},
+                      fp, indent=1, sort_keys=True)
         print("wrote %s" % out_json)
     if failed:
-        raise SystemExit("%d queries with scale-killer plan nodes"
-                         % failed)
+        raise SystemExit("%d queries with scale-killer plan nodes or "
+                         "re-derived inputs" % failed)
     print("ALL PLANS CLEAN (%d queries)" % len(todo))
 
 
