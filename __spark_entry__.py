@@ -95,7 +95,7 @@ _WIDEN_TABLES = ("documents",)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str,
-       widen: bool = True) -> DataFrame:
+       widen: bool = False) -> DataFrame:
     _ship(spark)
     path = os.path.join(sf_dir, name + ".parquet")
     # read with the schema cached per file signature: only the first
@@ -119,21 +119,22 @@ def _t(spark: SparkSession, sf_dir: str, name: str,
         # no footer is opened for it.
         # Measured: text_lm5_nll at sf0.1 2.58 s -> 1.55 s.
         #
-        # widen=False opts a CONSUMER out: filters and projections do
-        # NOT push below a round-robin Exchange, so a query that keeps
-        # only ids/metadata, or immediately filters to a small doc_id
-        # subset, would shuffle the whole text column for nothing (and
-        # re-shuffle it once per re-scan of an uncached subtree —
-        # measured 25-40% regressions on graph_triangles / pagerank /
-        # the incremental-dedup rows before the opt-out).  The widen is
-        # a property of the consumer's per-row text work, not of the
-        # table.  Cheap token_count-only consumers (pack_sequences,
-        # corpus_token_stats, fingerprints, chunking...) also opt out:
+        # widen=True opts a CONSUMER in; the default reads the table
+        # as-is.  Only heavy per-row regex/gram consumers of most rows'
+        # text opt in (pii 0.51 vs 3.6 s, gopher 0.58 vs 1.11, langid
+        # 0.47 vs 1.15, LM family, classifier at 10x).  Filters and
+        # projections do NOT push below a round-robin Exchange, so a
+        # query that keeps only ids/metadata, or immediately filters to
+        # a small doc_id subset, would shuffle the whole text column
+        # for nothing (and re-shuffle it once per re-scan of an
+        # uncached subtree — measured 25-40% regressions on
+        # graph_triangles / pagerank / the incremental-dedup rows).
+        # Cheap token_count-only consumers (pack_sequences,
+        # corpus_token_stats, fingerprints, chunking...) stay out too:
         # interleaved on/off A/Bs at BOTH the 1-split and 10-split
         # layouts show the text exchange costing more than their map
-        # side gains; the heavy-regex/gram consumers (pii 0.51 vs
-        # 3.6 s, gopher 0.58 vs 1.11, langid 0.47 vs 1.15, LM family,
-        # classifier at 10x) keep it.
+        # side gains.  The widen is a property of the consumer's
+        # per-row text work, not of the table.
         cores = spark.sparkContext.defaultParallelism
         floor = max(cores // 2, 2)
         if len(meta.sig) < floor:
@@ -171,7 +172,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
     # weave the sf0.001 documents in as non-payload turns: the scan +
     # payload filter drops them, proving stage 0 tolerates mixed traffic.
-    docs = _t(spark, "/root/testdata/sf0.001", "documents")
+    docs = _t(spark, "/root/testdata/sf0.001", "documents", widen=True)
     filler = docs.select(
         F.concat(F.lit("doc-"), F.col("doc_id").cast("string")).alias("conv_id"),
         F.lit(0).alias("turn_idx"),
@@ -212,7 +213,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # --- P1/P2: leader-style dispatch + skip filters
     def p1_leader_dispatch(spark, sf_dir):
-        docs = _t(spark, sf_dir, "documents", widen=False)
+        docs = _t(spark, sf_dir, "documents")
         kind = (F.when(F.col("lang") == "en", "classification")
                 .when(F.col("lang") == "es", "authority")
                 .otherwise("invalid"))
@@ -221,7 +222,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # --- P3: publish filter (flag + predicate + substring gate)
     def p3_publish_filter(spark, sf_dir):
-        docs = _t(spark, sf_dir, "documents", widen=False)
+        docs = _t(spark, sf_dir, "documents")
         return (docs.filter((F.col("n_chars") > 100) &
                             ~F.col("text").contains("dup"))
                 .select("doc_id", "n_chars"))
@@ -306,7 +307,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # --- U1: triple fan-out (unpivot)
     def u1_triple_fanout(spark, sf_dir):
-        docs = _t(spark, sf_dir, "documents", widen=False)
+        docs = _t(spark, sf_dir, "documents")
         subj = F.concat(F.lit("doc:"), F.col("doc_id").cast("string"))
         branches = [
             docs.select(subj.alias("subj"), F.lit("lang").alias("pred"),
@@ -323,7 +324,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # --- G1: set dedup
     def g1_dedup_set(spark, sf_dir):
-        docs = _t(spark, sf_dir, "documents", widen=False)
+        docs = _t(spark, sf_dir, "documents")
         return docs.select("lang", "source").distinct()
 
     # --- G2: inverse-edge expansion
@@ -506,7 +507,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #     transitive-closure doubling loop and reports the diagonal.
     def tc_cycle_detect(spark, sf_dir):
         from mc2skos_spark.operators.closure import cycle_members
-        docs = _t(spark, sf_dir, "documents", widen=False).filter(
+        docs = _t(spark, sf_dir, "documents").filter(
             (F.col("doc_id") >= 1) & (F.col("doc_id") < 64))
         tree = docs.select(
             F.col("doc_id").cast("int").alias("src"),
@@ -544,7 +545,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def g3_label_conflicts(spark, sf_dir):
         from mc2skos_spark.core.constants import SKOS
         from mc2skos_spark.operators.validate import shared_preflabels
-        docs = _t(spark, sf_dir, "documents", widen=False)
+        docs = _t(spark, sf_dir, "documents")
         subj = F.concat(F.lit("doc:"), F.col("doc_id").cast("string"))
         label = F.concat("lang", F.lit("-"),
                          (F.col("n_chars") % 40).cast("string"))
@@ -574,7 +575,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def el_label_links(spark, sf_dir):
         from mc2skos_spark.core.constants import SKOS
         from mc2skos_spark.operators.linking import label_link_candidates
-        docs = (_t(spark, sf_dir, "documents", widen=False)
+        docs = (_t(spark, sf_dir, "documents")
                 .filter(F.col("doc_id") < 300)
                 .select("doc_id", "text", "source"))
         planted = docs.filter(F.col("doc_id") < 60).select(
@@ -605,7 +606,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #     doubling loop exercises real multi-round convergence.
     def tc_transitive_closure(spark, sf_dir):
         from mc2skos_spark.operators.closure import transitive_closure
-        docs = _t(spark, sf_dir, "documents", widen=False)
+        docs = _t(spark, sf_dir, "documents")
         edges = (docs.filter(F.col("doc_id") >= 1)
                  .select(F.col("doc_id").cast("int").alias("src"),
                          F.shiftright(F.col("doc_id").cast("int"), 1)
@@ -616,7 +617,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #     filter/transform/exists — the datafields-array analog)
     def p4_array_projection(spark, sf_dir):
         from mc2skos_spark.functions.textstats import tokens
-        docs = _t(spark, sf_dir, "documents")
+        docs = _t(spark, sf_dir, "documents", widen=True)
         toks = tokens(F.lower(F.col("text")))
         return docs.select(
             "doc_id",
@@ -627,7 +628,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # --- B: multi-level aggregation (rollup/grouping sets)
     def b1_rollup(spark, sf_dir):
-        docs = _t(spark, sf_dir, "documents", widen=False)
+        docs = _t(spark, sf_dir, "documents")
         return (docs.rollup("lang", "source")
                 .agg(F.count(F.lit(1)).alias("cnt"),
                      F.sum("n_chars").alias("chars"))
@@ -642,7 +643,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #     here) and let partial aggregation collapse the expansion
     #     map-side.
     def b2_cube(spark, sf_dir):
-        docs = _t(spark, sf_dir, "documents", widen=False)
+        docs = _t(spark, sf_dir, "documents")
         return (docs.cube("lang", "source")
                 .agg(F.count(F.lit(1)).alias("cnt"),
                      F.sum("n_chars").alias("chars"))
@@ -652,14 +653,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # --- dedup family
     def dedup_exact(spark, sf_dir):
-        docs = _t(spark, sf_dir, "documents", widen=False)
+        docs = _t(spark, sf_dir, "documents")
         return exact_duplicates(docs, "doc_id", "text")
 
     def dedup_ngram_jaccard(spark, sf_dir):
         # max_shingle_freq ON: the stop-shingle cap is what keeps the
         # shingle self-join linear at scale — the verified path runs it
         # (the oracle mirrors it with a HAVING pre-filter).
-        docs = _t(spark, sf_dir, "documents", widen=False).filter(F.col("doc_id") < 300)
+        docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
         return ngram_jaccard_pairs(docs, "doc_id", "text", n=2,
                                    threshold=0.8, max_shingle_freq=50)
 
@@ -668,13 +669,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # clusters → keeper per cluster (min id); singletons keep
         # themselves.  Oracle: recursive reachability in SQL.
         from mc2skos_spark.functions.dedup import near_dup_keepers
-        docs = _t(spark, sf_dir, "documents", widen=False).filter(F.col("doc_id") < 300)
+        docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
         pairs = ngram_jaccard_pairs(docs, "doc_id", "text", n=2,
                                     threshold=0.8, max_shingle_freq=50)
         return near_dup_keepers(docs, pairs)
 
     def dedup_minhash_lsh(spark, sf_dir):
-        docs = _t(spark, sf_dir, "documents", widen=False).filter(F.col("doc_id") < 500)
+        docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
         # the signature table feeds THREE joins (banded self-join +
         # two similarity lookups): materialize it once (lazy lineage
         # cut), exactly as a staged pipeline would snapshot it
@@ -700,7 +701,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from mc2skos_spark.functions.incremental import (
             create_minhash_index, incremental_minhash_pairs)
         from mc2skos_spark.sinks.icebergish import IcebergishCatalog
-        docs = _t(spark, sf_dir, "documents", widen=False).filter(F.col("doc_id") < 500)
+        docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
         corpus = docs.filter(F.col("doc_id") < 400)
         batch = docs.filter(F.col("doc_id") >= 400)
         wh = tempfile.mkdtemp(prefix="mc2skos_incr_")
@@ -731,7 +732,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from mc2skos_spark.functions.incremental import (
             create_minhash_index, incremental_keeper_assign)
         from mc2skos_spark.sinks.icebergish import IcebergishCatalog
-        docs = _t(spark, sf_dir, "documents", widen=False).filter(F.col("doc_id") < 500)
+        docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
         corpus = docs.filter(F.col("doc_id") < 400)
         batch = docs.filter(F.col("doc_id") >= 400)
         wh = tempfile.mkdtemp(prefix="mc2skos_incrk_")
@@ -845,7 +846,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # hamming≤3 pairs, so plant deterministic one-token-appended
         # copies of the first 40 docs: their signatures differ in only
         # the bits that one extra token's votes flip.
-        docs = (_t(spark, sf_dir, "documents", widen=False)
+        docs = (_t(spark, sf_dir, "documents")
                 .filter(F.col("doc_id") < 200).select("doc_id", "text"))
         planted = docs.filter(F.col("doc_id") < 40).select(
             (F.col("doc_id") + 100000).alias("doc_id"),
@@ -968,7 +969,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #     sha256 over the same bytes).
     def mm_media_features(spark, sf_dir):
         from mc2skos_spark.functions.multimodal import extract_media_features
-        docs = _t(spark, sf_dir, "documents", widen=False)
+        docs = _t(spark, sf_dir, "documents")
         kind = (F.when(F.col("doc_id") % 3 == 0, "image")
                 .when(F.col("doc_id") % 3 == 1, "audio")
                 .otherwise("video"))
@@ -1012,7 +1013,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                                  components=1 + m % 4)
             return mid.map(one)
 
-        docs = _t(spark, sf_dir, "documents", widen=False).filter(F.col("doc_id") < 60)
+        docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 60)
         media = docs.select(
             F.col("doc_id").alias("media_id"),
             F.when(F.col("doc_id") % 3 == 0, "audio").otherwise("image")
@@ -1042,7 +1043,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #     distinct shuffle.
     def sketch_distinct_tokens(spark, sf_dir):
         from mc2skos_spark.functions.textstats import tokens
-        docs = _t(spark, sf_dir, "documents", widen=False)
+        docs = _t(spark, sf_dir, "documents")
         toks = docs.select(
             "source",
             F.explode(tokens(F.lower(F.col("text")))).alias("token"))
@@ -1067,7 +1068,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #     the 100-TB path: mergeable per-partition state, no global
     #     sort.
     def sketch_token_quantiles(spark, sf_dir):
-        docs = _t(spark, sf_dir, "documents", widen=False)
+        docs = _t(spark, sf_dir, "documents")
         per = docs.select(
             "source", token_count(F.col("text")).alias("n_tokens"))
         return (per.groupBy("source")
@@ -1089,22 +1090,22 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # --- text analysis
     def text_tokens(spark, sf_dir):
-        docs = _t(spark, sf_dir, "documents", widen=False)
+        docs = _t(spark, sf_dir, "documents")
         return docs.select("doc_id", token_count(F.col("text")).alias("n_tokens"))
 
     def text_bpe_tokens(spark, sf_dir):
         from mc2skos_spark.functions.textstats import bpe_ish_token_count
-        docs = _t(spark, sf_dir, "documents", widen=False)
+        docs = _t(spark, sf_dir, "documents")
         return docs.select("doc_id",
                            bpe_ish_token_count(F.col("text")).alias("n_bpe"))
 
     def text_quality(spark, sf_dir):
-        docs = _t(spark, sf_dir, "documents", widen=False)
+        docs = _t(spark, sf_dir, "documents")
         return docs.select("doc_id",
                            quality_score(F.col("text")).alias("quality"))
 
     def text_langid(spark, sf_dir):
-        docs = _t(spark, sf_dir, "documents")
+        docs = _t(spark, sf_dir, "documents", widen=True)
         return docs.select("doc_id",
                            langid_guess(F.col("text")).alias("lang_guess"))
 
@@ -1114,7 +1115,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # evaluates the shared struct once across the expanded columns;
         # the per-column form re-lowered + re-split the text per signal
         from mc2skos_spark.functions.textstats import repetition_profile
-        docs = _t(spark, sf_dir, "documents")
+        docs = _t(spark, sf_dir, "documents", widen=True)
         return (docs.select(
             "doc_id", repetition_profile(F.col("text")).alias("g"))
             .select("doc_id", "g.dup_token_frac", "g.top_bigram_frac"))
@@ -1122,7 +1123,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def contamination_ngram(spark, sf_dir):
         from mc2skos_spark.functions.contamination import \
             benchmark_contamination
-        docs = _t(spark, sf_dir, "documents")
+        docs = _t(spark, sf_dir, "documents", widen=True)
         bench = docs.filter(F.col("doc_id") % 50 == 0)
         train = docs.filter(F.col("doc_id") % 50 != 0)
         return benchmark_contamination(train, bench, n=5, min_hits=2)
@@ -1133,7 +1134,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # into every 7th doc; the oracle mirrors the plant and the
         # whole scrub chain in RE2.
         from mc2skos_spark.functions.pii import pii_profile
-        docs = _t(spark, sf_dir, "documents")
+        docs = _t(spark, sf_dir, "documents", widen=True)
         pii = F.concat(
             F.col("text"), F.lit(" contact user"),
             F.col("doc_id").cast("string"),
@@ -1152,7 +1153,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # by a pure hash of the row id — reproducible across re-runs,
         # resumes and repartitions, and exactly mirrorable in SQL
         from mc2skos_spark.functions.sampling import stratified_sample
-        docs = _t(spark, sf_dir, "documents", widen=False)
+        docs = _t(spark, sf_dir, "documents")
         return stratified_sample(docs, "lang",
                                  {"en": 0.5, "es": 0.25},
                                  default_rate=0.05) \
@@ -1167,7 +1168,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # sample_stratified, so the oracle verifies the EXACT rows.
         from mc2skos_spark.functions.sampling import \
             mixture_weighted_sample
-        docs = _t(spark, sf_dir, "documents", widen=False)
+        docs = _t(spark, sf_dir, "documents")
         toks = docs.select(
             "doc_id", "lang", token_count(F.col("text")).alias("n_tokens"))
         return (mixture_weighted_sample(toks, "lang", budget_frac=0.5)
@@ -1178,7 +1179,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # no URLs, so the query plants deterministic ones in every 5th
         # doc (20 rotating site domains + one shared CDN domain).
         from mc2skos_spark.functions.urls import domain_doc_counts
-        docs = _t(spark, sf_dir, "documents", widen=False)
+        docs = _t(spark, sf_dir, "documents")
         seeded = docs.select(
             "doc_id",
             F.when(F.col("doc_id") % 5 == 0,
@@ -1197,7 +1198,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # The multi-round merge trainer is pytest-verified against a
         # pure-Python reference (tests/test_functions.py).
         from mc2skos_spark.functions.bpe import bpe_pair_stats as stats
-        docs = _t(spark, sf_dir, "documents", widen=False)
+        docs = _t(spark, sf_dir, "documents")
         return stats(docs, top_k=20)
 
     def pack_sequences(spark, sf_dir):
@@ -1206,7 +1207,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # (512-token sequences); never a single-partition window
         from mc2skos_spark.functions.packing import \
             pack_sequences as pack
-        docs = _t(spark, sf_dir, "documents", widen=False)
+        docs = _t(spark, sf_dir, "documents")
         with_tokens = docs.select(
             "doc_id", token_count(F.col("text")).alias("n_tokens"))
         return (pack(with_tokens, capacity=512)
@@ -1217,7 +1218,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # (overlapping context windows for long documents) — a pure
         # projection + explode, zero shuffle; token array bound once
         from mc2skos_spark.functions.packing import chunk_documents
-        docs = _t(spark, sf_dir, "documents", widen=False)
+        docs = _t(spark, sf_dir, "documents")
         return chunk_documents(docs, max_len=64, stride=48)
 
     def corpus_token_stats(spark, sf_dir):
@@ -1226,7 +1227,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # percentile aggregate family (exact F.percentile, not the
         # sketch-based approx, so DuckDB's quantile_cont matches
         # bit-for-bit after floor truncation)
-        docs = _t(spark, sf_dir, "documents", widen=False)
+        docs = _t(spark, sf_dir, "documents")
         toks = docs.select("lang",
                            token_count(F.col("text")).alias("n_tokens"))
         def fl(c):
@@ -1249,7 +1250,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             pack_sequences as pack
         from mc2skos_spark.functions.sampling import stratified_sample
         from mc2skos_spark.functions.textstats import profile_and_gate
-        docs = _t(spark, sf_dir, "documents")
+        docs = _t(spark, sf_dir, "documents", widen=True)
         kept = profile_and_gate(docs, min_quality=0.1,
                                 max_top_bigram=0.5)
         # kept feeds BOTH the digest aggregate and the keeper join —
@@ -1274,7 +1275,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # TakeOrdered top-k; per-term contributions integerized before
         # the group-sum so the score is summation-order-independent
         from mc2skos_spark.functions.retrieval import bm25_topk
-        docs = _t(spark, sf_dir, "documents", widen=False)
+        docs = _t(spark, sf_dir, "documents")
         return bm25_topk(docs, ["spark", "join", "window", "stream"],
                          k=10)
 
@@ -1285,17 +1286,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the oracle keys on the window TEXT, cross-checking the
         # hash-key shortcut
         from mc2skos_spark.functions.dedup import repeated_substring_spans
-        docs = _t(spark, sf_dir, "documents")
+        docs = _t(spark, sf_dir, "documents", widen=True)
         return repeated_substring_spans(docs, window=8, min_docs=2)
 
     def text_fingerprint(spark, sf_dir):
-        docs = _t(spark, sf_dir, "documents", widen=False)
+        docs = _t(spark, sf_dir, "documents")
         return docs.select("doc_id",
                            fingerprint(F.col("text")).alias("fp"))
 
     def text_rolling_fingerprint(spark, sf_dir):
         from mc2skos_spark.functions.textstats import rolling_fingerprint
-        docs = _t(spark, sf_dir, "documents", widen=False)
+        docs = _t(spark, sf_dir, "documents")
         return docs.select("doc_id",
                            rolling_fingerprint(F.col("text")).alias("rfp"))
 
@@ -1307,7 +1308,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #     operators/graph.py for the integer-determinism argument.
     def graph_pagerank(spark, sf_dir):
         from mc2skos_spark.operators.graph import pagerank
-        docs = _t(spark, sf_dir, "documents", widen=False).filter(F.col("doc_id") >= 2)
+        docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") >= 2)
         half = docs.select(
             F.col("doc_id").cast("long").alias("src"),
             F.shiftright(F.col("doc_id").cast("long"), 1).alias("dst"))
@@ -1323,7 +1324,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #     unrolls the same redistributed iteration.
     def graph_pagerank_dangling(spark, sf_dir):
         from mc2skos_spark.operators.graph import pagerank
-        docs = _t(spark, sf_dir, "documents", widen=False).filter(F.col("doc_id") >= 2)
+        docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") >= 2)
         half = docs.select(
             F.col("doc_id").cast("long").alias("src"),
             F.shiftright(F.col("doc_id").cast("long"), 1).alias("dst"))
@@ -1369,7 +1370,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from mc2skos_spark.functions.bpe import encode_token_counts
         merges = [("e", "r"), ("i", "n"), ("o", "w"), ("s", "t"),
                   ("t", "o"), ("a", "t"), ("in", "g"), ("er", "s")]
-        docs = _t(spark, sf_dir, "documents")
+        docs = _t(spark, sf_dir, "documents", widen=True)
         return encode_token_counts(docs, merges)
 
     # --- CCNet-style LM quality scores: per-doc negative log-
@@ -1381,7 +1382,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #     discipline).
     def text_lm_nll(spark, sf_dir):
         from mc2skos_spark.functions.lm import lm_nll_scores
-        docs = _t(spark, sf_dir, "documents")
+        docs = _t(spark, sf_dir, "documents", widen=True)
         return lm_nll_scores(docs)
 
     # --- EXTERNAL-LM scoring (the production CCNet shape): the LM is
@@ -1391,7 +1392,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #     cross-corpus path itself under the driver hash gate.
     def text_lm_nll_xlm(spark, sf_dir):
         from mc2skos_spark.functions.lm import lm_nll_scores, unigram_lm
-        docs = _t(spark, sf_dir, "documents")
+        docs = _t(spark, sf_dir, "documents", widen=True)
         lm = unigram_lm(docs.filter(F.col("lang") == "en"))
         return lm_nll_scores(docs, lm=lm)
 
@@ -1403,7 +1404,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #     in both engines, logps quantized and summed as longs.
     def text_lm2_nll(spark, sf_dir):
         from mc2skos_spark.functions.lm import bigram_nll_scores
-        docs = _t(spark, sf_dir, "documents")
+        docs = _t(spark, sf_dir, "documents", widen=True)
         return bigram_nll_scores(docs)
 
     # --- trigram member of the same family (the induction step toward
@@ -1413,7 +1414,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #     the same literal-expression-parity bet with the oracle.
     def text_lm3_nll(spark, sf_dir):
         from mc2skos_spark.functions.lm import trigram_nll_scores
-        docs = _t(spark, sf_dir, "documents")
+        docs = _t(spark, sf_dir, "documents", widen=True)
         return trigram_nll_scores(docs)
 
     # --- order-5 member from the SAME parameterized builder — CCNet's
@@ -1428,7 +1429,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #     broadcasts the small sides).
     def text_lm5_nll(spark, sf_dir):
         from mc2skos_spark.functions.lm import ngram_nll_scores
-        docs = _t(spark, sf_dir, "documents")
+        docs = _t(spark, sf_dir, "documents", widen=True)
         out = ngram_nll_scores(docs, 5)
         return out.select(
             "doc_id",
@@ -1442,7 +1443,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #     engine (functions/lm.py:perplexity_buckets).
     def text_ccnet_buckets(spark, sf_dir):
         from mc2skos_spark.functions.lm import perplexity_buckets
-        docs = _t(spark, sf_dir, "documents")
+        docs = _t(spark, sf_dir, "documents", widen=True)
         return perplexity_buckets(docs, order=2)
 
     # --- MassiveText repeated-passage removal: 8-token paragraphs,
@@ -1451,7 +1452,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #     so the keeper election is exercised, not vacuous.
     def text_paragraph_dedup(spark, sf_dir):
         from mc2skos_spark.functions.dedup import paragraph_dedup
-        docs = _t(spark, sf_dir, "documents", widen=False).select("doc_id", "text")
+        docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
         planted = (docs.filter(F.col("doc_id") < 20)
                    .select((F.col("doc_id") + 100000).alias("doc_id"),
                            "text"))
@@ -1692,7 +1693,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         import shutil
         import tempfile
         from mc2skos_spark.sinks.icebergish import IcebergishCatalog
-        docs = _t(spark, sf_dir, "documents", widen=False).select("doc_id", "text")
+        docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
         wh = tempfile.mkdtemp(prefix="mc2skos_tt_")
         try:
             cat = IcebergishCatalog(wh, spark)
@@ -1736,7 +1737,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         import shutil
         import tempfile
         from mc2skos_spark.sinks.icebergish import IcebergishCatalog
-        docs = _t(spark, sf_dir, "documents", widen=False).select(
+        docs = _t(spark, sf_dir, "documents").select(
             "doc_id", "lang", "n_chars")
         wh = tempfile.mkdtemp(prefix="mc2skos_zm_")
         try:
@@ -1768,7 +1769,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def text_gopher_gate(spark, sf_dir):
         from mc2skos_spark.functions.textstats import (
             gopher_quality_flags)
-        docs = _t(spark, sf_dir, "documents")
+        docs = _t(spark, sf_dir, "documents", widen=True)
         # struct-then-star, NOT inline: whole-stage codegen's
         # subexpression elimination already evaluates the shared
         # rule subtrees once across the expanded columns (measured
@@ -1788,7 +1789,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #     the 256-row ratio table broadcasts back.
     def dsir_en_weights(spark, sf_dir):
         from mc2skos_spark.functions.dsir import dsir_logweights
-        docs = _t(spark, sf_dir, "documents")
+        docs = _t(spark, sf_dir, "documents", widen=True)
         return dsir_logweights(docs, F.col("lang") == "en")
 
     # --- fastText-style quality-classifier gate: model scoring as a
@@ -1801,7 +1802,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #     (pytest-verified train → quantize → relational-score loop).
     def quality_classifier_scores(spark, sf_dir):
         from mc2skos_spark.functions.classifier import linear_text_scores
-        docs = _t(spark, sf_dir, "documents")
+        docs = _t(spark, sf_dir, "documents", widen=True)
         weights = {b: (b % 17) - 8 for b in range(256)}
         return linear_text_scores(docs, weights, bias_q=3)
 
@@ -1812,7 +1813,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #     the skew-safe order at scale.  Semantically == the
     #     conditional-count aggregate the oracle spells out by hand.
     def pivot_lang_matrix(spark, sf_dir):
-        docs = _t(spark, sf_dir, "documents", widen=False)
+        docs = _t(spark, sf_dir, "documents")
         langs = ["de", "en", "es", "fr", "zh"]
         wide = (docs.groupBy("source")
                 .pivot("lang", langs)
@@ -1825,7 +1826,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # --- unpivot (melt): wide → long without any shuffle at all —
     #     a per-row Expand, partition-preserving, the inverse of pivot.
     def unpivot_doc_metrics(spark, sf_dir):
-        docs = _t(spark, sf_dir, "documents", widen=False)
+        docs = _t(spark, sf_dir, "documents")
         wide = docs.select(
             "doc_id",
             F.col("n_chars").cast("long").alias("n_chars"),
@@ -1842,7 +1843,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #     orientation-independent, which is exactly what this verifies.
     def graph_triangles(spark, sf_dir):
         from mc2skos_spark.operators.graph import triangle_counts
-        docs = _t(spark, sf_dir, "documents", widen=False).filter(F.col("doc_id") >= 2)
+        docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") >= 2)
         half = docs.select(
             F.col("doc_id").cast("long").alias("src"),
             F.expr("cast(doc_id as long) div 2").alias("dst"))

@@ -7,9 +7,11 @@ property paths, OPTIONAL/UNION/EXISTS/NOT EXISTS/MINUS/VALUES,
 FILTER/BIND, aggregates/HAVING, DISTINCT/ORDER/LIMIT) and prints the
 bindings as NDJSON or writes them to parquet.
 
-Constant-predicate patterns partition-prune the pred_key layout
-(directory-level: only that predicate's files are read); everything
-else is the documented join/aggregate compilation.
+Patterns compile to the documented join/aggregate plan over
+``(subj, pred, obj)``.  The query keeps no ``pred_key`` column, so a
+constant predicate filters ``pred`` and every file of the table is
+read; only an explicit ``pred_key`` filter on the published table
+prunes at the directory level.
 
 Query spec (JSON)::
 

@@ -185,26 +185,37 @@ def incremental_minhash_pairs(catalog: IcebergishCatalog, name: str,
 
 # ----------------------------------------------------- keeper decision
 
-def resolve_remap(remap: DataFrame, max_rounds: int = 20) -> DataFrame:
+def resolve_remap(remap: DataFrame) -> DataFrame:
     """Follow keeper-remap chains to their final target: ``(old, new)``
     rows where a later batch may have remapped ``new`` again →
     ``(old, final)``.  Pointer jumping over the (tiny — one row per
     historical cluster merge) remap table: O(log chain length) rounds,
-    each one self-join."""
+    each one self-join.
+
+    Same loop shape as the graph loops: each round's table is a lazy
+    checkpoint carrying a ``chg`` flag, and the count of changed rows
+    is the round's one action — it materializes the checkpoint and
+    answers convergence.  A remap cycle never converges (every round
+    flags a hop), so the loop raises ``RuntimeError`` after 20 rounds
+    (chains up to 2^20 links resolve) instead of returning a partial
+    resolution."""
+    rounds = 20
     resolved = remap.select("old", "new").localCheckpoint(eager=False)
-    for _ in range(max_rounds):
+    for _ in range(rounds):
         nxt = (resolved.alias("a")
                .join(resolved.select(F.col("old").alias("new"),
                                      F.col("new").alias("hop"))
                      .alias("b"), "new", "left")
                .select("old", F.coalesce("hop", "new").alias("new"),
                        F.col("hop").isNotNull().alias("chg"))
-               .localCheckpoint())
-        changed = nxt.filter("chg").limit(1).count()
+               .localCheckpoint(eager=False))
+        changed = nxt.filter("chg").count()
         resolved = nxt.select("old", "new")
         if changed == 0:
-            break
-    return resolved
+            return resolved
+    raise RuntimeError(
+        "keeper remap did not converge in %d rounds (a remap cycle?)"
+        % rounds)
 
 
 def current_keepers(catalog: IcebergishCatalog, name: str) -> DataFrame:

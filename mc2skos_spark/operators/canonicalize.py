@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..core import constants as C
+from .closure import loop_width
 
 IDENTIFIER_PRED = C.DCTERMS + "identifier"
 SAMEAS_PREDS = (C.OWL + "sameAs", C.SKOS + "exactMatch")
@@ -88,8 +89,8 @@ def candidate_sameas_edges(triples: DataFrame,
     return edges
 
 
-def connected_components(edges: DataFrame, max_rounds: int = 20,
-                         cc_partitions: int | None = None) -> DataFrame:
+def connected_components(edges: DataFrame,
+                         max_rounds: int = 20) -> DataFrame:
     """(src, dst) edges → (vertex, component) labels, component = min id.
 
     Min-label propagation with pointer compression over an undirected
@@ -102,20 +103,15 @@ def connected_components(edges: DataFrame, max_rounds: int = 20,
     The candidate-edge set is orders of magnitude smaller than the
     triple table (only URIs sharing an identifier), so the loop's BIG
     exchange (the per-round propagate join over the edge list) runs at
-    its own explicit width (``cc_partitions``): the edge list is
-    ``repartition(cc_partitions, dst)``-ed — materialized
+    ``closure.loop_width`` of the materialized edge count: the edge
+    list is ``repartition(width, dst)``-ed — materialized
     pre-partitioned when it is big enough to matter, re-keyed lazily
     from the checkpoint inside each round's job when it is small — and
     each round the (small) label table is repartitioned to the
     matching (key, width), so the join plans with no further
-    exchange.  The session's
-    ``spark.sql.shuffle.partitions`` is never touched — a session
-    shared by concurrent query threads keeps its own width mid-loop
-    (the loop's aggregate exchanges stay at session width, where AQE
-    coalesces them to the data size and map-side partial combine still
-    applies).  The default width scales with the materialized edge
-    count (~1M edges per partition, floor 8), so a 100× bigger edge
-    list gets proportionally more loop parallelism.
+    exchange.  The loop's aggregate exchanges stay at session width,
+    where AQE coalesces them to the data size and map-side partial
+    combine still applies.
     """
     # Materialize the symmetrized edge list ONCE — it is reused every
     # round and its upstream (the identifier self-join over the full
@@ -132,21 +128,19 @@ def connected_components(edges: DataFrame, max_rounds: int = 20,
         # type whatever the edge ids are (string URIs or long doc ids).
         return edges.select(F.col("src").alias("vertex"),
                             F.col("src").alias("comp")).limit(0)
-    if cc_partitions is None:
-        cc_partitions = max(8, n // 1_000_000)
+    width = loop_width(n)
     # re-key by the propagate-join key at the loop width.  Big edge
     # lists are materialized pre-partitioned once so every round's join
     # reads them exchange-free; small ones stay lazy — re-keying a few
     # MB from the checkpoint inside each round's job is cheaper than a
     # second eager materialization.
-    both = both.repartition(cc_partitions, "dst")
+    both = both.repartition(width, "dst")
     if n > 10_000_000:
         both = both.localCheckpoint()
-    return _cc_loop(both, max_rounds, cc_partitions)
+    return _cc_loop(both, max_rounds, width)
 
 
-def _cc_loop(both: DataFrame, max_rounds: int,
-             cc_partitions: int) -> DataFrame:
+def _cc_loop(both: DataFrame, max_rounds: int, width: int) -> DataFrame:
     # `both` arrives (at least lazily) partitioned by dst at the loop
     # width; the label side of each round's join is repartitioned to
     # match.  label(v) = min(v, min neighbor) to start — the init is
@@ -162,7 +156,7 @@ def _cc_loop(both: DataFrame, max_rounds: int,
     for _ in range(max_rounds):
         # propagate: candidate label for v = min over neighbors' labels
         cand = (both.join(labels.withColumnRenamed("vertex", "dst")
-                          .repartition(cc_partitions, "dst"), "dst")
+                          .repartition(width, "dst"), "dst")
                 .groupBy("src").agg(F.min("comp").alias("ncomp"))
                 .withColumnRenamed("src", "vertex"))
         newc = F.least("comp", F.coalesce("ncomp", "comp"))
@@ -202,12 +196,12 @@ def _cc_loop(both: DataFrame, max_rounds: int,
 
 def mapping_from_edges(edges: DataFrame) -> DataFrame:
     """(src, dst) identity edges → (uri, canonical) for every URI in a
-    non-trivial component (canonical = min URI of the component)."""
-    labels = connected_components(edges)
-    canon = (labels.groupBy("comp").agg(F.min("vertex").alias("canonical")))
-    return (labels.join(canon, "comp")
-            .select(F.col("vertex").alias("uri"), "canonical")
-            .filter(F.col("uri") != F.col("canonical")))
+    non-trivial component (canonical = min URI of the component, which
+    is the ``comp`` label ``connected_components`` already returns)."""
+    return (connected_components(edges)
+            .filter(F.col("vertex") != F.col("comp"))
+            .select(F.col("vertex").alias("uri"),
+                    F.col("comp").alias("canonical")))
 
 
 def canonical_mapping(triples: DataFrame,

@@ -24,20 +24,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def transitive_closure(edges: DataFrame, max_rounds: int = 20,
-                       loop_partitions: int | None = None) -> DataFrame:
+def loop_width(rows: int) -> int:
+    """Partition count of an iterative loop's join exchange: ~1M rows
+    per partition, floor 8.  Every graph loop (closure, connected
+    components, PageRank) sizes its joins with this from a count it
+    already paid, and applies it with ``repartition(width, key)`` on
+    the join inputs, so the session's ``spark.sql.shuffle.partitions``
+    is never read-modified."""
+    return max(8, rows // 1_000_000)
+
+
+def transitive_closure(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
     """(src, dst) edge list → all (src, dst) pairs connected by a
     directed path of ≥1 edges.  Cycles are safe (a node never pairs
     with itself unless the input contains a genuine cycle).
 
-    Like the union-find loop, the per-round self-join runs at its own
-    explicit width scaled to the materialized path count (~1M rows/
-    partition, floor 8, re-derived every round from the count the
-    previous round — or, for round 1, the deduplicated edge list —
-    already paid): both join inputs are ``repartition(width,
+    The per-round self-join runs at ``loop_width`` of the path count
+    the previous round — or, for round 1, the deduplicated edge list —
+    already paid: both join inputs are ``repartition(width,
     join_key)``-ed, which REPLACES the exchange the join would have
-    planned anyway — the session's ``spark.sql.shuffle.partitions`` is
-    never read-modified, so concurrent queries on a shared session keep
+    planned anyway, so concurrent queries on a shared session keep
     their own width.  The grow-step ``distinct`` stays at session width
     (AQE coalesces; map-side partial combine applies).
 
@@ -54,7 +60,7 @@ def transitive_closure(edges: DataFrame, max_rounds: int = 20,
              .localCheckpoint(eager=False))
     n = paths.count()
     for _ in range(max_rounds):
-        width = loop_partitions or max(8, n // 1_000_000)
+        width = loop_width(n)
         hops = (paths.repartition(width, "dst").alias("a")
                 .join(paths.repartition(width, "src").alias("b"),
                       F.col("a.dst") == F.col("b.src"))
@@ -70,8 +76,7 @@ def transitive_closure(edges: DataFrame, max_rounds: int = 20,
         "transitive closure did not converge in %d rounds" % max_rounds)
 
 
-def cycle_members(edges: DataFrame, max_rounds: int = 20,
-                  loop_partitions: int | None = None) -> DataFrame:
+def cycle_members(edges: DataFrame) -> DataFrame:
     """Vertices that lie on a directed cycle: ``(vertex)``.
 
     A vertex is on a cycle iff it reaches itself through ≥1 edge, i.e.
@@ -82,7 +87,7 @@ def cycle_members(edges: DataFrame, max_rounds: int = 20,
     skosify's hierarchy checks reject ``skos:broader`` cycles); here it
     feeds the warning side-channel instead of a hard failure.
     """
-    closure = transitive_closure(edges, max_rounds, loop_partitions)
+    closure = transitive_closure(edges)
     return (closure.filter(F.col("src") == F.col("dst"))
             .select(F.col("src").alias("vertex")))
 

@@ -5,7 +5,10 @@ components in :mod:`operators.canonicalize`, transitive closure /
 cycle detection in :mod:`operators.closure`) with the weighted-
 propagation shape: per-round JOIN (ranks onto out-edges) + AGGREGATE
 (sum of contributions per destination), the canonical bulk-iterative
-workload every large-scale graph engine is measured on.
+workload every large-scale graph engine is measured on.  Its loop
+takes the family's one width rule (``closure.loop_width``) and one
+lazy checkpoint per round.  Both operators read an ``(src, dst)``
+edge list.
 
 Determinism across engines: ranks are 10^12-scaled INTEGERS end to
 end.  Every per-edge contribution is an exact integer division
@@ -30,31 +33,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .closure import loop_width
+
 SCALE = 10**12
-
-
-def prepare_edges(edges: DataFrame, src_col: str = "src",
-                  dst_col: str = "dst") -> DataFrame:
-    """Degree-annotate an edge list once: ``(src, dst, od)``.
-
-    The production path at 100 TB: write this table bucketed by
-    ``src`` (``df.write.bucketBy(n, "src").sortBy("src")``, same
-    pattern as :mod:`mc2skos_spark.sinks.bucketed`), then run
-    ``pagerank(spark.table(name), edges_prepared=True)`` — the
-    bucketed scan satisfies the per-round join's distribution
-    requirement, so only the (node, rank) pairs shuffle each round.
-    """
-    e = edges.select(F.col(src_col).alias("src"),
-                     F.col(dst_col).alias("dst"))
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
-    return e.join(deg, "src")
 
 
 def pagerank(edges: DataFrame, iterations: int = 3,
              damping_pct: int = 85,
-             src_col: str = "src", dst_col: str = "dst",
-             loop_partitions: int | None = None,
-             edges_prepared: bool = False,
              redistribute_dangling: bool = False) -> DataFrame:
     """Fixed-point PageRank over an ``(src, dst)`` edge list.
 
@@ -62,33 +47,20 @@ def pagerank(edges: DataFrame, iterations: int = 3,
     exact 10^12-scaled integer, ``rank`` the display double.
 
     Loop discipline (same as the closure/union-find loops): each round
-    localCheckpoints the new rank table to truncate lineage; the
-    rank-onto-edges join runs at an explicit width derived from the
-    node count (``repartition(width, key)`` on both inputs — the
-    session's ``spark.sql.shuffle.partitions`` is never touched).  The
-    static state (out-degree-annotated edges) is COMPUTED once before
-    the loop; note that a localCheckpoint scan reports
-    ``UnknownPartitioning``, so Catalyst still re-exchanges it each
-    round.  At production scale, write the prepared edge table bucketed
-    by ``src`` (``sinks/bucketed.py``) and pass it in — the bucketed
-    scan satisfies the join's distribution requirement and the per-
-    round shuffle drops to the rank table alone.
+    lazily localCheckpoints the new rank table to truncate lineage; the
+    rank-onto-edges join runs at ``closure.loop_width`` of the node
+    count (``repartition(width, key)`` on both inputs — the session's
+    ``spark.sql.shuffle.partitions`` is never touched).  The static
+    state (out-degree-annotated edges) is computed once, under round
+    1's job; a localCheckpoint scan reports ``UnknownPartitioning``, so
+    Catalyst still re-exchanges it each round.
     """
     if iterations < 1:
         raise ValueError("pagerank: need iterations >= 1")
     if not 0 < damping_pct < 100:
         raise ValueError("pagerank: damping_pct must be in (0, 100)")
 
-    if edges_prepared:
-        # e.g. a bucketed-by-src catalog table from prepare_edges():
-        # use it AS-IS so the scan's bucketing satisfies the join's
-        # distribution requirement (no repartition, no checkpoint —
-        # either would erase the bucketing metadata)
-        e_deg = edges.select("src", "dst", "od")
-        e = e_deg.select("src", "dst")
-    else:
-        e = edges.select(F.col(src_col).alias("src"),
-                         F.col(dst_col).alias("dst"))
+    e = edges.select("src", "dst")
     nodes = (e.select(F.col("src").alias("node"))
              .unionByName(e.select(F.col("dst").alias("node")))
              .distinct()
@@ -96,16 +68,16 @@ def pagerank(edges: DataFrame, iterations: int = 3,
     # N is semantically required (the teleport term) — one
     # metadata-scale count, also reused to size the loop width
     n_nodes = nodes.count()
-    width = loop_partitions or max(8, n_nodes // 1_000_000)
+    width = loop_width(n_nodes)
 
-    if not edges_prepared:
-        # static per-round join input: out-degree stapled onto each
-        # edge once, so the loop joins ranks against ONE prepared table
-        # lazy: materializes under round 1's job, later rounds read
-        # the pinned blocks — no dedicated prep job
-        e_deg = (prepare_edges(e)
-                 .repartition(width, "src")
-                 .localCheckpoint(eager=False))
+    # static per-round join input: out-degree stapled onto each edge
+    # once, so the loop joins ranks against ONE prepared table.  Lazy:
+    # materializes under round 1's job, later rounds read the pinned
+    # blocks — no dedicated prep job
+    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
+    e_deg = (e.join(deg, "src")
+             .repartition(width, "src")
+             .localCheckpoint(eager=False))
 
     # exact integer terms (Spark `div` == DuckDB `//` on BIGINT)
     base_val = (SCALE * (100 - damping_pct)) // (100 * n_nodes)
@@ -129,13 +101,8 @@ def pagerank(edges: DataFrame, iterations: int = 3,
     ranks = nodes.select("node", F.lit(init_val).cast("long").alias("r")) \
         .localCheckpoint(eager=False)
     for _ in range(iterations):
-        # prepared/bucketed edges: let Catalyst shuffle the rank side
-        # to the bucket count (an explicit width would mismatch the
-        # bucketing and force a second exchange)
-        rank_side = (ranks if edges_prepared
-                     else ranks.repartition(width, "node"))
         contrib = (e_deg
-                   .join(rank_side,
+                   .join(ranks.repartition(width, "node"),
                          F.col("src") == F.col("node"))
                    .select(F.col("dst"),
                            F.expr(f"(r * {damping_pct}) div (100 * od)")
@@ -165,8 +132,7 @@ def pagerank(edges: DataFrame, iterations: int = 3,
                         (F.col("r") / float(SCALE)).alias("rank"))
 
 
-def triangle_counts(edges: DataFrame, src_col: str = "src",
-                    dst_col: str = "dst") -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-node triangle participation counts (undirected).
 
     Input edges may be directed, repeated, or self-looped; they are
@@ -206,9 +172,9 @@ def triangle_counts(edges: DataFrame, src_col: str = "src",
     """
     # canonical edge set, computed once (see the docstring)
     e = (edges
-         .filter(F.col(src_col) != F.col(dst_col))
-         .select(F.least(src_col, dst_col).alias("a"),
-                 F.greatest(src_col, dst_col).alias("b"))
+         .filter(F.col("src") != F.col("dst"))
+         .select(F.least("src", "dst").alias("a"),
+                 F.greatest("src", "dst").alias("b"))
          .na.drop()
          .distinct()
          .localCheckpoint(eager=False))

@@ -140,9 +140,11 @@ class KgPipeline:
                         lambda: validation_warnings(triples),
                         lineage_key="record_id")
 
-        # S6: the published triple store, partitioned by predicate key so
-        # predicate-restricted reads prune at the directory level
-        # (PartitionFilters in the scan — test_scale_paths).
+        # S6: the published triple store, partitioned by predicate key:
+        # a read that filters on pred_key prunes at the directory level
+        # (PartitionFilters in the scan — test_scale_paths).  The frame
+        # returned here drops pred_key, so a filter on pred alone reads
+        # every file.
         published = self._stage(
             "triples", lambda: with_pred_key(triples),
             partition_by=["pred_key"], lineage_key="subj")

@@ -158,7 +158,3 @@ def triples_to_jskos(triples: DataFrame,
 
     return grouped.mapInPandas(
         fmt, schema=T.StructType([T.StructField("line", T.StringType())]))
-
-
-def write_jskos(triples: DataFrame, path: str) -> None:
-    triples_to_jskos(triples).write.mode("overwrite").text(path)

@@ -193,16 +193,3 @@ def _blocked_records(blocks: DataFrame, ordered_concat) -> DataFrame:
             .select("conv_id",
                     (F.col("offset") + F.col("local_idx")).alias("pos"),
                     "record_xml"))
-
-
-def roundtrip_check(transcripts: DataFrame, records: DataFrame,
-                    payload_tool: str = "marc_export") -> dict:
-    """Evidence for the per-turn-equality invariant: every payload byte
-    must land in exactly one reassembled record.  ``payload_tool`` must
-    match the value the records were reassembled with."""
-    payload_chars = (transcripts.filter(F.col("tool") == payload_tool)
-                     .agg(F.sum(F.length("text"))).collect()[0][0]) or 0
-    record_chars = (records.agg(F.sum(F.length("record_xml")))
-                    .collect()[0][0]) or 0
-    return {"payload_chars": int(payload_chars),
-            "record_chars": int(record_chars)}

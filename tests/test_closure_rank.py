@@ -89,6 +89,36 @@ def test_transitive_closure_random_graph_matches_python(spark):
     assert got == expected
 
 
+def test_mapping_from_edges_random_graph_matches_union_find(spark):
+    """Seeded random undirected graph over string ids vs a pure-Python
+    union-find: every non-root vertex maps to the minimum id of its
+    component.  ``mapping_from_edges`` reads that minimum straight off
+    the ``comp`` label of ``connected_components``."""
+    import random
+
+    from mc2skos_spark.operators.canonicalize import mapping_from_edges
+    rng = random.Random(7)
+    ids = ["u:%03d" % rng.randint(0, 999) for _ in range(80)]
+    edges = {(rng.choice(ids), rng.choice(ids)) for _ in range(70)}
+    parent = {v: v for e in edges for v in e}
+
+    def find(v):
+        while parent[v] != v:
+            parent[v] = parent[parent[v]]
+            v = parent[v]
+        return v
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)   # root = min member
+    expected = {(v, find(v)) for v in parent if find(v) != v}
+    df = spark.createDataFrame(sorted(edges), ["src", "dst"])
+    got = {(r["uri"], r["canonical"])
+           for r in mapping_from_edges(df).collect()}
+    assert expected and got == expected
+
+
 def _class_record(notation, parent=None):
     parent_sf = ('<subfield code="e">%s</subfield>' % parent) if parent else ""
     return (
@@ -179,8 +209,10 @@ def test_iterative_loops_leave_session_conf_untouched(spark):
     """The union-find and doubling loops must NOT read-modify-write
     spark.sql.shuffle.partitions: a session shared by concurrent query
     threads keeps its own shuffle width for the loop's whole duration
-    (round-2 review item — loops now pin width via explicit
-    repartition on their join inputs instead)."""
+    (loops pin width via explicit repartition on their join inputs).
+    The session runs at a width the loops never pick (``loop_width`` is
+    8 at this size), so a loop that wrote its width into the session
+    would be observed."""
     import threading
     import time
 
@@ -188,6 +220,7 @@ def test_iterative_loops_leave_session_conf_untouched(spark):
 
     conf_key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(conf_key)
+    session_width = "5"
     observed: set[str] = set()
     stop = threading.Event()
 
@@ -196,19 +229,21 @@ def test_iterative_loops_leave_session_conf_untouched(spark):
             observed.add(spark.conf.get(conf_key))
             time.sleep(0.005)
 
+    spark.conf.set(conf_key, session_width)
     poller = threading.Thread(target=poll)
     poller.start()
     try:
         edges = spark.createDataFrame(
             [(i, i // 2) for i in range(1, 200)], ["src", "dst"])
-        # widths deliberately different from the session's to make any
-        # leak observable
-        cc = connected_components(edges, cc_partitions=3)
+        cc = connected_components(edges)
         assert cc.count() == 200          # vertices 0..199, one component
-        tc = transitive_closure(edges, loop_partitions=5)
+        tc = transitive_closure(edges)
         assert tc.count() > 199
     finally:
         stop.set()
         poller.join()
-    assert spark.conf.get(conf_key) == before
-    assert observed == {before}, "loop leaked its width into the session"
+        final = spark.conf.get(conf_key)
+        spark.conf.set(conf_key, before)
+    assert final == session_width
+    assert observed == {session_width}, \
+        "loop leaked its width into the session"

@@ -88,10 +88,11 @@ def test_entry_smoke(spark):
 
 
 def test_widen_unsplittable_scan(spark, tmp_path):
-    """Round-7 _t widening: a one-row-group documents table above the
-    row floor is repartitioned to the session parallelism right after
-    the read (rows identical); a tiny table is left alone (no extra
-    exchange at correctness SFs)."""
+    """Round-7 _t widening: with ``widen=True`` a one-row-group
+    documents table above the row floor is repartitioned to the session
+    parallelism right after the read (rows identical); a tiny table is
+    left alone (no extra exchange at correctness SFs), and so is any
+    table read without the opt-in."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -102,18 +103,21 @@ def test_widen_unsplittable_scan(spark, tmp_path):
         "doc_id": list(range(n)),
         "text": ["alpha beta gamma %d" % i for i in range(n)]}),
         str(big / "documents.parquet"))
-    df = entry_mod._t(spark, str(big), "documents")
+    df = entry_mod._t(spark, str(big), "documents", widen=True)
     assert df.rdd.getNumPartitions() == \
         spark.sparkContext.defaultParallelism
     assert df.count() == n
     assert df.agg({"doc_id": "sum"}).first()[0] == n * (n - 1) // 2
+    # widening is opt-in: the default read keeps the file's one split
+    assert entry_mod._t(spark, str(big), "documents") \
+        .rdd.getNumPartitions() == 1
 
     small = tmp_path / "small"
     small.mkdir()
     pq.write_table(pa.table({
         "doc_id": [1, 2], "text": ["a", "b"]}),
         str(small / "documents.parquet"))
-    df2 = entry_mod._t(spark, str(small), "documents")
+    df2 = entry_mod._t(spark, str(small), "documents", widen=True)
     assert df2.rdd.getNumPartitions() == 1
     assert df2.count() == 2
 
@@ -144,7 +148,7 @@ def test_widen_many_file_scan_opens_no_footer(spark, tmp_path,
         return real(*args, **kwargs)
 
     monkeypatch.setattr(pq, "ParquetFile", counting)
-    df = entry_mod._t(spark, str(tmp_path), "documents")
+    df = entry_mod._t(spark, str(tmp_path), "documents", widen=True)
     assert opened == []
     assert "RoundRobinPartitioning" not in \
         df._jdf.queryExecution().executedPlan().toString()

@@ -8,7 +8,6 @@ handwritten timeline with boundary-exact gaps.
 import datetime as dt
 
 import pytest
-from pyspark.sql import functions as F
 
 from mc2skos_spark.operators.graph import SCALE, pagerank
 from mc2skos_spark.operators.sessionize import (event_micros,
@@ -50,50 +49,6 @@ def test_pagerank_multigraph_counts_parallel_edges(spark):
            for r in pagerank(df, iterations=1).collect()}
     assert got == _reference_pagerank(edges, 1)
     assert got[2] > got[3]
-
-
-def test_pagerank_bucketed_prepared_edges(spark, tmp_path):
-    """Production path: degree-annotated edges written bucketed by src,
-    consumed with edges_prepared=True — identical ranks, and the
-    per-round contribution join needs NO exchange on the edge side
-    (the bucketed scan satisfies the join's distribution requirement;
-    only the rank side shuffles)."""
-    from mc2skos_spark.operators.graph import prepare_edges
-
-    edges = [(i, i // 2) for i in range(2, 40)] \
-        + [(i, i // 3) for i in range(2, 40)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-
-    spark.sql("DROP TABLE IF EXISTS pr_edges_bucketed")
-    (prepare_edges(df).write.mode("overwrite")
-     .bucketBy(4, "src").sortBy("src").format("parquet")
-     .option("path", str(tmp_path / "pr_edges"))
-     .saveAsTable("pr_edges_bucketed"))
-    prepared = spark.table("pr_edges_bucketed")
-
-    direct = {r["node"]: r["rank_scaled"]
-              for r in pagerank(df, iterations=3).collect()}
-    bucketed = {r["node"]: r["rank_scaled"]
-                for r in pagerank(prepared, iterations=3,
-                                  edges_prepared=True).collect()}
-    assert bucketed == direct
-
-    # plan shape of one loop-body contribution join: exactly one
-    # Exchange (rank side) — the bucketed edge scan contributes none
-    saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        ranks = prepared.select(F.col("src").alias("node")).distinct() \
-            .withColumn("r", F.lit(10**9).cast("long"))
-        j = (prepared.join(ranks, F.col("src") == F.col("node"))
-             .select("dst", F.expr("(r * 85) div (100 * od)").alias("c"))
-             .groupBy("dst").agg(F.sum("c").alias("s")))
-        assert j.count() > 0  # finalize AQE
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        scan_side_exchanges = plan.count("Exchange hashpartitioning(src")
-        assert scan_side_exchanges == 0, plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
 
 
 def test_pagerank_rejects_bad_params(spark):

@@ -226,12 +226,21 @@ def test_keeper_updates_merges_existing_clusters(spark):
 
 def test_keeper_remap_chain_resolution(spark):
     """old→mid appended at batch N, mid→new at batch N+1: resolution
-    follows the chain to the final keeper."""
+    follows the chain to the final keeper — also down a 64-link chain
+    (pointer jumping, a handful of rounds).  A remap cycle has no final
+    keeper: resolution raises instead of returning a partial answer."""
     from mc2skos_spark.functions.incremental import resolve_remap
     remap = spark.createDataFrame([(9, 5), (5, 1), (7, 5)],
                                   "old long, new long")
     got = {(r["old"], r["new"]) for r in resolve_remap(remap).collect()}
     assert got == {(9, 1), (5, 1), (7, 1)}
+    chain = spark.createDataFrame([(i + 1, i) for i in range(64)],
+                                  "old long, new long")
+    got = {(r["old"], r["new"]) for r in resolve_remap(chain).collect()}
+    assert got == {(i, 0) for i in range(1, 65)}
+    cycle = spark.createDataFrame([(5, 3), (3, 5)], "old long, new long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        resolve_remap(cycle)
 
 
 def test_incremental_keepers_equal_from_scratch(spark, tmp_path,

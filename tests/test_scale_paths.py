@@ -1,12 +1,11 @@
-"""Scale-path operators: two-phase (salted) reassembly, bucketed
-co-located joins, lineage introspection."""
+"""Scale-path operators: two-phase (salted) reassembly, predicate-key
+partition pruning, lineage introspection."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from mc2skos_spark.plans import schemas
 from mc2skos_spark.plans.pipeline import KgPipeline
-from mc2skos_spark.sinks.bucketed import subject_join, write_bucketed_triples
 from mc2skos_spark.sources.synth import make_transcript_rows, synth_marc_records
 from mc2skos_spark.sources.transcripts import reassemble_records
 
@@ -76,33 +75,6 @@ def test_blocked_reassembly_adversarial_property(spark):
                      for r in reassemble_records(df, block_size=block)
                      .collect())
         assert two == single, "block_size=%d diverged" % block
-
-
-def test_bucketed_subject_join_has_no_exchange(spark, tmp_path):
-    rows = make_transcript_rows(synth_marc_records(40, seed=61), seed=62)
-    df = spark.createDataFrame(rows, schema=schemas.TRANSCRIPTS)
-    pipe = KgPipeline(spark, str(tmp_path / "wh"), canonicalize=False)
-    triples = pipe.run(df)
-
-    spark.sql("DROP TABLE IF EXISTS triples_bucketed")
-    write_bucketed_triples(triples, "triples_bucketed", num_buckets=4,
-                           path=str(tmp_path / "tables" / "tb"))
-    # disable auto-broadcast: at test scale the planner would broadcast
-    # (fine too) — the point here is proving the bucketed SMJ path needs
-    # NO shuffle at 100 TB where neither side broadcasts
-    saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = subject_join(
-            spark, "triples_bucketed",
-            ["http://www.w3.org/2004/02/skos/core#prefLabel"],
-            ["http://www.w3.org/2004/02/skos/core#notation"])
-        assert joined.count() > 0  # execute so AQE finalizes the plan
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
 
 
 def test_published_triples_partition_pruning(spark, tmp_path):
