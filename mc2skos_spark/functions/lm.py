@@ -131,42 +131,6 @@ def lm_nll_scores(documents: DataFrame, lm: DataFrame | None = None,
                  .alias("avg_nll")))
 
 
-def doc_ngram_freq(documents: DataFrame, n: int,
-                   id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
-    """Per-document distinct n-gram-transition frequencies
-    ``(id, w1..wn, tf)`` over consecutive lowercased whitespace tokens.
-    Documents with fewer than ``n`` tokens contribute no rows; ``n=1``
-    is :func:`doc_term_freq` with the column renamed."""
-    n = int(n)
-    if n < 1:
-        raise ValueError("n-gram order must be >= 1, got %d" % n)
-    if n == 1:
-        return (doc_term_freq(documents, id_col, text_col)
-                .select(F.col(id_col), F.col("token").alias("w1"), "tf"))
-    names = ["w%d" % (i + 1) for i in range(n)]
-    empty = F.array().cast(
-        "array<struct<%s>>" % ",".join("%s:string" % w for w in names))
-
-    def grams_of(tk):
-        idx = F.sequence(F.lit(1),
-                         F.greatest(F.size(tk) - (n - 1), F.lit(0)))
-        full = F.transform(
-            idx, lambda i: F.struct(
-                *[F.element_at(tk, i + j).alias(names[j])
-                  for j in range(n)]))
-        return F.when(F.size(tk) >= n, full).otherwise(empty)
-
-    from mc2skos_spark.functions.textstats import _once
-    grams = _once(tokens(F.lower(F.col(text_col))), grams_of, empty)
-    return (documents
-            .select(F.col(id_col), F.explode(grams).alias("p"))
-            .select(F.col(id_col),
-                    *[F.col("p." + w).alias(w) for w in names])
-            .groupBy(id_col, *names)
-            .agg(F.count(F.lit(1)).cast("long").alias("tf")))
-
-
 def ngram_nll_scores(documents: DataFrame, order: int,
                      lams: list | None = None,
                      id_col: str = "doc_id",

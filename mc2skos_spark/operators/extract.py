@@ -124,15 +124,12 @@ def _extract_batches(options: dict, default_scheme: str | None,
 
 def extract_triples(records: DataFrame, options: dict | None = None,
                     default_scheme: str | None = None,
-                    partitions: int | None = None,
-                    balance: bool = True,
                     options_by_key: dict | None = None) -> DataFrame:
     """MARC_RECORDS → EXTRACTED (tagged union of triples + quarantine).
 
-    ``balance=True`` hash-repartitions by record_id so Arrow batches get
-    size-balanced partitions regardless of upstream skew (north_rule).
-    Pass ``balance=False`` when the input is already well-spread (e.g.
-    straight off the reassembly shuffle) to save one full-data shuffle.
+    The input is hash-repartitioned by record_id at session shuffle
+    width so Arrow batches get size-balanced partitions regardless of
+    upstream skew (north_rule).
 
     ``options_by_key``: per-record conversion flags (``{opt_key:
     (options, default_scheme)}``); ``records`` must then carry an
@@ -142,13 +139,9 @@ def extract_triples(records: DataFrame, options: dict | None = None,
     (and one shuffle set) per flag family.
     """
     options = dict(options or {})
-    source = records
-    if balance:
-        if partitions is None:
-            partitions = records.sparkSession.conf.get(
-                "spark.sql.shuffle.partitions")
-        source = records.repartition(int(partitions),
-                                     F.xxhash64("record_id"))
+    partitions = records.sparkSession.conf.get(
+        "spark.sql.shuffle.partitions")
+    source = records.repartition(int(partitions), F.xxhash64("record_id"))
     return source.mapInPandas(
         _extract_batches(options, default_scheme, options_by_key),
         schema=schemas.EXTRACTED)
@@ -180,16 +173,11 @@ def quarantine_from_extracted(extracted: DataFrame) -> DataFrame:
             .dropDuplicates(["record_id", "reason"]))
 
 
-def warnings_from_extracted(extracted: DataFrame,
-                            distinct_messages: bool = True) -> DataFrame:
-    """Non-fatal warnings per record; ``distinct_messages=True``
-    reproduces the reference's DuplicateFilter log suppression
-    (/root/reference/mc2skos/record.py:17-27) — one row per distinct
-    message instead of one per occurrence."""
-    warnings = (extracted.filter(F.col("row_kind") == "warning")
-                .select("record_id", "reason"))
-    if distinct_messages:
-        return (warnings.groupBy("reason")
-                .agg(F.min("record_id").alias("record_id"),
-                     F.count(F.lit(1)).alias("occurrences")))
-    return warnings
+def warnings_from_extracted(extracted: DataFrame) -> DataFrame:
+    """Non-fatal warnings, one row per distinct message (mc2skos's
+    DuplicateFilter log suppression, ``mc2skos/record.py:17-27``), with
+    the first record that raised it and the occurrence count."""
+    return (extracted.filter(F.col("row_kind") == "warning")
+            .groupBy("reason")
+            .agg(F.min("record_id").alias("record_id"),
+                 F.count(F.lit(1)).alias("occurrences")))

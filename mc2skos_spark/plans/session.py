@@ -11,6 +11,25 @@ import os
 
 from pyspark.sql import SparkSession
 
+_MEMINFO = "/proc/meminfo"
+
+
+def _default_heap_gb(cpus: int) -> int:
+    """Default driver heap in GB: ``min(16, max(8, cpus // 2))``, capped
+    at half of the host's ``MemTotal`` (floor 1 GB) — the heap is
+    pre-touched, so an uncapped default on a small host takes memory
+    other processes need.  An unreadable meminfo leaves it uncapped."""
+    gb = min(16, max(8, cpus // 2))
+    try:
+        with open(_MEMINFO) as fp:
+            for line in fp:
+                if line.startswith("MemTotal:"):
+                    total_kb = int(line.split()[1])
+                    return min(gb, max(1, total_kb // 2 // 1024 ** 2))
+    except OSError:
+        pass
+    return gb
+
 
 def build_session(app_name: str = "mc2skos_spark",
                   master: str | None = None,
@@ -31,7 +50,7 @@ def build_session(app_name: str = "mc2skos_spark",
     # cluster the same flags are standard practice for steady-state
     # executors.
     default_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM",
-                                 "%dg" % min(16, max(8, cpus // 2)))
+                                 "%dg" % _default_heap_gb(cpus))
 
     builder = (
         SparkSession.builder.appName(app_name).master(master)

@@ -24,6 +24,7 @@ import json
 import os
 import shutil
 import time
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -189,17 +190,7 @@ class IcebergishCatalog:
         signature indexes).  Lineage part ids continue from the prior
         snapshot; falls back to a plain ``write`` when the table does
         not exist yet.  The commit is still one atomic manifest rename,
-        so a mid-append kill leaves the previous snapshot intact.
-
-        BREAKING CHANGE (round 5): the schema check now compares
-        nullability directionally — optional-into-required is REJECTED
-        where the old (name, type)-only check accepted it.  A caller
-        whose first write committed non-nullable columns (``spark.range``
-        output, aggregates) and later appends parquet-read-back frames
-        (always nullable) will newly raise: either pin the first write's
-        schema nullable (``spark.createDataFrame(df.rdd, nullable_schema)``
-        -free route: write/read-back once) or widen it before the first
-        commit.  In-repo flows all commit nullable-first."""
+        so a mid-append kill leaves the previous snapshot intact."""
         current = self.current_manifest(table)
         if current is None:
             return self._write_snapshot(table, df, None, lineage_key,
@@ -229,10 +220,9 @@ class IcebergishCatalog:
                              % table)
         # the COMMITTED schema stays the manifest schema: an append of
         # a stricter-nullability frame (common with literal columns)
-        # must not silently tighten the table's contract — the evolved
-        # nullable columns from add_columns would otherwise flip
-        # required after one strict append and reject the next nullable
-        # one.  Shape equality is already guaranteed above.
+        # must not silently tighten the table's contract, or the next
+        # nullable append would be rejected.  Shape equality is already
+        # guaranteed above.
         return self._write_snapshot(
             table, df, None, lineage_key, properties, base=current,
             operation="append", schema_json=current["schema"],
@@ -297,11 +287,21 @@ class IcebergishCatalog:
                  *per_col)
             .collect(),
             key=lambda r: r["file"])
+        # each file's path relative to the snapshot dir: Spark names
+        # files per task, so one task's files in different partition
+        # dirs share a basename.  input_file_name() is a percent-encoded
+        # URI; unquote it back to the filesystem path.
+        snap_real = os.path.realpath(snap_dir)
+
+        def rel(uri):
+            return os.path.relpath(
+                os.path.realpath(unquote(urlparse(uri).path)), snap_real)
+
         base_lineage = list(base["lineage"]) if base else []
         base_dirs = (base.get("dirs", [base["dir"]]) if base else [])
         lineage = base_lineage + [
             {"part_id": len(base_lineage) + i,
-             "file": os.path.basename(r["file"]),
+             "file": rel(r["file"]),
              "dir": os.path.basename(snap_dir),
              "input_min": r["mn"], "input_max": r["mx"],
              "row_count": r["cnt"],
@@ -346,15 +346,12 @@ class IcebergishCatalog:
 
     # ------------------------------------------------------------- read
 
-    def _manifest_for(self, table: str, snapshot_id: int | None,
-                      as_of: float | None) -> dict:
-        """Resolve the manifest to read: current, a pinned snapshot id,
-        or the newest snapshot committed at/before ``as_of`` (epoch
-        seconds) — Iceberg's VERSION AS OF / TIMESTAMP AS OF.  Only
-        RETAINED snapshots are reachable: after ``expire_snapshots``
-        the expired history is gone, exactly like Iceberg."""
-        if snapshot_id is not None and as_of is not None:
-            raise ValueError("pass snapshot_id OR as_of, not both")
+    def _manifest_for(self, table: str,
+                      snapshot_id: int | None = None) -> dict:
+        """Resolve the manifest to read: current, or a pinned snapshot
+        id (Iceberg's VERSION AS OF).  Only RETAINED snapshots are
+        reachable: after ``expire_snapshots`` the expired history is
+        gone, exactly like Iceberg."""
         if snapshot_id is not None:
             path = self._manifest_path(table, snapshot_id)
             if not os.path.exists(path):
@@ -363,40 +360,23 @@ class IcebergishCatalog:
                     "never committed)" % (table, snapshot_id))
             with open(path) as fp:
                 return json.load(fp)
-        if as_of is not None:
-            best = None
-            for fname in self._list_manifests(table):
-                with open(os.path.join(self._table_dir(table),
-                                       fname)) as fp:
-                    m = json.load(fp)
-                if m["committed_at"] <= as_of:
-                    best = m          # manifests iterate oldest→newest
-            if best is None:
-                raise FileNotFoundError(
-                    "table %r has no retained snapshot committed at or "
-                    "before %s" % (table, as_of))
-            return best
         manifest = self.current_manifest(table)
         if manifest is None:
             raise FileNotFoundError("no committed snapshot for table %r"
                                     % table)
         return manifest
 
-    def read(self, table: str, snapshot_id: int | None = None,
-             as_of: float | None = None) -> DataFrame:
-        """Read a committed snapshot — the current one by default, a
-        pinned ``snapshot_id`` (Iceberg ``VERSION AS OF``) or the one
-        current at epoch-seconds ``as_of`` (``TIMESTAMP AS OF``)."""
-        manifest = self._manifest_for(table, snapshot_id, as_of)
+    def read(self, table: str, snapshot_id: int | None = None) -> DataFrame:
+        """Read a committed snapshot — the current one by default, or a
+        pinned ``snapshot_id`` (Iceberg ``VERSION AS OF``)."""
+        manifest = self._manifest_for(table, snapshot_id)
         from pyspark.sql import types as T
         dirs = manifest.get("dirs", [manifest["dir"]])
         return self.spark.read.schema(
             T.StructType.fromJson(manifest["schema"])).parquet(
             *[os.path.join(self._table_dir(table), d) for d in dirs])
 
-    def pruned_files(self, table: str, where: dict,
-                     snapshot_id: int | None = None,
-                     as_of: float | None = None) -> tuple[list[dict], int]:
+    def pruned_files(self, table: str, where: dict) -> tuple[list[dict], int]:
         """Manifest-stats file pruning (Iceberg's manifest-entry min/max
         evaluation, the zone-map idea): given ``where`` as
         ``{column: (lo, hi)}`` inclusive bounds (either side ``None`` =
@@ -410,12 +390,12 @@ class IcebergishCatalog:
         bad one.  Pure manifest work: zero data I/O, O(files) driver
         time — at 100 TB this is the difference between opening every
         parquet footer and opening none."""
-        manifest = self._manifest_for(table, snapshot_id, as_of)
+        manifest = self._manifest_for(table)
         if manifest["partition_by"]:
-            # lineage records file BASENAMES; hive-partitioned snapshots
-            # nest files under partition value dirs, so a per-file read
-            # cannot be reconstructed — partition pruning already covers
-            # those tables (Spark prunes partition dirs natively).
+            # hive-partitioned values live in directory names, which a
+            # per-file read does not re-infer — partition pruning
+            # already covers those tables (Spark prunes partition dirs
+            # natively).
             raise ValueError("read_where/pruned_files support "
                              "unpartitioned tables only (%r is "
                              "partitioned; directory-level partition "
@@ -442,9 +422,7 @@ class IcebergishCatalog:
                 kept.append(e)
         return kept, len(entries)
 
-    def read_where(self, table: str, where: dict,
-                   snapshot_id: int | None = None,
-                   as_of: float | None = None) -> DataFrame:
+    def read_where(self, table: str, where: dict) -> DataFrame:
         """Stats-pruned range scan: read only the data files whose
         manifest min/max can overlap ``where`` (``{col: (lo, hi)}``
         inclusive, ``None`` = unbounded), then apply the SAME predicate
@@ -453,8 +431,8 @@ class IcebergishCatalog:
         row-identical to ``read(...).filter(...)`` on every layout.
         Pair with ``write(cluster_by=[col])`` to make the skip rate
         real (see ``write``)."""
-        manifest = self._manifest_for(table, snapshot_id, as_of)
-        kept, _total = self.pruned_files(table, where, snapshot_id, as_of)
+        manifest = self._manifest_for(table)
+        kept, _total = self.pruned_files(table, where)
         from pyspark.sql import types as T
         schema = T.StructType.fromJson(manifest["schema"])
         if not kept:
@@ -474,8 +452,7 @@ class IcebergishCatalog:
         return df.filter(cond)
 
     def read_changes(self, table: str, from_snapshot_id: int,
-                     to_snapshot_id: int | None = None,
-                     with_snapshot_id: bool = False) -> DataFrame:
+                     to_snapshot_id: int | None = None) -> DataFrame:
         """Iceberg incremental append scan: the rows committed AFTER
         ``from_snapshot_id`` up to and including ``to_snapshot_id``
         (default: current).  Reads ONLY the appended snapshot dirs —
@@ -484,13 +461,9 @@ class IcebergishCatalog:
         rows at 100 TB.  The span must be append-only: compaction /
         overwrite rewrites data files, so an appended-dirs diff would
         double- or under-count — detected via the dirs-prefix check and
-        raised loudly, matching Iceberg's incremental-scan restriction
-        (use ``snapshot_diff`` across rewrites instead).
-        ``with_snapshot_id=True`` adds a ``_snapshot_id`` column
-        recovered from the snapshot dir name (Iceberg's
-        ``_commit_snapshot_id``) — one codegen regexp, no extra scan."""
-        frm = self._manifest_for(table, from_snapshot_id, None)
-        to = self._manifest_for(table, to_snapshot_id, None)
+        raised loudly, matching Iceberg's incremental-scan restriction."""
+        frm = self._manifest_for(table, from_snapshot_id)
+        to = self._manifest_for(table, to_snapshot_id)
         if to["snapshot_id"] < frm["snapshot_id"]:
             raise ValueError(
                 "to_snapshot_id %d precedes from_snapshot_id %d"
@@ -502,41 +475,14 @@ class IcebergishCatalog:
             raise ValueError(
                 "history of table %r between snapshots %d and %d is not "
                 "append-only (a compaction or overwrite rewrote data "
-                "files); incremental read is undefined — use "
-                "snapshot_diff instead" % (table, frm["snapshot_id"],
-                                           to["snapshot_id"]))
+                "files); incremental read is undefined"
+                % (table, frm["snapshot_id"], to["snapshot_id"]))
         schema = T.StructType.fromJson(to["schema"])
         delta = to_dirs[len(from_dirs):]
         if not delta:
             return self.spark.createDataFrame([], schema)
-        df = self.spark.read.schema(schema).parquet(
+        return self.spark.read.schema(schema).parquet(
             *[os.path.join(self._table_dir(table), d) for d in delta])
-        if with_snapshot_id:
-            df = df.withColumn(
-                "_snapshot_id",
-                F.regexp_extract(F.input_file_name(),
-                                 r"snap-(\d+)/", 1).cast("int"))
-        return df
-
-    def snapshot_diff(self, table: str, from_snapshot_id: int,
-                      to_snapshot_id: int | None = None) -> DataFrame:
-        """Multiset diff between two retained snapshots as a changelog
-        frame: the ``to`` rows absent from ``from`` tagged
-        ``_change_type='insert'`` plus the ``from`` rows absent from
-        ``to`` tagged ``'delete'`` (Iceberg's changelog view shape).
-        Works across compactions/overwrites where ``read_changes``
-        refuses — at the price of scanning BOTH snapshots and one
-        hash-aggregate shuffle per side (``exceptAll``); the O(delta)
-        append scan is always preferred when the span qualifies."""
-        frm = self.read(table, snapshot_id=from_snapshot_id)
-        to = self.read(table, snapshot_id=(
-            to_snapshot_id
-            if to_snapshot_id is not None
-            else self.current_manifest(table)["snapshot_id"]))
-        return (to.exceptAll(frm)
-                  .withColumn("_change_type", F.lit("insert"))
-                .unionByName(frm.exceptAll(to)
-                             .withColumn("_change_type", F.lit("delete"))))
 
     def history(self, table: str) -> DataFrame:
         """The table's retained snapshot log as a DataFrame — Iceberg's
@@ -730,88 +676,6 @@ class IcebergishCatalog:
                 "files_after": len(m["lineage"]),
                 "rows": m["row_count"],
                 "dirs_removed": len(gc["removed_dirs"])}
-
-    # ------------------------------------------------- schema evolution
-
-    def add_columns(self, table: str, new_fields: dict) -> dict:
-        """Iceberg ``ALTER TABLE … ADD COLUMNS`` — METADATA-ONLY
-        schema evolution: commit a new manifest whose schema appends
-        the given ``{name: spark-ddl-type}`` fields (always nullable,
-        as Iceberg requires for added columns) while referencing the
-        SAME data dirs.  No data file is touched: the read path always
-        supplies the manifest schema explicitly, and Spark's parquet
-        reader fills columns absent from a file with nulls — so
-        pre-evolution files read as null in the new columns, exactly
-        Iceberg's contract.  Appends after the evolution must carry
-        the new shape.  Time travel composes: each retained snapshot
-        keeps ITS schema, so reading an old snapshot shows the old
-        columns."""
-        from pyspark.sql import types as T
-        current = self.current_manifest(table)
-        if current is None:
-            raise FileNotFoundError("no committed snapshot for table %r"
-                                    % table)
-        schema = T.StructType.fromJson(current["schema"])
-        existing = {f.name for f in schema.fields}
-        for name, ddl in new_fields.items():
-            if name in existing:
-                raise ValueError("column %r already exists in %r"
-                                 % (name, table))
-            schema = schema.add(name, ddl, nullable=True)
-        return self._commit_schema(table, current, schema.jsonValue())
-
-    def drop_columns(self, table: str, names) -> dict:
-        """Iceberg ``ALTER TABLE … DROP COLUMN`` — metadata-only: the
-        new manifest's schema omits the columns; data files still hold
-        the bytes (schema projection skips them on read) until a
-        compaction physically rewrites.  Dropped columns are also
-        removed from ``stats_columns`` (their zone maps die with
-        them).  Dropping a column that some retained snapshot needs is
-        fine — time travel reads use that snapshot's own schema."""
-        from pyspark.sql import types as T
-        if isinstance(names, str):
-            names = [names]
-        current = self.current_manifest(table)
-        if current is None:
-            raise FileNotFoundError("no committed snapshot for table %r"
-                                    % table)
-        schema = T.StructType.fromJson(current["schema"])
-        missing = [n for n in names if n not in schema.fieldNames()]
-        if missing:
-            raise ValueError("cannot drop absent columns %s from %r"
-                             % (missing, table))
-        keep = [f for f in schema.fields if f.name not in set(names)]
-        if not keep:
-            raise ValueError("cannot drop every column of %r" % table)
-        return self._commit_schema(
-            table, current, T.StructType(keep).jsonValue(),
-            drop_stats=set(names))
-
-    def _commit_schema(self, table: str, current: dict,
-                       schema_json: dict,
-                       drop_stats: set | None = None) -> dict:
-        """Commit an ``alter`` snapshot: same dirs, same lineage, new
-        schema — one atomic manifest rename, zero data I/O."""
-        manifest = dict(current)
-        manifest["snapshot_id"] = current["snapshot_id"] + 1
-        manifest["schema"] = schema_json
-        manifest["operation"] = "alter"
-        manifest["committed_at"] = time.time()
-        if drop_stats:
-            manifest["stats_columns"] = [
-                c for c in current.get("stats_columns", [])
-                if c not in drop_stats]
-            manifest["lineage"] = [
-                {**e, **({"stats": {c: s for c, s in e["stats"].items()
-                                    if c not in drop_stats}}
-                         if "stats" in e else {})}
-                for e in current["lineage"]]
-        path = self._manifest_path(table, manifest["snapshot_id"])
-        tmp = path + ".tmp"
-        with open(tmp, "w") as fp:
-            json.dump(manifest, fp, indent=1)
-        os.replace(tmp, path)
-        return manifest
 
     # ---------------------------------------------------------- cleanup
 

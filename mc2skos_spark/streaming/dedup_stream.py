@@ -49,7 +49,6 @@ class StreamingDeduper:
                  threshold: float = 0.9, n: int = 3,
                  num_hashes: int = 32, bands: int = 8,
                  assign_keepers: bool = False,
-                 compact_every: int | None = None,
                  compact_policy: dict | None = None):
         self.warehouse = warehouse
         self.name = name
@@ -63,22 +62,18 @@ class StreamingDeduper:
         #: batch (incremental_keeper_assign) — the full dedup DECISION
         #: on the stream, not just pair detection
         self.assign_keepers = assign_keepers
-        #: every N batches, compact + expire the index's tables —
-        #: streaming is where append-per-batch small-file buildup bites
-        #: hardest (one parquet file per table per micro-batch).
-        #: Maintenance runs AFTER the batch's guarded commits and is
-        #: replay-transparent: compaction preserves rows, properties
-        #: (incl. the last_batch_id guards) and the committed schema,
-        #: and a kill mid-compaction leaves the previous snapshot
-        #: current — the next trigger simply retries the maintenance.
-        self.compact_every = compact_every
-        #: manifest-STAT-driven alternative to the blind counter:
         #: kwargs for ``IcebergishCatalog.maintain`` (``max_files`` /
-        #: ``min_rows_per_file``), evaluated after EVERY batch — the
-        #: check reads only the manifest JSON, and compaction fires
-        #: exactly when the policy says (e.g. a skewed append pattern
-        #: fragments one table long before its siblings).  Takes
-        #: precedence over ``compact_every`` when both are set.
+        #: ``min_rows_per_file``), evaluated after EVERY batch — streaming
+        #: is where append-per-batch small-file buildup bites hardest
+        #: (one parquet file per table per micro-batch).  The check reads
+        #: only the manifest JSON, and compaction fires exactly when the
+        #: policy says (e.g. a skewed append pattern fragments one table
+        #: long before its siblings); ``{}`` maintains after every batch,
+        #: ``None`` never.  Maintenance runs AFTER the batch's guarded
+        #: commits and is replay-transparent: compaction preserves rows,
+        #: properties (incl. the last_batch_id guards) and the committed
+        #: schema, and a kill mid-compaction leaves the previous snapshot
+        #: current — the next trigger simply retries the maintenance.
         self.compact_policy = compact_policy
 
     def replay_applied(self, batch: DataFrame, batch_id: int,
@@ -136,7 +131,7 @@ class StreamingDeduper:
             incremental_keeper_assign(
                 catalog, self.name, batch, self.id_col, self.text_col,
                 threshold=self.threshold, batch_id=batch_id)
-            self._maybe_maintain(catalog, batch_id)
+            self._maybe_maintain(catalog)
             return
         # sign the batch ONCE; pair join and index append share it
         pre = batch_index_rows(catalog, self.name, batch,
@@ -148,13 +143,11 @@ class StreamingDeduper:
         catalog.write(PAIRS_TABLE % batch_id, pairs, lineage_key="id_a")
         append_batch_to_index(catalog, self.name, batch_id=batch_id,
                               precomputed=pre)
-        self._maybe_maintain(catalog, batch_id)
+        self._maybe_maintain(catalog)
 
-    def _maybe_maintain(self, catalog: IcebergishCatalog,
-                        batch_id: int) -> None:
-        """Compact + expire this index's tables — manifest-stat policy
-        or every-``compact_every``-th batch (see the two __init__
-        attributes).  Only the index's OWN tables (its four known
+    def _maybe_maintain(self, catalog: IcebergishCatalog) -> None:
+        """Compact + expire this index's tables per ``compact_policy``
+        (see __init__).  Only the index's OWN tables (its four known
         suffixes) are touched — an open-ended prefix match would also
         sweep up a sibling index named e.g. ``<name>_v2`` in the same
         warehouse and expire its snapshot history.  Per-batch pair
@@ -163,31 +156,22 @@ class StreamingDeduper:
         _maintain_suffixes(catalog, self.name,
                            (SIG_SUFFIX, BUCKET_SUFFIX, KEEPER_SUFFIX,
                             REMAP_SUFFIX),
-                           self.compact_every, self.compact_policy,
-                           batch_id)
+                           self.compact_policy)
 
 
 def _maintain_suffixes(catalog: IcebergishCatalog, name: str,
-                       suffixes: tuple, compact_every: int | None,
-                       compact_policy: dict | None,
-                       batch_id: int) -> None:
-    """Shared per-batch maintenance dispatch for the streaming
-    handlers: a manifest-stat policy (``compact_policy`` →
-    ``catalog.maintain``, evaluated after EVERY batch — the no-op case
-    costs one manifest JSON read per table, and only the tables whose
-    stats trip the policy are rewritten) or the blind every-N counter
-    (``compact_every``).  Policy wins when both are set."""
+                       suffixes: tuple, compact_policy: dict | None) -> None:
+    """Shared per-batch maintenance for the streaming handlers: each of
+    the index's existing tables goes through ``catalog.maintain`` with
+    the ``compact_policy`` kwargs — the no-op case costs one manifest
+    JSON read per table, and only the tables whose stats trip the
+    policy are rewritten.  ``None`` disables maintenance."""
+    if compact_policy is None:
+        return
     existing = set(catalog.tables(prefix=name))
-    targets = [name + s for s in suffixes if name + s in existing]
-    if compact_policy:
-        for table in targets:
+    for table in (name + s for s in suffixes):
+        if table in existing:
             catalog.maintain(table, keep_last=1, **compact_policy)
-        return
-    if not compact_every or (batch_id + 1) % compact_every:
-        return
-    for table in targets:
-        catalog.compact(table)
-        catalog.expire_snapshots(table, keep_last=1)
 
 
 class StreamingSemanticDeduper:
@@ -206,7 +190,6 @@ class StreamingSemanticDeduper:
                  threshold: float = 0.97, num_centroids: int = 16,
                  centroid_mod: int = 8,
                  assign_keepers: bool = False,
-                 compact_every: int | None = None,
                  compact_policy: dict | None = None):
         self.warehouse = warehouse
         self.name = name
@@ -216,7 +199,6 @@ class StreamingSemanticDeduper:
         self.params = {"num_centroids": num_centroids,
                        "centroid_mod": centroid_mod}
         self.assign_keepers = assign_keepers
-        self.compact_every = compact_every
         self.compact_policy = compact_policy
 
     def replay_applied(self, batch: DataFrame, batch_id: int,
@@ -261,7 +243,7 @@ class StreamingSemanticDeduper:
             incremental_semantic_keeper_assign(
                 catalog, self.name, batch, self.id_col, self.vec_col,
                 threshold=self.threshold, batch_id=batch_id)
-            self._maybe_maintain(catalog, batch_id)
+            self._maybe_maintain(catalog)
             return
         # assign the batch ONCE; pair join and index append share it
         pre = batch_vec_rows(catalog, self.name, batch,
@@ -274,18 +256,16 @@ class StreamingSemanticDeduper:
                       lineage_key="id_a")
         append_batch_to_semantic_index(catalog, self.name, pre,
                                        batch_id=batch_id)
-        self._maybe_maintain(catalog, batch_id)
+        self._maybe_maintain(catalog)
 
-    def _maybe_maintain(self, catalog: IcebergishCatalog,
-                        batch_id: int) -> None:
-        """Compact + expire the vec/keeper/remap tables — manifest-stat
-        policy or every-``compact_every``-th batch; the centroid table
-        is single-write and never fragments, so it is skipped (same
-        suffix-scoped rule as the MinHash handler)."""
+    def _maybe_maintain(self, catalog: IcebergishCatalog) -> None:
+        """Compact + expire the vec/keeper/remap tables per
+        ``compact_policy``; the centroid table is single-write and
+        never fragments, so it is skipped (same suffix-scoped rule as
+        the MinHash handler)."""
         _maintain_suffixes(catalog, self.name,
                            (VEC_SUFFIX, KEEPER_SUFFIX, REMAP_SUFFIX),
-                           self.compact_every, self.compact_policy,
-                           batch_id)
+                           self.compact_policy)
 
 
 def start_stream(spark: SparkSession, input_dir: str,

@@ -484,20 +484,20 @@ def test_catalog_append_nullability_direction(spark, tmp_path):
     cat.write("t2", widened, lineage_key="id")       # optional table
     cat.append("t2", strict, lineage_key="id")
     assert cat.current_manifest("t2")["row_count"] == 9
+    # ...and the strict append did not tighten the committed schema: a
+    # further optional append still lands
+    cat.append("t2", widened.limit(1), lineage_key="id")
+    assert cat.current_manifest("t2")["row_count"] == 10
 
 
 def test_catalog_time_travel_and_history(spark, tmp_path):
-    """Iceberg VERSION AS OF / TIMESTAMP AS OF + the snapshot-log
-    metadata view: every retained snapshot is readable as it was;
-    as_of resolves the newest manifest at/before the timestamp;
-    history() records (operation, row_count) per commit; compaction
-    keeps history readable; expiry makes expired ids unreachable —
-    exactly Iceberg's contract."""
-    import time
-
+    """Iceberg VERSION AS OF + the snapshot-log metadata view: every
+    retained snapshot is readable as it was; history() records
+    (operation, row_count) per commit; compaction keeps history
+    readable; expiry makes expired ids unreachable — exactly Iceberg's
+    contract."""
     cat = IcebergishCatalog(str(tmp_path / "wh"), spark)
     cat.write("t", spark.range(0, 10).selectExpr("id"), lineage_key="id")
-    t0 = cat.current_manifest("t")["committed_at"]
     cat.append("t", spark.range(10, 20).selectExpr("id"),
                lineage_key="id")
     cat.append("t", spark.range(20, 30).selectExpr("id"),
@@ -508,15 +508,6 @@ def test_catalog_time_travel_and_history(spark, tmp_path):
         got = sorted(r["id"] for r in
                      cat.read("t", snapshot_id=sid).collect())
         assert got == list(range(upper)), sid
-
-    # timestamp-as-of: before the first commit -> error; at t0 -> v0;
-    # far future -> current
-    with pytest.raises(FileNotFoundError, match="at or before"):
-        cat.read("t", as_of=t0 - 1e6)
-    assert cat.read("t", as_of=t0).count() == 10
-    assert cat.read("t", as_of=time.time() + 3600).count() == 30
-    with pytest.raises(ValueError, match="not both"):
-        cat.read("t", snapshot_id=1, as_of=t0)
 
     # history: snapshot log oldest-first with operations and counts
     hist = cat.history("t").collect()
@@ -545,13 +536,11 @@ def test_catalog_time_travel_and_history(spark, tmp_path):
         cat.history("missing")
 
 
-def test_catalog_incremental_read_and_snapshot_diff(spark, tmp_path):
-    """Iceberg incremental append scan + changelog diff.
-    read_changes(from, to): exactly the rows appended in (from, to],
-    O(delta) dirs only; _snapshot_id recovers each row's commit;
+def test_catalog_incremental_read(spark, tmp_path):
+    """Iceberg incremental append scan.  read_changes(from, to):
+    exactly the rows appended in (from, to], O(delta) dirs only;
     empty span -> empty frame with the table schema; reversed span and
-    a compaction inside the span raise; snapshot_diff works ACROSS the
-    compaction and tags inserts/deletes like Iceberg's changelog view."""
+    a compaction inside the span raise."""
     cat = IcebergishCatalog(str(tmp_path / "wh"), spark)
     cat.write("t", spark.range(0, 10).selectExpr("id"), lineage_key="id")
     cat.append("t", spark.range(10, 20).selectExpr("id"),
@@ -569,11 +558,6 @@ def test_catalog_incremental_read_and_snapshot_diff(spark, tmp_path):
         F.input_file_name().alias("f")).distinct().collect()
     assert all("snap-000002" in r["f"] for r in scanned)
 
-    # per-row commit attribution
-    tagged = cat.read_changes("t", 0, with_snapshot_id=True)
-    by_snap = {r["id"]: r["_snapshot_id"] for r in tagged.collect()}
-    assert by_snap[10] == 1 and by_snap[25] == 2
-
     # empty span keeps the schema; reversed span raises
     empty = cat.read_changes("t", 2, 2)
     assert empty.count() == 0 and empty.columns == ["id"]
@@ -589,17 +573,6 @@ def test_catalog_incremental_read_and_snapshot_diff(spark, tmp_path):
                lineage_key="id")
     got = cat.read_changes("t", 3)
     assert sorted(r["id"] for r in got.collect()) == list(range(30, 35))
-
-    # snapshot_diff crosses the rewrite: compaction itself is a no-op
-    # diff; the later append shows as pure inserts; reversed order
-    # flips insert/delete
-    assert cat.snapshot_diff("t", 2, 3).count() == 0
-    diff = cat.snapshot_diff("t", 1, 4).collect()
-    assert {r["_change_type"] for r in diff} == {"insert"}
-    assert sorted(r["id"] for r in diff) == list(range(20, 35))
-    back = cat.snapshot_diff("t", 4, 1).collect()
-    assert {r["_change_type"] for r in back} == {"delete"}
-    assert sorted(r["id"] for r in back) == list(range(20, 35))
 
 
 def test_catalog_stats_pruning_and_clustered_write(spark, tmp_path):
@@ -673,10 +646,6 @@ def test_catalog_stats_pruning_and_clustered_write(spark, tmp_path):
     assert all("stats" in e for e in m2["lineage"])
     expect({"id": (100, 150)}, "id BETWEEN 100 AND 150")
 
-    # time travel composes: pruned read of the pre-append snapshot
-    assert cat.read_where("t", {"id": (2000, 2050)},
-                          snapshot_id=0).count() == 0
-
 
 def test_catalog_stats_guards(spark, tmp_path):
     cat = IcebergishCatalog(str(tmp_path / "wh"), spark)
@@ -706,59 +675,18 @@ def test_catalog_stats_guards(spark, tmp_path):
         cat.read_where("q", {"id": (0, 5)})
 
 
-def test_catalog_schema_evolution(spark, tmp_path):
-    """Iceberg-style metadata-only schema evolution: add_columns reads
-    pre-evolution files as null, appends carry the new shape, time
-    travel keeps each snapshot's own schema, drop_columns projects
-    away (and kills the zone maps) without touching data."""
-    from pyspark.sql import functions as F
-
+def test_catalog_partitioned_lineage_files_distinct(spark, tmp_path):
+    """Spark names output files per task, so one task's files in
+    different partition dirs share a basename: lineage records each
+    file's path relative to its snapshot dir, which names every file of
+    a partitioned snapshot uniquely and resolves on disk."""
     cat = IcebergishCatalog(str(tmp_path / "wh"), spark)
-    cat.write("t", spark.range(5).selectExpr("id", "id * 2 AS v"),
-              lineage_key="id", stats_columns=["id", "v"])
-    m = cat.add_columns("t", {"tag": "string", "score": "double"})
-    assert m["operation"] == "alter" and m["snapshot_id"] == 1
-    # old files read as null in the new columns — zero data I/O
-    rows = cat.read("t").orderBy("id").collect()
-    assert [r["tag"] for r in rows] == [None] * 5
-    assert set(cat.read("t").columns) == {"id", "v", "tag", "score"}
-    # history shows the alter commit with unchanged row count
-    hist = cat.history("t").collect()
-    assert (hist[-1]["operation"], hist[-1]["row_count"]) == ("alter", 5)
-    # append must now carry the evolved shape
-    with pytest.raises(ValueError, match="schema mismatch"):
-        cat.append("t", spark.range(5, 8).selectExpr("id", "id * 2 AS v"))
-    cat.append("t", spark.range(5, 8).selectExpr(
-        "id", "id * 2 AS v", "'x' AS tag",
-        "cast(0.5 AS double) AS score"),
-        lineage_key="id")
-    assert cat.read("t").count() == 8
-    assert cat.read("t").filter("tag = 'x'").count() == 3
-    # the strict append did NOT tighten the evolved contract: a
-    # further append with genuinely null new-column values still lands
-    cat.append("t", spark.sql(
-        "SELECT id, id * 2 AS v, cast(null AS string) AS tag,"
-        " cast(null AS double) AS score FROM range(8, 9)"),
-        lineage_key="id")
-    assert cat.read("t").count() == 9
-    # time travel: snapshot 0 still has the ORIGINAL two columns
-    assert set(cat.read("t", snapshot_id=0).columns) == {"id", "v"}
-    # pruning still works across evolution (stats carried over)
-    kept, total = cat.pruned_files("t", {"id": (5, 7)})
-    assert len(kept) < total
-    # guards
-    with pytest.raises(ValueError, match="already exists"):
-        cat.add_columns("t", {"v": "long"})
-    with pytest.raises(ValueError, match="absent"):
-        cat.drop_columns("t", ["nope"])
-    # drop: projection-only; stats for the dropped column vanish
-    m = cat.drop_columns("t", ["v"])
-    assert set(cat.read("t").columns) == {"id", "tag", "score"}
-    assert m["stats_columns"] == ["id"]
-    assert all("v" not in e.get("stats", {}) for e in m["lineage"])
-    # compaction physically materializes the evolved schema
-    cat.compact("t", target_files=1, lineage_key="id")
-    assert set(cat.read("t").columns) == {"id", "tag", "score"}
-    assert cat.read("t").count() == 9
-    with pytest.raises(ValueError, match="every column"):
-        cat.drop_columns("t", ["id", "tag", "score"])
+    part = spark.range(30).selectExpr("id", "id % 3 AS k").repartition(2)
+    m = cat.write("p", part, partition_by=["k"], lineage_key="id")
+    files = [e["file"] for e in m["lineage"]]
+    assert len(files) == 6                     # 2 tasks x 3 partitions
+    assert len(set(files)) == len(files)
+    tdir = os.path.join(str(tmp_path / "wh"), "p")
+    for e in m["lineage"]:
+        assert os.path.isfile(os.path.join(tdir, e["dir"], e["file"]))
+    assert sum(e["row_count"] for e in m["lineage"]) == 30

@@ -182,7 +182,7 @@ def test_stream_with_keeper_assignment(spark, tmp_path):
 
 
 def test_stream_dedup_with_auto_compaction(spark, tmp_path):
-    """compact_every=1: the index tables compact + expire after every
+    """compact_policy={}: the index tables compact + expire after every
     micro-batch, and the streamed answer (pairs AND index content AND
     the replay guard) is identical to the maintenance-free run —
     auto-maintenance must be invisible to the dedup semantics."""
@@ -196,7 +196,7 @@ def test_stream_dedup_with_auto_compaction(spark, tmp_path):
     wh = str(tmp_path / "wh")
     stream_documents(spark, str(src) + "/*", wh,
                      str(tmp_path / "ckpt"), threshold=0.9,
-                     compact_every=1, **PARAMS)
+                     compact_policy={}, **PARAMS)
 
     got = {(r["id_a"], r["id_b"], r["est_jaccard"])
            for r in streamed_pairs(spark, wh).collect()}

@@ -138,7 +138,7 @@ def test_stream_semantic_keepers_cross_batch_merge(spark, tmp_path):
 
 
 def test_stream_semantic_with_auto_compaction(spark, tmp_path):
-    """compact_every=1: identical pairs, vec table compacted to one
+    """compact_policy={}: identical pairs, vec table compacted to one
     snapshot with the replay guard carried over; the single-write
     centroid table is left alone."""
     import os
@@ -147,7 +147,7 @@ def test_stream_semantic_with_auto_compaction(spark, tmp_path):
     wh = str(tmp_path / "wh")
     stream_embeddings(spark, str(src) + "/*", wh,
                       str(tmp_path / "ckpt"), threshold=0.97,
-                      compact_every=1, **PARAMS)
+                      compact_policy={}, **PARAMS)
 
     got = {(r["id_a"], r["id_b"], r["centroid"], r["cosine"])
            for r in streamed_semantic_pairs(spark, wh).collect()}
