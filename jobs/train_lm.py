@@ -7,8 +7,7 @@ LM quality gates consume.
         [--min-count 1]
 
 Writes the ``(token, cnt)`` table as parquet (one row per token) and
-prints one JSON stats line.  Consumers: ``jobs/curate.py --lm``,
-``StreamingCurator(lm_path=..., max_avg_nll=...)`` and
+prints one JSON stats line.  Consumers: ``jobs/curate.py --lm`` and
 ``mc2skos_spark.functions.lm.lm_nll_scores(lm=...)`` — the production
 CCNet shape where the LM is trained ONCE on a trusted corpus snapshot
 and every scoring run is a plain equi-join against it.

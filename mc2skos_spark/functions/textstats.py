@@ -360,13 +360,10 @@ def profile_and_gate(df: DataFrame, min_quality: float = 0.0,
                      max_top_bigram: float = 1.0,
                      id_col: str = "doc_id",
                      text_col: str = "text") -> DataFrame:
-    """The curation profile + quality gate shared by the batch CLI
-    (``jobs/curate.py``) and the streaming curator
-    (``streaming/curate_stream.py``) — one definition so the two paths
-    cannot silently diverge: per-doc token count, quality score,
-    language guess and top-bigram repetition, filtered to
-    ``quality >= min_quality`` and ``top_bigram_frac <=
-    max_top_bigram``.
+    """The curation profile + quality gate of ``jobs/curate.py``:
+    per-doc token count, quality score, language guess and top-bigram
+    repetition, filtered to ``quality >= min_quality`` and
+    ``top_bigram_frac <= max_top_bigram``.
 
     Single-pass shape (round 7): the text is tokenized ONCE per casing
     (raw + lowercased), both arrays bound to lambda variables, and all
@@ -398,14 +395,3 @@ def profile_and_gate(df: DataFrame, min_quality: float = 0.0,
             .filter((F.col("quality") >= min_quality) &
                     (F.col("top_bigram_frac") <= max_top_bigram)))
 
-
-def text_profile(documents: DataFrame, text_col: str = "text") -> DataFrame:
-    """One row per document with all derived text features."""
-    col = F.col(text_col)
-    return documents.select(
-        "*",
-        token_count(col).alias("n_tokens"),
-        quality_score(col).alias("quality"),
-        langid_guess(col).alias("lang_guess"),
-        fingerprint(col).alias("fingerprint"),
-    )

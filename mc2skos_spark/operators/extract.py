@@ -27,26 +27,14 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ..core.api import build_vocabularies
 from ..core.errors import InvalidRecordError
 from ..core.extract import extract_concept
 from ..core.marcxml import parse_record_xml
 from ..core.triples import concept_to_triples
-from ..core.vocab import Vocabularies
 from ..plans import schemas
 
 _EXTRACTED_COLS = [f.name for f in schemas.EXTRACTED.fields]
-
-
-def _build_vocabularies(default_scheme) -> Vocabularies:
-    vocabularies = Vocabularies()
-    if default_scheme:
-        if isinstance(default_scheme, dict):
-            # CLI parity: --uri/--whitespace define an ad-hoc scheme
-            # (reference mc2skos.py:221-227 → vocabularies.py)
-            vocabularies.set_default_scheme(**default_scheme)
-        else:
-            vocabularies.set_default_scheme(scheme=default_scheme)
-    return vocabularies
 
 
 def _extract_batches(options: dict, default_scheme: str | None,
@@ -65,7 +53,7 @@ def _extract_batches(options: dict, default_scheme: str | None,
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         if options_by_key is None:
-            shared = (options, _build_vocabularies(default_scheme))
+            shared = (options, build_vocabularies(default_scheme))
             lookup = None
         else:
             shared = None
@@ -74,7 +62,7 @@ def _extract_batches(options: dict, default_scheme: str | None,
             def lookup(key):
                 if key not in built:
                     opts, scheme = options_by_key[key]
-                    built[key] = (dict(opts), _build_vocabularies(scheme))
+                    built[key] = (dict(opts), build_vocabularies(scheme))
                 return built[key]
         for batch in batches:
             keys = (batch["opt_key"] if lookup is not None

@@ -211,35 +211,6 @@ def _ntz_micros(c):
     return event_micros(c)
 
 
-def suggest_bucket_width(intervals: DataFrame, start: str, end: str,
-                         percentile: float = 0.75) -> int:
-    """Data-derived ``bucket_width`` for :func:`interval_join`: the
-    given percentile of interval lengths (inclusive, ``end - start +
-    1``), never below 1.
-
-    One ``percentile_approx`` aggregate over the interval table (a
-    single scan, sketch-combined map-side — cheap even at 100 TB; run
-    it on whichever side has the more typical lengths, or on a
-    sample).  Rationale: a width near the common interval length keeps
-    the explosion factor ``len/width + 1`` at ~2 for most rows while
-    longer outliers pay proportionally — the same heuristic the
-    Databricks range-join hint documentation gives for picking its
-    bin size.  A mis-guessed width never changes RESULTS (the anchor
-    rule keeps each pair exactly once at any width — pytest-pinned);
-    it only moves the cost knob, so using this helper is purely an
-    efficiency default.
-    """
-    row = (intervals
-           .filter(F.col(start) <= F.col(end))
-           .agg(F.percentile_approx(
-               F.col(end).cast("long") - F.col(start).cast("long") + 1,
-               float(percentile)).alias("w"))
-           .first())
-    if row is None or row["w"] is None:
-        return 1
-    return max(int(row["w"]), 1)
-
-
 def interval_join(left: DataFrame, right: DataFrame,
                   on: Sequence[str],
                   l_start: str, l_end: str,

@@ -31,9 +31,7 @@ from pyspark.sql import DataFrame, functions as F
 
 # A standalone serialized MARC record span, any namespace prefix.
 RECORD_SPAN_PATTERN = r"(?s)<(?:\w+:)?record[\s>].*?</(?:\w+:)?record>"
-# shared with the stateful-streaming path: record_id derivation must be
-# byte-identical between batch and streaming (tested), so there is ONE
-# 001-controlfield pattern
+# The 001 controlfield value that record_id is derived from.
 CONTROL_001_PATTERN = r'<(?:\w+:)?controlfield[^>]*tag="001"[^>]*>([^<]*)<'
 
 

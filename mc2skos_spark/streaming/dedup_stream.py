@@ -12,12 +12,12 @@ micro-batch:
 3. appends the batch's signatures/buckets into the index
    (``append_batch_to_index``, guarded per table by ``last_batch_id``).
 
-Replay idempotence (the same contract as ``IncrementalExtractor``):
-the pairs snapshot is written BEFORE the index appends, pair
-computation reads only pre-batch index state, and each append skips
-itself when its table already carries this batch id — so a kill at any
-point replays to byte-identical state.  The first batch bootstraps an
-empty index (same code path; batch-internal pairs still emitted).
+Replay idempotence: the pairs snapshot is written BEFORE the index
+appends, pair computation reads only pre-batch index state, and each
+append skips itself when its table already carries this batch id — so
+a kill at any point replays to byte-identical state.  The first batch
+bootstraps an empty index (same code path; batch-internal pairs still
+emitted).
 """
 
 from __future__ import annotations
@@ -27,18 +27,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.incremental import (BUCKET_SUFFIX, KEEPER_SUFFIX,
-                                     REMAP_SUFFIX, SIG_SUFFIX, VEC_SUFFIX,
-                                     append_batch_to_index,
-                                     append_batch_to_semantic_index,
-                                     batch_index_rows, batch_vec_rows,
+                                     REMAP_SUFFIX, SIG_SUFFIX,
+                                     append_batch_to_index, batch_index_rows,
                                      create_minhash_index,
-                                     create_semantic_index,
-                                     incremental_minhash_pairs,
-                                     incremental_semantic_pairs)
+                                     incremental_minhash_pairs)
 from ..sinks.icebergish import IcebergishCatalog
 
 PAIRS_TABLE = "dedup_pairs_batch_%06d"
-SEM_PAIRS_TABLE = "semdedup_pairs_batch_%06d"
 
 
 class StreamingDeduper:
@@ -147,125 +142,23 @@ class StreamingDeduper:
 
     def _maybe_maintain(self, catalog: IcebergishCatalog) -> None:
         """Compact + expire this index's tables per ``compact_policy``
-        (see __init__).  Only the index's OWN tables (its four known
-        suffixes) are touched — an open-ended prefix match would also
-        sweep up a sibling index named e.g. ``<name>_v2`` in the same
-        warehouse and expire its snapshot history.  Per-batch pair
-        snapshots are single-write tables that never fragment, so they
-        are skipped too."""
-        _maintain_suffixes(catalog, self.name,
-                           (SIG_SUFFIX, BUCKET_SUFFIX, KEEPER_SUFFIX,
-                            REMAP_SUFFIX),
-                           self.compact_policy)
-
-
-def _maintain_suffixes(catalog: IcebergishCatalog, name: str,
-                       suffixes: tuple, compact_policy: dict | None) -> None:
-    """Shared per-batch maintenance for the streaming handlers: each of
-    the index's existing tables goes through ``catalog.maintain`` with
-    the ``compact_policy`` kwargs — the no-op case costs one manifest
-    JSON read per table, and only the tables whose stats trip the
-    policy are rewritten.  ``None`` disables maintenance."""
-    if compact_policy is None:
-        return
-    existing = set(catalog.tables(prefix=name))
-    for table in (name + s for s in suffixes):
-        if table in existing:
-            catalog.maintain(table, keep_last=1, **compact_policy)
-
-
-class StreamingSemanticDeduper:
-    """foreachBatch handler for the EMBEDDING stream — the SemDeDup
-    twin of :class:`StreamingDeduper`.  Persisted state is the
-    ``(id, centroid, vn)`` vec table plus the centroid table picked
-    from the FIRST batch and held fixed (see
-    ``functions/incremental.py``'s semantic-index section); each
-    micro-batch is assigned via the broadcast centroid matmul-argmax
-    and scored against its centroid buckets only.  Same replay /
-    bootstrap / checkpoint-mismatch / maintenance contracts as the
-    MinHash handler."""
-
-    def __init__(self, warehouse: str, name: str = "docs_semantic",
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 threshold: float = 0.97, num_centroids: int = 16,
-                 centroid_mod: int = 8,
-                 assign_keepers: bool = False,
-                 compact_policy: dict | None = None):
-        self.warehouse = warehouse
-        self.name = name
-        self.id_col = id_col
-        self.vec_col = vec_col
-        self.threshold = threshold
-        self.params = {"num_centroids": num_centroids,
-                       "centroid_mod": centroid_mod}
-        self.assign_keepers = assign_keepers
-        self.compact_policy = compact_policy
-
-    def replay_applied(self, batch: DataFrame, batch_id: int,
-                       catalog: IcebergishCatalog | None = None) -> bool:
-        """Bootstrap when absent (EMPTY vec table + centroids from this
-        first batch — it then flows through the same incremental path
-        as every later batch); True on a genuine replay; raise on a
-        checkpoint/warehouse mismatch (never-seen ids under an
-        already-applied batch id)."""
-        catalog = catalog or IcebergishCatalog(self.warehouse,
-                                               batch.sparkSession)
-        vecs = catalog.current_manifest(self.name + VEC_SUFFIX)
-        if vecs is None:
-            create_semantic_index(catalog, self.name, batch.limit(0),
-                                  self.id_col, self.vec_col,
-                                  centroid_source=batch, **self.params)
-            return False
-        if vecs["properties"].get("last_batch_id", -1) >= batch_id:
-            missing = (batch.select(F.col(self.id_col).alias("id"))
-                       .join(catalog.read(self.name + VEC_SUFFIX)
-                             .select("id"), "id", "left_anti")
-                       .limit(1).count())
-            if missing:
-                raise RuntimeError(
-                    "semantic dedup stream checkpoint/warehouse "
-                    "mismatch: batch %d carries ids the index "
-                    "(last_batch_id=%s) has never seen — the stream "
-                    "checkpoint was reset against an existing "
-                    "warehouse.  Restart with the original checkpoint, "
-                    "or a fresh warehouse."
-                    % (batch_id, vecs["properties"].get("last_batch_id")))
-            return True
-        return False
-
-    def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        catalog = IcebergishCatalog(self.warehouse, batch.sparkSession)
-        if self.replay_applied(batch, batch_id, catalog):
+        (see __init__): each existing table goes through
+        ``catalog.maintain`` with the policy kwargs — the no-op case
+        costs one manifest JSON read per table, and only the tables
+        whose stats trip the policy are rewritten.  Only the index's
+        OWN tables (its four known suffixes) are touched — an
+        open-ended prefix match would also sweep up a sibling index
+        named e.g. ``<name>_v2`` in the same warehouse and expire its
+        snapshot history.  Per-batch pair snapshots are single-write
+        tables that never fragment, so they are skipped too."""
+        if self.compact_policy is None:
             return
-        if self.assign_keepers:
-            from ..functions.incremental import (
-                incremental_semantic_keeper_assign)
-            incremental_semantic_keeper_assign(
-                catalog, self.name, batch, self.id_col, self.vec_col,
-                threshold=self.threshold, batch_id=batch_id)
-            self._maybe_maintain(catalog)
-            return
-        # assign the batch ONCE; pair join and index append share it
-        pre = batch_vec_rows(catalog, self.name, batch,
-                             self.id_col, self.vec_col)
-        pairs = incremental_semantic_pairs(
-            catalog, self.name, batch, self.id_col, self.vec_col,
-            threshold=self.threshold, commit=False,
-            precomputed=pre).localCheckpoint()
-        catalog.write(SEM_PAIRS_TABLE % batch_id, pairs,
-                      lineage_key="id_a")
-        append_batch_to_semantic_index(catalog, self.name, pre,
-                                       batch_id=batch_id)
-        self._maybe_maintain(catalog)
-
-    def _maybe_maintain(self, catalog: IcebergishCatalog) -> None:
-        """Compact + expire the vec/keeper/remap tables per
-        ``compact_policy``; the centroid table is single-write and
-        never fragments, so it is skipped (same suffix-scoped rule as
-        the MinHash handler)."""
-        _maintain_suffixes(catalog, self.name,
-                           (VEC_SUFFIX, KEEPER_SUFFIX, REMAP_SUFFIX),
-                           self.compact_policy)
+        existing = set(catalog.tables(prefix=self.name))
+        for suffix in (SIG_SUFFIX, BUCKET_SUFFIX, KEEPER_SUFFIX,
+                       REMAP_SUFFIX):
+            if self.name + suffix in existing:
+                catalog.maintain(self.name + suffix, keep_last=1,
+                                 **self.compact_policy)
 
 
 def start_stream(spark: SparkSession, input_dir: str,
@@ -273,9 +166,9 @@ def start_stream(spark: SparkSession, input_dir: str,
                  schema: str | None = None,
                  available_now: bool = True,
                  max_files_per_trigger: int = 1):
-    """Shared readStream → foreachBatch boilerplate for the streaming
-    handlers (dedup, curation).  ``schema`` defaults to the driver
-    documents shape; ``available_now`` drains the source and returns."""
+    """readStream → foreachBatch boilerplate for a streaming handler.
+    ``schema`` defaults to the driver documents shape;
+    ``available_now`` drains the source and returns."""
     source = (spark.readStream
               .schema(schema or "doc_id long, text string")
               .option("maxFilesPerTrigger", str(max_files_per_trigger))
@@ -323,24 +216,3 @@ def streamed_pairs(spark: SparkSession, warehouse: str) -> DataFrame:
     """Union of all committed per-batch pair snapshots."""
     return union_snapshots(spark, warehouse, "dedup_pairs_batch_")
 
-
-def stream_embeddings(spark: SparkSession, input_dir: str,
-                      warehouse: str, checkpoint_dir: str,
-                      schema: str | None = None,
-                      available_now: bool = True,
-                      max_files_per_trigger: int = 1,
-                      **dedup_kwargs):
-    """Start (and by default drain) a streaming SEMANTIC dedup over an
-    embeddings directory."""
-    deduper = StreamingSemanticDeduper(warehouse, **dedup_kwargs)
-    return start_stream(
-        spark, input_dir, checkpoint_dir, deduper.process_batch,
-        schema=schema or "vec_id long, embedding array<double>",
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger)
-
-
-def streamed_semantic_pairs(spark: SparkSession,
-                            warehouse: str) -> DataFrame:
-    """Union of all committed per-batch semantic-pair snapshots."""
-    return union_snapshots(spark, warehouse, "semdedup_pairs_batch_")

@@ -1,59 +1,16 @@
-"""Incremental ingestion via Structured Streaming.
+"""Conversation-completeness gate over transcript turns.
 
-The reference is strictly batch (SURVEY.md §2B: iterparse streaming is
-an I/O detail, not event-time semantics), so this module adds the one
-streaming capability a 10^12-turn pipeline actually needs: *incremental
-processing of newly-landed transcript partitions* without reprocessing
-history.
-
-Design: ``readStream`` over the transcripts directory → watermarked
-grouping is NOT used for reassembly (a conversation may span file
-batches; correctness first) — instead each micro-batch is routed through
-``foreachBatch`` where we:
-
-1. restrict to conversations fully contained in the merged view of the
-   batch plus carried-forward pending turns (completeness = contiguous
-   0..max turn range ending at the terminal marker);
-2. run the exact batch operators (reassembly → extraction) — one code
-   path, no semantic fork between batch and streaming;
-3. append committed snapshots to the Icebergish catalog.
-
-Pending-conversation state is **versioned per batch id**, never
-rewritten wholesale:
-
-* ``pend_add_batch_N`` — only batch N's *new* incomplete turns (O(batch
-  delta) written per batch, not O(total pending));
-* ``done_convs_batch_N`` — conv_ids completed at batch N (their turns in
-  older deltas are excluded at read time by one broadcast anti-join);
-* ``pend_compact_N`` — every ``compact_every`` batches the full pending
-  state is compacted so the read-side union stays bounded.
-
-Because batch N writes only tables keyed by N and reads only tables
-keyed <N, a crash-and-replay of batch N recomputes from exactly the
-pre-batch state and overwrites its own snapshots with identical content
-— foreachBatch replay is idempotent by construction (the earlier shape
-overwrote one global ``pending_turns`` table before the stream
-checkpoint committed, so a replay saw post-batch state and lost the
-turns of conversations completed via carried pending).
+A conversation's turns can land in different files, and a file-based
+micro-batch can deliver a later turn before an earlier one, so a
+conversation may only be reassembled and extracted once all of its
+turns are present.  :func:`complete_conversations` is that predicate;
+the registered query ``st_completeness_gate`` runs it batch-expressed
+against a DuckDB oracle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-from ..operators.extract import (extract_triples, quarantine_from_extracted,
-                                 triples_from_extracted)
-from ..plans import schemas
-from ..sinks.icebergish import IcebergishCatalog
-from ..sources.transcripts import reassemble_records
-
-_PEND_ADD = "pend_add_batch_%06d"
-_DONE = "done_convs_batch_%06d"
-_COMPACT = "pend_compact_%06d"
-
-
-def _table_id(name: str) -> int:
-    return int(name.rsplit("_", 1)[-1])
+from pyspark.sql import DataFrame, functions as F
 
 
 def complete_conversations(turns: DataFrame) -> DataFrame:
@@ -78,139 +35,3 @@ def complete_conversations(turns: DataFrame) -> DataFrame:
             .filter((F.col("done_idx") == F.col("max_idx")) &
                     (F.col("n_turns") == F.col("max_idx") + 1))
             .select("conv_id"))
-
-
-class IncrementalExtractor:
-    """foreachBatch handler with conversation-completeness gating."""
-
-    def __init__(self, warehouse: str, options: dict | None = None,
-                 default_scheme: str | None = None,
-                 compact_every: int = 4):
-        self.warehouse = warehouse
-        self.options = dict(options or {})
-        self.default_scheme = default_scheme
-        self.compact_every = compact_every
-
-    # ------------------------------------------------------ state reads
-
-    def _pending_before(self, catalog: IcebergishCatalog,
-                        batch_id: int) -> DataFrame | None:
-        """Pending turns as of the start of ``batch_id``: latest compact
-        before it, plus later per-batch add-deltas, minus conversations
-        completed since the compact.  Reads only tables keyed < batch_id
-        so a replayed batch reconstructs its exact pre-batch state.
-
-        A done marker erases only pending rows ADDED AT OR BEFORE its
-        own batch (the rows its completion actually consumed): if the
-        same conv_id delivers fresh turns in a later batch, those must
-        survive — a blanket conv_id anti-join would drop them or not
-        depending on compaction cadence (nondeterministic data loss).
-        """
-        compacts = [t for t in catalog.tables("pend_compact_")
-                    if _table_id(t) < batch_id]
-        base_id = _table_id(compacts[-1]) if compacts else -1
-        parts = []
-        if compacts:
-            # compact rows survived every done ≤ base_id → tag with it
-            parts.append(catalog.read(compacts[-1])
-                         .withColumn("__add_batch", F.lit(base_id)))
-        parts += [catalog.read(t)
-                  .withColumn("__add_batch", F.lit(_table_id(t)))
-                  for t in catalog.tables("pend_add_batch_")
-                  if base_id < _table_id(t) < batch_id]
-        if not parts:
-            return None
-        state = parts[0]
-        for p in parts[1:]:
-            state = state.unionByName(p)
-        dones = [catalog.read(t)
-                 .withColumn("__done_batch", F.lit(_table_id(t)))
-                 for t in catalog.tables("done_convs_batch_")
-                 if base_id < _table_id(t) < batch_id]
-        if dones:
-            done = dones[0]
-            for d in dones[1:]:
-                done = done.unionByName(d)
-            done = F.broadcast(done.groupBy("conv_id").agg(
-                F.max("__done_batch").alias("__done_batch")))
-            state = state.join(
-                done,
-                (state["conv_id"] == done["conv_id"]) &
-                (done["__done_batch"] >= state["__add_batch"]),
-                "left_anti")
-        return state.drop("__add_batch")
-
-    # ------------------------------------------------------- batch step
-
-    def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        catalog = IcebergishCatalog(self.warehouse, spark)
-
-        state = self._pending_before(catalog, batch_id)
-        merged = batch if state is None else batch.unionByName(state)
-        # (conv_id, turn_idx) dedup tolerates re-delivered rows on replay
-        merged = merged.dropDuplicates(["conv_id", "turn_idx"])
-
-        done = complete_conversations(merged)
-        complete = merged.join(F.broadcast(done), "conv_id", "semi")
-
-        extracted = extract_triples(
-            reassemble_records(complete), self.options, self.default_scheme)
-        catalog.write("triples_batch_%06d" % batch_id,
-                      triples_from_extracted(extracted),
-                      lineage_key="subj")
-        catalog.write("quarantine_batch_%06d" % batch_id,
-                      quarantine_from_extracted(extracted),
-                      lineage_key="record_id")
-        catalog.write(_DONE % batch_id, done, lineage_key="conv_id")
-        # delta: only THIS batch's new incomplete turns
-        pend_add = batch.join(F.broadcast(done), "conv_id", "anti")
-        catalog.write(_PEND_ADD % batch_id, pend_add, lineage_key="conv_id")
-        if self.compact_every and \
-                batch_id % self.compact_every == self.compact_every - 1:
-            pending_full = merged.join(F.broadcast(done), "conv_id", "anti")
-            catalog.write(_COMPACT % batch_id, pending_full,
-                          lineage_key="conv_id")
-
-
-def stream_transcripts(spark: SparkSession, input_dir: str, warehouse: str,
-                       checkpoint_dir: str,
-                       options: dict | None = None,
-                       default_scheme: str | None = None,
-                       available_now: bool = True,
-                       max_files_per_trigger: int = 16,
-                       compact_every: int = 4):
-    """Start (and by default drain) an incremental extraction stream.
-
-    ``available_now=True`` processes everything currently in the
-    directory then stops — the test/backfill mode; pass False for a
-    continuously-running ingestion.
-    """
-    extractor = IncrementalExtractor(warehouse, options, default_scheme,
-                                     compact_every=compact_every)
-    source = (spark.readStream.schema(schemas.TRANSCRIPTS)
-              .option("maxFilesPerTrigger", str(max_files_per_trigger))
-              .parquet(input_dir))
-    writer = (source.writeStream
-              .foreachBatch(extractor.process_batch)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
-    return writer.start()
-
-
-def streamed_triples(spark: SparkSession, warehouse: str) -> DataFrame:
-    """Union of all committed per-batch triple snapshots."""
-    catalog = IcebergishCatalog(warehouse, spark)
-    tables = catalog.tables("triples_batch_")
-    out = None
-    for t in tables:
-        df = catalog.read(t)
-        out = df if out is None else out.unionByName(df)
-    if out is None:
-        raise FileNotFoundError("no streamed triple snapshots in %s"
-                                % warehouse)
-    return out.dropDuplicates(["subj", "pred", "obj", "obj_lang",
-                               "obj_datatype", "component_pos"])

@@ -86,29 +86,3 @@ def stream_interval_join(left: DataFrame, right: DataFrame,
     # outer rows anyway)
     return joined.drop(rhs[key_col])
 
-
-def watermarked_exact_dedup(events: DataFrame, keys,
-                            ts_col: str = "ts",
-                            watermark_delay: str = "10 minutes"
-                            ) -> DataFrame:
-    """Native streaming exact dedup: ``dropDuplicatesWithinWatermark``
-    keeps the FIRST arrival per key and drops re-deliveries arriving
-    within the watermark window — the at-least-once → exactly-once
-    repair for replayed sources (Kafka redeliveries, retried file
-    drops), complementing the persisted-index dedupers in
-    ``dedup_stream.py`` whose state must outlive any watermark.
-
-    State is keyed by ``keys`` and EVICTED once the watermark passes a
-    key's last-seen event time + delay — bounded by stream rate ×
-    delay, independent of history (a plain ``dropDuplicates`` on a
-    stream would grow state forever).  A duplicate arriving AFTER
-    eviction is re-emitted; that is the documented contract — callers
-    needing cross-epoch exactness use the index dedupers.  On a batch
-    frame this degrades to plain ``dropDuplicates`` over the keys."""
-    if isinstance(keys, str):
-        keys = [keys]
-    events = _as_instant(events, ts_col)
-    if not events.isStreaming:
-        return events.dropDuplicates(list(keys))
-    return (events.withWatermark(ts_col, watermark_delay)
-            .dropDuplicatesWithinWatermark(list(keys)))

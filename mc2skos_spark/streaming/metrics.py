@@ -4,9 +4,9 @@ Event-time analytics for the ingestion stream: turns/records per
 tumbling event-time window with a watermark bounding how late a turn
 may arrive before its window is finalized and dropped from state —
 the standard Structured Streaming late-data contract.  (Reassembly
-itself deliberately does NOT use watermarks: conversation completeness
-is a correctness gate, handled by the stateful operator / foreachBatch
-pending-carry instead.)
+deliberately does NOT use watermarks: conversation completeness is a
+correctness gate, ``streaming/incremental.complete_conversations``,
+not a lateness bound.)
 """
 
 from __future__ import annotations

@@ -15,7 +15,6 @@ from mc2skos_spark.functions.multimodal import (extract_media_features,
                                                 synth_media)
 from mc2skos_spark.functions.similarity import (cosine_topk, ivf_topk,
                                                 lsh_bucketed_topk)
-from mc2skos_spark.functions.textstats import text_profile
 
 pytestmark = pytest.mark.spark
 
@@ -30,16 +29,6 @@ def documents(spark):
 @pytest.fixture(scope="module")
 def embeddings(spark):
     return spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet")).cache()
-
-
-def test_text_profile(documents):
-    prof = text_profile(documents)
-    row = prof.orderBy("doc_id").first()
-    assert row["n_tokens"] == len(row["text"].split())
-    assert 0.0 <= row["quality"] <= 1.0
-    assert row["lang_guess"] is not None
-    # fingerprint is order-insensitive but content-sensitive
-    assert prof.select("fingerprint").distinct().count() > 1
 
 
 def test_exact_duplicates(spark, documents):

@@ -1,4 +1,4 @@
-"""Ordered Turtle / NDJSON sinks and the incremental streaming path."""
+"""Ordered Turtle / NDJSON / JSKOS sinks."""
 
 import json
 
@@ -10,12 +10,8 @@ from mc2skos_spark.plans import schemas
 from mc2skos_spark.sinks.serializers import (triples_to_ndjson,
                                              triples_to_turtle,
                                              turtle_sort_key)
-from mc2skos_spark.sources.synth import (fixture_records,
-                                         make_transcript_rows,
-                                         synth_marc_records)
+from mc2skos_spark.sources.synth import fixture_records, make_transcript_rows
 from mc2skos_spark.sources.transcripts import reassemble_records
-from mc2skos_spark.streaming.incremental import (stream_transcripts,
-                                                 streamed_triples)
 
 pytestmark = pytest.mark.spark
 
@@ -93,121 +89,3 @@ def test_jskos_concept_shape(spark, ddc_triples):
     assert any(k.startswith("http://data.ub.uio.no/webdewey-terms#")
                for k in concept)
 
-
-def test_streaming_incremental_matches_batch(spark, tmp_path):
-    records = synth_marc_records(30, seed=31)
-    rows = make_transcript_rows(records, seed=32)
-    transcripts = spark.createDataFrame(rows, schema=schemas.TRANSCRIPTS)
-
-    input_dir = str(tmp_path / "in")
-    # several files so the stream sees multiple batches
-    transcripts.repartition(8).write.parquet(input_dir)
-    warehouse = str(tmp_path / "wh")
-    # 1 file per trigger over 8 files → 8 micro-batches, so the
-    # pending-conversation carry-forward is genuinely exercised
-    stream_transcripts(spark, input_dir, warehouse,
-                       str(tmp_path / "ckpt"), available_now=True,
-                       max_files_per_trigger=1, compact_every=3)
-
-    streamed = {(r["subj"], r["pred"], r["obj"], r["obj_lang"],
-                 r["obj_datatype"], r["component_pos"])
-                for r in streamed_triples(spark, warehouse).collect()}
-    batch = {(r["subj"], r["pred"], r["obj"], r["obj_lang"],
-              r["obj_datatype"], r["component_pos"])
-             for r in triples_from_extracted(
-                 extract_triples(reassemble_records(transcripts)))
-             .collect()}
-    assert streamed == batch
-
-    # pending state is APPENDED per batch (delta tables keyed by batch
-    # id), never rewritten wholesale: 8 micro-batches → 8 add-deltas,
-    # each with exactly ONE committed snapshot, plus periodic compacts
-    from mc2skos_spark.sinks.icebergish import IcebergishCatalog
-    catalog = IcebergishCatalog(warehouse, spark)
-    adds = catalog.tables("pend_add_batch_")
-    assert len(adds) == 8, adds
-    for t in adds:
-        assert catalog.current_manifest(t)["snapshot_id"] == 0, \
-            "pending delta %s was rewritten" % t
-    compacts = catalog.tables("pend_compact_")
-    assert compacts == ["pend_compact_000002", "pend_compact_000005"]
-    # per-batch pending writes are O(batch delta): each add-delta holds
-    # at most the rows of one input file, not the accumulated pending
-    per_file_rows = transcripts.count() / 8
-    for t in adds:
-        assert catalog.current_manifest(t)["row_count"] <= \
-            per_file_rows * 1.5 + 10
-
-
-def test_streaming_conv_id_reuse_after_completion(spark, tmp_path):
-    """A done marker must erase only the pending rows its completion
-    consumed (adds with batch id ≤ the marker's): turns for the SAME
-    conv_id arriving in later batches survive and complete on their
-    own.  (A blanket conv_id anti-join dropped them or not depending on
-    compaction cadence — nondeterministic loss.)"""
-    from mc2skos_spark.streaming.incremental import IncrementalExtractor
-
-    recs = synth_marc_records(2, seed=91, duplicate_every=0)
-    rows_a = make_transcript_rows(recs[:1], seed=92)  # conv-000000
-    rows_b = make_transcript_rows(recs[1:], seed=93)  # conv-000000 again
-    max_b = max(r[1] for r in rows_b)
-    b_first = [r for r in rows_b if r[1] <= max_b // 2]
-    b_rest = [r for r in rows_b if r[1] > max_b // 2]
-
-    warehouse = str(tmp_path / "wh")
-    extractor = IncrementalExtractor(warehouse, compact_every=0)
-    mk = lambda rows: spark.createDataFrame(rows,
-                                            schema=schemas.TRANSCRIPTS)
-    extractor.process_batch(mk(rows_a), 0)    # conv completes → done_0
-    extractor.process_batch(mk(b_first), 1)   # same conv_id, new turns
-    extractor.process_batch(mk(b_rest), 2)    # completes the reuse
-
-    streamed = {(r["subj"], r["pred"], r["obj"])
-                for r in streamed_triples(spark, warehouse).collect()}
-    expected = set()
-    for rows in (rows_a, rows_b):
-        expected |= {(r["subj"], r["pred"], r["obj"])
-                     for r in triples_from_extracted(extract_triples(
-                         reassemble_records(mk(rows)))).collect()}
-    assert streamed == expected
-
-
-def test_streaming_replay_idempotent(spark, tmp_path):
-    """Crash-and-replay of any micro-batch must reproduce its snapshots
-    byte-for-byte: batch N reads only state keyed <N and writes only
-    tables keyed N, so recomputation is deterministic even though the
-    original run already consumed carried-pending turns."""
-    from mc2skos_spark.sinks.icebergish import IcebergishCatalog
-    from mc2skos_spark.streaming.incremental import IncrementalExtractor
-
-    records = synth_marc_records(18, seed=71)
-    rows = make_transcript_rows(records, seed=72)
-    transcripts = spark.createDataFrame(
-        rows, schema=schemas.TRANSCRIPTS).cache()
-    warehouse = str(tmp_path / "wh")
-    extractor = IncrementalExtractor(warehouse, compact_every=2)
-
-    # drive foreachBatch by hand with a deterministic 5-way split
-    chunks = [transcripts.filter(F.crc32(F.col("conv_id")) % 5 == i).cache()
-              for i in range(5)]
-    for i, chunk in enumerate(chunks):
-        extractor.process_batch(chunk, i)
-
-    catalog = IcebergishCatalog(warehouse, spark)
-
-    def table_rows(name):
-        return frozenset(map(tuple, catalog.read(name).collect()))
-
-    snap_before = {t: table_rows(t) for t in catalog.tables("")}
-    streamed_before = {tuple(r) for r in
-                       streamed_triples(spark, warehouse).collect()}
-
-    # replay batch 3 (a mid-stream batch whose original run consumed
-    # pending turns carried from batches 0-2)
-    extractor.process_batch(chunks[3], 3)
-
-    for name, before in snap_before.items():
-        assert table_rows(name) == before, "%s diverged on replay" % name
-    streamed_after = {tuple(r) for r in
-                      streamed_triples(spark, warehouse).collect()}
-    assert streamed_after == streamed_before

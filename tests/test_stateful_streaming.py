@@ -1,12 +1,9 @@
-"""applyInPandasWithState reassembly: streaming-native output must equal
-the batch reassembly byte-for-byte."""
+"""Watermarked windowed turn-rate metrics over a transcript file stream."""
 
 import pytest
 
 from mc2skos_spark.plans import schemas
 from mc2skos_spark.sources.synth import make_transcript_rows, synth_marc_records
-from mc2skos_spark.sources.transcripts import reassemble_records
-from mc2skos_spark.streaming.stateful import reassemble_stream
 
 pytestmark = pytest.mark.spark
 
@@ -43,83 +40,3 @@ def test_watermarked_turn_rate_metrics(spark, tmp_path):
     assert row["payload_turns"] <= row["turns"]
     assert row["window_end"] > row["window_start"]
 
-
-def test_stateful_stream_reassembly_equals_batch(spark, tmp_path):
-    records = synth_marc_records(24, seed=41)
-    rows = make_transcript_rows(records, seed=42)
-    transcripts = spark.createDataFrame(rows, schema=schemas.TRANSCRIPTS)
-
-    input_dir = str(tmp_path / "in")
-    # many small files → turns of one conversation span micro-batches
-    transcripts.repartition(10).write.parquet(input_dir)
-
-    stream = (spark.readStream.schema(schemas.TRANSCRIPTS)
-              .option("maxFilesPerTrigger", "2")
-              .parquet(input_dir))
-    out_dir = str(tmp_path / "out")
-    query = (reassemble_stream(stream).writeStream
-             .format("parquet")
-             .option("path", out_dir)
-             .option("checkpointLocation", str(tmp_path / "ckpt"))
-             .trigger(availableNow=True)
-             .start())
-    query.awaitTermination()
-
-    streamed = {(r["record_id"], r["record_xml"])
-                for r in spark.read.parquet(out_dir).collect()}
-    batch = {(r["record_id"], r["record_xml"])
-             for r in reassemble_records(transcripts).collect()}
-    assert streamed == batch
-    assert len(streamed) >= 24
-
-
-def test_stateful_mid_done_and_null_text_match_batch(spark, tmp_path):
-    """Two batch/streaming divergence regressions: a mid-conversation
-    assistant 'done' turn must not mask the terminal marker when turns
-    arrive out of order (done_idx = max, like the batch F.max gate), and
-    a NULL-text payload turn must behave like array_join (contribute
-    nothing) instead of crashing the join over state."""
-    from datetime import datetime
-    xml = ('<record xmlns="http://www.loc.gov/MARC21/slim">'
-           '<leader>00000nw  a2200000n  4500</leader>'
-           '<controlfield tag="001">mid1</controlfield>'
-           '<controlfield tag="008">091203aaaaaaaa</controlfield>'
-           '<datafield tag="084" ind1="0" ind2=" ">'
-           '<subfield code="a">ddc</subfield>'
-           '<subfield code="c">23</subfield></datafield>'
-           '<datafield tag="153" ind1=" " ind2=" ">'
-           '<subfield code="a">111</subfield>'
-           '<subfield code="j">Caption</subfield></datafield>'
-           '</record>')
-    ts = datetime(2026, 1, 1)
-    half = len(xml) // 2
-    rows = [
-        ("c0", 0, "user", "export please", None, ts),
-        ("c0", 1, "assistant", "done", None, ts),      # mid-conv 'done'
-        ("c0", 2, "tool", xml[:half], "marc_export", ts),
-        ("c0", 3, "tool", None, "marc_export", ts),    # NULL payload
-        ("c0", 4, "tool", xml[half:], "marc_export", ts),
-        ("c0", 5, "assistant", "done", None, ts),      # terminal marker
-    ]
-    transcripts = spark.createDataFrame(rows, schema=schemas.TRANSCRIPTS)
-    input_dir = str(tmp_path / "in2")
-    # one row per file, filename order ≠ turn order → the terminal
-    # 'done' is processed BEFORE the mid-conversation one
-    for i, row in enumerate(reversed(rows)):
-        spark.createDataFrame([row], schema=schemas.TRANSCRIPTS) \
-            .coalesce(1).write.parquet("%s/f%02d" % (input_dir, i))
-    stream = (spark.readStream.schema(schemas.TRANSCRIPTS)
-              .option("maxFilesPerTrigger", "1")
-              .parquet(input_dir + "/*"))
-    out_dir = str(tmp_path / "out2")
-    query = (reassemble_stream(stream).writeStream
-             .format("parquet").option("path", out_dir)
-             .option("checkpointLocation", str(tmp_path / "ckpt2"))
-             .trigger(availableNow=True).start())
-    query.awaitTermination()
-    streamed = {(r["record_id"], r["record_xml"])
-                for r in spark.read.parquet(out_dir).collect()}
-    batch = {(r["record_id"], r["record_xml"])
-             for r in reassemble_records(transcripts).collect()}
-    assert streamed == batch
-    assert streamed == {("mid1", xml)}

@@ -111,25 +111,3 @@ def test_batch_frame_agnostic_and_guards(spark):
     with pytest.raises(ValueError, match="within"):
         stream_interval_join(a, o, within="10; DROP TABLE")
 
-
-def test_watermarked_exact_dedup_stream_and_batch(spark, tmp_path):
-    """First arrival per key survives; in-window re-deliveries drop;
-    batch frames degrade to plain dropDuplicates."""
-    from mc2skos_spark.streaming.joins import watermarked_exact_dedup
-    b0 = [(1, 100, _ts(0), "a"), (1, 100, _ts(1), "a"),     # dup in-batch
-          (2, 200, _ts(2), "b")]
-    b1 = [(1, 100, _ts(3), "a"),                            # cross-batch dup
-          (3, 300, _ts(4), "c")]
-    stream = _write_stream_batches(spark, tmp_path, "ev", [b0, b1])
-    q = (watermarked_exact_dedup(stream, "event_id",
-                                 watermark_delay="30 minutes")
-         .writeStream.format("parquet")
-         .option("path", str(tmp_path / "res"))
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    rows = spark.read.parquet(str(tmp_path / "res")).collect()
-    assert sorted(r["event_id"] for r in rows) == [100, 200, 300]
-    # batch degrade
-    batch = spark.createDataFrame(b0 + b1, SCHEMA)
-    assert watermarked_exact_dedup(batch, "event_id").count() == 3

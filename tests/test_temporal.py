@@ -185,12 +185,9 @@ def test_asof_block_salted_hot_key_ties_tolerance_nulls(spark):
         assert salted == base, f"diverged for {kwargs}"
 
 
-def test_interval_join_width_invariance_and_suggestion(spark):
+def test_interval_join_width_invariance(spark):
     """A 10x-wrong bucket_width must return the IDENTICAL pair set
-    (the anchor rule is width-independent), and suggest_bucket_width
-    picks a width near the typical interval length from one
-    percentile aggregate."""
-    from mc2skos_spark.operators.temporal import suggest_bucket_width
+    (the anchor rule is width-independent)."""
     lrows = [(100 * k + i, k, i * 10, i * 10 + 14)
              for k in (1, 2) for i in range(8)]
     left = _ivl(spark, lrows, "l")
@@ -203,14 +200,10 @@ def test_interval_join_width_invariance_and_suggestion(spark):
                                        "ls", "le", "rs", "re",
                                        bucket_width=width).collect()}
 
-    w = suggest_bucket_width(left, "ls", "le")
-    assert w == 15                       # inclusive length of [s, s+14]
+    w = 15                               # inclusive length of [s, s+14]
     exact = pairs(w)
     assert exact and pairs(w * 10) == exact and pairs(max(w // 10, 1)) \
         == exact
-    # degenerate/empty inputs fall back to 1, never 0
-    assert suggest_bucket_width(left.filter(F.lit(False)),
-                                "ls", "le") == 1
 
 
 def test_fixed_band_matches_interval_join(spark):
