@@ -478,11 +478,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             return triples_to_jskos(triples)
         raise RuntimeError("gnd family missing from reference examples")
 
-    # --- streaming completeness gate, batch-expressed: the predicate
-    #     that decides exactly-once extraction in the incremental path
-    #     (streaming/incremental.py — contiguous 0..max turn range AND
-    #     terminal marker at max), run over the events table recast as
-    #     transcript turns.  event_id % 16 gives each user a residue set
+    # --- streaming completeness gate, batch-expressed: the query's own
+    #     predicate (streaming/incremental.complete_conversations — a
+    #     conversation is complete when its turns cover a contiguous
+    #     0..max range AND the max turn carries the terminal marker),
+    #     run over the events table recast as transcript turns.  event_id % 16 gives each user a residue set
     #     that is usually-but-not-always contiguous, and only 'purchase'
     #     events mint the terminal marker, so both halves of the
     #     predicate discriminate (68 of 150 conversations pass at

@@ -92,20 +92,34 @@ def cycle_members(edges: DataFrame) -> DataFrame:
             .select(F.col("src").alias("vertex")))
 
 
+def _broader_edges(triples: DataFrame, skos_ns: str) -> DataFrame:
+    return (triples
+            .filter((F.col("pred") == skos_ns + "broader") &
+                    ~F.col("obj_is_literal"))
+            .select(F.col("subj").alias("src"), F.col("obj").alias("dst")))
+
+
 def broader_cycle_warnings(triples: DataFrame,
                            skos_ns: str =
-                           "http://www.w3.org/2004/02/skos/core#"
-                           ) -> DataFrame:
+                           "http://www.w3.org/2004/02/skos/core#",
+                           closed: bool = False) -> DataFrame:
     """``skos:broader`` cycle report in the warning-channel shape
     ``(record_id, reason)`` — a concept hierarchy must be a DAG, so any
     URI on a broader-cycle is flagged (skosify's hierarchy-cycle check,
-    warn-and-report rather than throw, matching the P7/P8 policy)."""
-    edges = (triples
-             .filter((F.col("pred") == skos_ns + "broader") &
-                     ~F.col("obj_is_literal"))
-             .select(F.col("subj").alias("src"),
-                     F.col("obj").alias("dst")))
-    return cycle_members(edges).select(
+    warn-and-report rather than throw, matching the P7/P8 policy).
+
+    ``closed``: ``triples`` already holds the closure of its broader
+    edges as ``skos:broaderTransitive`` rows (:func:`broader_transitive`
+    unioned in), so the cycle members are its diagonal and the edges
+    are not closed a second time."""
+    if closed:
+        members = (triples
+                   .filter((F.col("pred") == skos_ns + "broaderTransitive")
+                           & (F.col("subj") == F.col("obj")))
+                   .select(F.col("subj").alias("vertex")))
+    else:
+        members = cycle_members(_broader_edges(triples, skos_ns))
+    return members.select(
         F.col("vertex").alias("record_id"),
         F.lit("skos:broader cycle").alias("reason"))
 
@@ -116,11 +130,7 @@ def broader_transitive(triples: DataFrame,
     """Materialize ``skos:broaderTransitive`` triples from the asserted
     ``skos:broader`` edges — the Spark counterpart of skosify's
     hierarchical transitive inference."""
-    edges = (triples
-             .filter((F.col("pred") == skos_ns + "broader") &
-                     ~F.col("obj_is_literal"))
-             .select(F.col("subj").alias("src"), F.col("obj").alias("dst")))
-    closure = transitive_closure(edges)
+    closure = transitive_closure(_broader_edges(triples, skos_ns))
     return closure.select(
         F.col("src").alias("subj"),
         F.lit(skos_ns + "broaderTransitive").alias("pred"),

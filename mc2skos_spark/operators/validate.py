@@ -90,15 +90,19 @@ def drop_redundant_altlabels(triples: DataFrame) -> DataFrame:
     return triples.filter(~alt).unionByName(kept_alts)
 
 
-def validation_warnings(triples: DataFrame) -> DataFrame:
+def validation_warnings(triples: DataFrame,
+                        closed: bool = False) -> DataFrame:
     """The full check-pass report in the warning-channel shape
     ``(record_id, reason)`` (same contract as P7/P8 warnings, keyed by
     concept URI): broader-hierarchy cycles, altLabel/prefLabel
     overlaps, multiple prefLabels per language, and same-scheme shared
-    prefLabels.  Deterministic reasons, deduplicated."""
+    prefLabels.  Deterministic reasons, deduplicated.  ``closed``:
+    ``triples`` already carries its ``skos:broaderTransitive`` closure,
+    whose diagonal gives the cycles without a second closure (see
+    ``closure.broader_cycle_warnings``)."""
     from .closure import broader_cycle_warnings
 
-    cycles = broader_cycle_warnings(triples)
+    cycles = broader_cycle_warnings(triples, closed=closed)
     overlaps = overlapping_labels(triples).select(
         F.col("subj").alias("record_id"),
         F.concat(F.lit("altLabel duplicates prefLabel '"),

@@ -1,12 +1,19 @@
 """The staged KG-construction pipeline with checkpoint + idempotent resume.
 
-Stage DAG (SURVEY.md §3 lifecycle):
+Stage DAG (SURVEY.md §3 lifecycle).  The main chain commits in order on
+the caller's thread; the side outputs (*), tables nothing downstream
+reads, commit on their own threads beside it, and ``run`` joins them:
 
   transcripts ──(0 reassemble)──► records ──(1 extract)──► extracted
-      extracted ──split──► triples_raw + quarantine
-      triples_raw ──(2 canonicalize)──► triples
-      triples ──(3 optional expand)──► triples_expanded
-      triples ──(4 optional transitive)──► + skos:broaderTransitive
+      extracted ──split──► triples_raw, quarantine*, warnings*
+      triples_raw ──(2 canonicalize)──► triples_canonical
+          ──(3 optional expand)──► triples_expanded
+          ──(4 optional transitive)──► triples_transitive
+                                       (+ skos:broaderTransitive)
+          ──(5 publish)──► triples, partitioned by pred_key
+      the step-5 input ──(optional validate)──► validation_warnings*
+          (with transitive on, its broader cycles are the diagonal of
+          the step-4 closure: the edges are closed once per build)
 
 Every stage commits its output to the Icebergish catalog; on re-run a
 stage whose snapshot is already committed *with the same pipeline
@@ -24,7 +31,9 @@ from __future__ import annotations
 
 import hashlib
 import json
+from functools import partial
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.canonicalize import canonical_mapping, rewrite_canonical
@@ -70,22 +79,68 @@ class KgPipeline:
             "validate": validate, "max_ident_freq": max_ident_freq,
         }, sort_keys=True).encode()).hexdigest()[:16]
 
-    def _stage(self, name: str, build, partition_by=None,
-               lineage_key=None) -> DataFrame:
+    def _commit(self, name: str, build, partition_by=None,
+                lineage_key=None) -> str:
+        """Commit stage ``name`` unless its snapshot is already committed
+        under this configuration: ``"ran"`` or ``"resumed"``."""
         manifest = self.catalog.current_manifest(name)
         if (manifest is not None and not self.force and
                 manifest.get("properties", {}).get("config_hash")
                 == self.config_hash):
-            self.stage_log.append((name, "resumed"))
-            return self.catalog.read(name)
-        df = build()
-        self.catalog.write(name, df, partition_by=partition_by,
+            return "resumed"
+        self.catalog.write(name, build(), partition_by=partition_by,
                            lineage_key=lineage_key,
                            properties={"config_hash": self.config_hash})
-        self.stage_log.append((name, "ran"))
+        return "ran"
+
+    def _stage(self, name: str, build, partition_by=None,
+               lineage_key=None) -> DataFrame:
+        self.stage_log.append(
+            (name, self._commit(name, build, partition_by, lineage_key)))
         return self.catalog.read(name)
 
     def run(self, transcripts: DataFrame) -> DataFrame:
+        """Run (or resume) every stage; returns the published triples.
+
+        The main chain commits on the caller's thread.  A side stage —
+        a table nothing downstream reads — starts on its own thread as
+        soon as its input is committed, and ``run`` joins every side
+        stage before it returns, re-raising the first side-stage error
+        in program order.  A side thread is an ``InheritableThread``: it
+        carries the caller's Spark local properties (job group,
+        scheduler pool), so ``cancelJobGroup`` and per-group job
+        accounting cover its jobs, and it ends with its stage, which
+        releases its JVM thread."""
+        threads: list[InheritableThread] = []
+        errors: dict[int, BaseException] = {}
+
+        def side_stage(name, build, lineage_key):
+            slot = len(self.stage_log)   # reserved: program order
+            self.stage_log.append((name, ""))
+
+            def commit():
+                try:
+                    self.stage_log[slot] = (
+                        name, self._commit(name, build, None, lineage_key))
+                except BaseException as exc:  # re-raised after the join
+                    errors[slot] = exc
+
+            thread = InheritableThread(commit, session=self.spark)
+            thread.start()
+            threads.append(thread)
+
+        try:
+            published = self._chain(transcripts, side_stage)
+        finally:
+            for thread in threads:
+                thread.join()
+            # a side stage that raised leaves no log entry
+            self.stage_log[:] = [e for e in self.stage_log if e[1]]
+        if errors:
+            raise errors[min(errors)]
+        return published
+
+    def _chain(self, transcripts: DataFrame, side_stage) -> DataFrame:
         records = self._stage(
             "records",
             lambda: reassemble_records(transcripts,
@@ -101,12 +156,11 @@ class KgPipeline:
         triples = self._stage(
             "triples_raw", lambda: triples_from_extracted(extracted),
             lineage_key="subj")
-        self._stage("quarantine",
-                    lambda: quarantine_from_extracted(extracted),
-                    lineage_key="record_id")
-        self._stage("warnings",
-                    lambda: warnings_from_extracted(extracted),
-                    lineage_key="record_id")
+        side_stage("quarantine",
+                   partial(quarantine_from_extracted, extracted),
+                   lineage_key="record_id")
+        side_stage("warnings", partial(warnings_from_extracted, extracted),
+                   lineage_key="record_id")
 
         if self.canonicalize:
             triples = self._stage(
@@ -135,10 +189,13 @@ class KgPipeline:
             # expand, mc2skos.py:198-201): cycle + label reports into
             # their own committed warnings table; triples unchanged
             # (repair is the converter's opt-in, not the pipeline's)
+            # with transitive on, triples already holds the broader
+            # closure: its diagonal gives the cycles (no second closure)
             from ..operators.validate import validation_warnings
-            self._stage("validation_warnings",
-                        lambda: validation_warnings(triples),
-                        lineage_key="record_id")
+            side_stage("validation_warnings",
+                       partial(validation_warnings, triples,
+                               closed=self.transitive),
+                       lineage_key="record_id")
 
         # S6: the published triple store, partitioned by predicate key:
         # a read that filters on pred_key prunes at the directory level

@@ -24,7 +24,9 @@ import json
 import os
 import shutil
 import time
-from urllib.parse import unquote, urlparse
+from urllib.parse import unquote
+
+import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -41,7 +43,7 @@ _STATS_TYPES = ("byte", "short", "int", "bigint", "float", "double",
 
 
 def _stat_key(v):
-    """Normalize a collected min/max (or a caller-side bound) into the
+    """Normalize a footer min/max (or a caller-side bound) into the
     JSON-safe, correctly-ordering comparison domain: numbers stay
     numbers (Python compares int/float natively), date/datetime become
     ISO strings (lexical == chronological), bool becomes int."""
@@ -59,6 +61,84 @@ def _stat_key(v):
         return iso()
     raise TypeError("unsupported file-statistics value type: %r"
                     % type(v).__name__)
+
+
+def _data_files(snap_dir: str) -> list[str]:
+    """The parquet data files of a written snapshot, as sorted paths
+    relative to it.  Spark names files per task, so one task's files in
+    different partition directories share a basename: only the
+    relative path names a file uniquely.  Hidden and ``_``-prefixed
+    entries (``_SUCCESS``, checksums) are not data, as for Spark's
+    reader."""
+    files = []
+    for here, dirs, names in os.walk(snap_dir):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        files += [os.path.relpath(os.path.join(here, n), snap_dir)
+                  for n in names
+                  if n.endswith(".parquet") and not n.startswith(("_", "."))]
+    return sorted(files)
+
+
+def _footer_stats(path: str, columns: set[str]) -> tuple[int, dict]:
+    """Row count and per-column ``(min, max, nulls)`` of one parquet
+    file, read from its footer alone, over every row group.  A column
+    is absent from the dict when the footer does not hold its stats: a
+    partition column (it lives in the directory name), or a row group
+    with non-null values but no min/max (parquet-mr drops the
+    statistics of a value over 4 KB).  An all-null column has ``min``
+    and ``max`` None."""
+    meta = pq.read_metadata(path)
+    found: dict[str, tuple] = {}
+    unknown: set[str] = set()
+    for g in range(meta.num_row_groups):
+        group = meta.row_group(g)
+        for j in range(group.num_columns):
+            chunk = group.column(j)
+            c = chunk.path_in_schema
+            if c not in columns or c in unknown:
+                continue
+            st = chunk.statistics
+            if (st is None or not st.has_null_count or
+                    (not st.has_min_max and st.null_count < group.num_rows)):
+                unknown.add(c)
+                continue
+            mn, mx, nulls = found.get(c, (None, None, 0))
+            if st.has_min_max:
+                mn = st.min if mn is None else min(mn, st.min)
+                mx = st.max if mx is None else max(mx, st.max)
+            found[c] = (mn, mx, nulls + st.null_count)
+    return meta.num_rows, {c: v for c, v in found.items()
+                           if c not in unknown}
+
+
+def _partition_values(rel: str) -> dict:
+    """``{column: value text}`` of a hive-partitioned file path
+    (``k=v/.../part-*.parquet``): Spark percent-escapes special
+    characters in the value and writes a null as
+    ``__HIVE_DEFAULT_PARTITION__``."""
+    values = {}
+    for seg in rel.split(os.sep)[:-1]:
+        name, _, raw = seg.partition("=")
+        values[unquote(name)] = (None if raw == "__HIVE_DEFAULT_PARTITION__"
+                                 else unquote(raw))
+    return values
+
+
+def _span_text(value, spark_type: str) -> str | None:
+    """A footer min/max as ``cast(value as string)`` renders it in
+    Spark, for the key types lineage spans are kept for: integers,
+    strings, booleans and dates.  Any other type records no span."""
+    if value is None:
+        return None
+    if spark_type == "string":
+        return value
+    if spark_type in ("tinyint", "smallint", "int", "bigint"):
+        return str(value)
+    if spark_type == "boolean":
+        return "true" if value else "false"
+    if spark_type == "date":
+        return value.isoformat()
+    return None
 
 
 def _strip_null_flags(node):
@@ -239,8 +319,7 @@ class IcebergishCatalog:
                         cluster_by: list[str] | None = None) -> dict:
         # validate the stats spec BEFORE any data is written, so a bad
         # spec fails side-effect-free instead of leaving an orphaned
-        # uncommitted snapshot directory behind (the read-back below
-        # uses df.schema verbatim, so validating df here is equivalent)
+        # uncommitted snapshot directory behind
         stat_cols = list(stats_columns or [])
         if stat_cols:
             by_name = {f.name: f for f in df.schema.fields}
@@ -265,52 +344,46 @@ class IcebergishCatalog:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(snap_dir)
 
-        # Per-file (≈ per-partition) lineage from the persisted data —
-        # a single columnar aggregate over what was just written.
+        # Per-file lineage from the parquet footers of what was just
+        # written (Iceberg builds its manifest metrics the same way), not
+        # from a re-read: sorted paths make part ids — and the manifest
+        # bytes — replay-deterministic.  0-row files (an empty task's
+        # output) are omitted.
         key = lineage_key or df.columns[0]
-        # Explicit schema: an empty snapshot has no footer to infer from.
-        written = self.spark.read.schema(df.schema).parquet(snap_dir)
-        # aggregate the key in ITS OWN type and cast after (a string
-        # cast before min/max would order numeric keys lexically);
-        # sort the collected rows so part_id assignment — and therefore
-        # the manifest bytes — are replay-deterministic
-        per_col = [a for c in stat_cols for a in
-                   (F.min(c).alias("__mn_%s" % c),
-                    F.max(c).alias("__mx_%s" % c),
-                    F.count(F.when(F.col(c).isNull(), 1))
-                     .alias("__nu_%s" % c))]
-        stats = sorted(
-            written.groupBy(F.input_file_name().alias("file"))
-            .agg(F.count(F.lit(1)).alias("cnt"),
-                 F.min(key).cast("string").alias("mn"),
-                 F.max(key).cast("string").alias("mx"),
-                 *per_col)
-            .collect(),
-            key=lambda r: r["file"])
-        # each file's path relative to the snapshot dir: Spark names
-        # files per task, so one task's files in different partition
-        # dirs share a basename.  input_file_name() is a percent-encoded
-        # URI; unquote it back to the filesystem path.
-        snap_real = os.path.realpath(snap_dir)
-
-        def rel(uri):
-            return os.path.relpath(
-                os.path.realpath(unquote(urlparse(uri).path)), snap_real)
-
+        types = {f.name: f.dataType.simpleString() for f in df.schema}
         base_lineage = list(base["lineage"]) if base else []
         base_dirs = (base.get("dirs", [base["dir"]]) if base else [])
-        lineage = base_lineage + [
-            {"part_id": len(base_lineage) + i,
-             "file": rel(r["file"]),
-             "dir": os.path.basename(snap_dir),
-             "input_min": r["mn"], "input_max": r["mx"],
-             "row_count": r["cnt"],
-             **({"stats": {c: {"min": _stat_key(r["__mn_%s" % c]),
-                               "max": _stat_key(r["__mx_%s" % c]),
-                               "nulls": r["__nu_%s" % c]}
-                           for c in stat_cols}} if stat_cols else {})}
-            for i, r in enumerate(stats)
-        ]
+        lineage = []
+        for rel in _data_files(snap_dir):
+            rows, stats = _footer_stats(os.path.join(snap_dir, rel),
+                                        {key, *stat_cols})
+            if not rows:
+                continue
+            part_values = _partition_values(rel)
+            if key in part_values:    # constant within its directory
+                lo = hi = part_values[key]
+            else:
+                mn, mx, _nulls = stats.get(key, (None, None, 0))
+                lo = _span_text(mn, types[key])
+                hi = _span_text(mx, types[key])
+            entry = {"part_id": len(base_lineage) + len(lineage),
+                     "file": rel,
+                     "dir": os.path.basename(snap_dir),
+                     "input_min": lo, "input_max": hi,
+                     "row_count": rows}
+            if stat_cols:
+                # a session-zone timestamp records none: Spark writes it
+                # as INT96, which has no footer min/max, and under another
+                # outputTimestampType the footer holds a UTC instant that
+                # does not compare with a caller's local-time bound
+                entry["stats"] = {
+                    c: {"min": _stat_key(stats[c][0]),
+                        "max": _stat_key(stats[c][1]),
+                        "nulls": stats[c][2]}
+                    for c in stat_cols
+                    if c in stats and types[c] != "timestamp"}
+            lineage.append(entry)
+        lineage = base_lineage + lineage
         row_count = sum(p["row_count"] for p in lineage)
         counts = [p["row_count"] for p in lineage] or [0]
         merged_props = dict(base["properties"]) if base else {}

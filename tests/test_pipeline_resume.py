@@ -144,3 +144,72 @@ def test_kill_during_stage_write_discards_partial_snapshot(
                  for p in a["lineage"]]
                 == [(p["row_count"], p["input_min"], p["input_max"])
                     for p in b["lineage"]])
+
+
+STAGES = ("records", "extracted", "triples_raw", "quarantine", "warnings",
+          "triples_canonical", "triples")
+
+
+def test_side_stage_error_raises_and_rerun_resumes(spark, transcripts,
+                                                   tmp_path):
+    """A side stage runs beside the main chain: its error surfaces from
+    ``run`` once every stage has been joined, and a rerun resumes all
+    that was committed before it."""
+    wh = str(tmp_path / "wh")
+    victim = KgPipeline(spark, wh)
+    real_write = victim.catalog.write
+
+    class SideStageFailure(RuntimeError):
+        pass
+
+    def failing_write(table, df, **kw):
+        if table == "warnings":
+            raise SideStageFailure(table)
+        return real_write(table, df, **kw)
+
+    victim.catalog.write = failing_write
+    with pytest.raises(SideStageFailure):
+        victim.run(transcripts)
+    committed = [s for s in STAGES if victim.catalog.exists(s)]
+    assert "warnings" not in committed
+    assert [s for s, _ in victim.stage_log] == committed
+
+    second = KgPipeline(spark, wh)
+    second.run(transcripts)
+    assert [s for s, _ in second.stage_log] == list(STAGES)
+    assert [s for s, how in second.stage_log if how == "resumed"] == \
+        committed
+    assert dict(second.stage_log)["warnings"] == "ran"
+
+
+def test_side_stages_inherit_the_callers_job_group(spark, transcripts,
+                                                   tmp_path):
+    """Side-stage jobs carry the job group the caller set before
+    ``run``, so ``cancelJobGroup`` and per-group job accounting cover
+    them; no job of the build runs outside the group."""
+    import threading
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    pipe = KgPipeline(spark, str(tmp_path / "wh"), validate=True)
+    real_write = pipe.catalog.write
+    seen = {}
+
+    def spying_write(table, df, **kw):
+        seen[table] = (threading.current_thread() is threading.main_thread(),
+                       sc.getLocalProperty("spark.jobGroup.id"))
+        return real_write(table, df, **kw)
+
+    pipe.catalog.write = spying_write
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("kg-side-stages", "side stages inherit the group")
+    try:
+        pipe.run(transcripts)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    for table in ("quarantine", "warnings", "validation_warnings"):
+        assert seen[table] == (False, "kg-side-stages"), table
+    assert seen["triples_raw"] == (True, "kg-side-stages")
+    assert tracker.getJobIdsForGroup("kg-side-stages")
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped

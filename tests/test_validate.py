@@ -190,3 +190,69 @@ def test_validation_clean_on_real_extraction(spark):
     assert overlapping_labels(triples).count() == 0
     assert duplicate_preflabels(triples).count() == 0
     assert drop_redundant_altlabels(triples).count() == triples.count()
+
+
+def _authority(num: int, broader: int) -> tuple[str, str]:
+    """An LCSH authority record ``sh<num>`` whose 550 $w g names
+    ``sh<broader>`` as its broader term."""
+    return ("sh%07d" % num, (
+        '<record xmlns="http://www.loc.gov/MARC21/slim">'
+        '<leader>00000nz  a2200000n  4500</leader>'
+        '<controlfield tag="001">sh%07d</controlfield>'
+        '<controlfield tag="008">120224n|aana               a aaa     '
+        '</controlfield>'
+        '<datafield tag="040" ind1=" " ind2=" ">'
+        '<subfield code="b">eng</subfield></datafield>'
+        '<datafield tag="150" ind1=" " ind2=" ">'
+        '<subfield code="a">Term %d</subfield></datafield>'
+        '<datafield tag="550" ind1=" " ind2=" ">'
+        '<subfield code="w">g</subfield>'
+        '<subfield code="0">sh%07d</subfield>'
+        '<subfield code="a">Term %d</subfield></datafield>'
+        '</record>') % (num, num, broader, broader))
+
+
+def test_pipeline_cycle_report_closes_broader_once(spark, tmp_path,
+                                                   monkeypatch):
+    """A seeded broader cycle 1 → 2 → 3 → 1 (4 feeds into it): a
+    validate-only build closes the broader edges to find it; a
+    transitive build reads the same members off the diagonal of the
+    closure it already committed, so its report is identical and the
+    build runs one closure, not two."""
+    from mc2skos_spark.operators import closure
+    from mc2skos_spark.plans.pipeline import KgPipeline
+    from mc2skos_spark.sources.synth import synth_marc_records
+
+    records = [_authority(1, 2), _authority(2, 3), _authority(3, 1),
+               _authority(4, 1)] + synth_marc_records(20, seed=5)
+    df = spark.createDataFrame(make_transcript_rows(records, seed=6),
+                               schema=schemas.TRANSCRIPTS)
+    closures = []
+    real_closure = closure.transitive_closure
+
+    def counting_closure(edges, *args, **kwargs):
+        closures.append(edges)
+        return real_closure(edges, *args, **kwargs)
+
+    monkeypatch.setattr(closure, "transitive_closure", counting_closure)
+
+    def report(transitive):
+        closures.clear()
+        pipe = KgPipeline(spark, str(tmp_path / str(transitive)),
+                          validate=True, transitive=transitive)
+        triples = pipe.run(df)
+        rows = {(r["record_id"], r["reason"])
+                for r in pipe.catalog.read("validation_warnings").collect()}
+        return rows, triples, len(closures)
+
+    validate_only, triples, n_closures = report(transitive=False)
+    assert n_closures == 1
+    terms = {r["obj"]: r["subj"] for r in triples.filter(
+        F.col("pred") == SKOS + "prefLabel").collect()}
+    assert {rid for rid, reason in validate_only
+            if reason == "skos:broader cycle"} == \
+        {terms["Term %d" % n] for n in (1, 2, 3)}
+
+    closed, _, n_closures = report(transitive=True)
+    assert n_closures == 1          # triples_transitive's, reused
+    assert closed == validate_only
