@@ -1906,8 +1906,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #     inequality join; DuckDB's native ASOF JOIN is the
     #     independent oracle).  Right-side (user, ts) ties are
     #     pre-reduced to max(event_id) in BOTH engines so the match
-    #     is unique; a 1-hour-tolerance column exercises the
-    #     tolerance path in the same row.
+    #     is unique; a 1-hour column applies the lag cut to the
+    #     same row.
     def aj_purchase_asof(spark, sf_dir):
         from mc2skos_spark.operators.sessionize import event_micros
         from mc2skos_spark.operators.temporal import asof_join

@@ -161,7 +161,6 @@ def convert(spark, infiles, outfile, outformat=None, include=(),
     from mc2skos_spark.operators.extract import (extract_triples,
                                                  quarantine_from_extracted,
                                                  triples_from_extracted)
-    from mc2skos_spark.plans import schemas
     from mc2skos_spark.sinks.jskos import triples_to_jskos
     from mc2skos_spark.sinks.serializers import (triples_to_ndjson,
                                                  triples_to_turtle,
@@ -177,25 +176,10 @@ def convert(spark, infiles, outfile, outformat=None, include=(),
 
     # record loading: the Spark 4 Python DataSource parses each file
     # ON AN EXECUTOR (one InputPartition per file — a 10k-file dump
-    # parses 10k-way parallel, no XML bytes on the driver); identical
-    # (record_id, source, xml) rows to the old driver-side loop, which
-    # stays as the fallback for sessions without the DataSource API
-    try:
-        from mc2skos_spark.sources.marcxml_source import read_marcxml
-        # exact path list (JSON option): names with commas survive
-        records = read_marcxml(spark, list(infiles))
-    except (ImportError, AttributeError):   # pragma: no cover -
-        # pre-4.0 fallback only: sessions without the Python
-        # DataSource API.  Real DataSource bugs must propagate, not
-        # silently fall back to driver-side parsing.
-        from mc2skos_spark.sources.synth import records_in_xml_file
-        rows = []
-        for path in infiles:
-            stem = os.path.splitext(os.path.basename(path))[0]
-            for i, xml in enumerate(records_in_xml_file(path)):
-                rows.append(("%s#%d" % (stem, i), stem, xml))
-        records = spark.createDataFrame(rows,
-                                        schema=schemas.MARC_RECORDS)
+    # parses 10k-way parallel, no XML bytes on the driver); the exact
+    # path list goes as a JSON option, so names with commas survive
+    from mc2skos_spark.sources.marcxml_source import read_marcxml
+    records = read_marcxml(spark, list(infiles))
 
     default_scheme = None
     if base_uri or scheme or whitespace:

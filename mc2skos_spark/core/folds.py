@@ -50,8 +50,7 @@ TERM_TAG_SUFFIXES = ("00", "10", "11", "30", "47", "48", "50", "51", "53",
                      "55", "62")
 
 
-def parse_008_classification(value: str | None,
-                             warnings: list[str] | None = None):
+def parse_008_classification(value: str | None, warnings: list[str]):
     """Decode the classification 008 fixed field.
 
     Returns (created, record_type, number_type, display, synthesized,
@@ -63,8 +62,6 @@ def parse_008_classification(value: str | None,
     record.py:461,498) — such records fail the publish filter later, so
     without the warning they would vanish without a trace.
     """
-    if warnings is None:
-        warnings = []
     if value is None:
         return None, None, None, True, False, False
 
@@ -172,7 +169,7 @@ def parse_153(subfields: list[dict]):
 
 
 def parse_765_components(fields_765: list[dict],
-                         warnings: list[str] | None = None) -> list[str]:
+                         warnings: list[str]) -> list[str]:
     """Synthesized-number components fold over all 765 fields.
 
     Fields are iterated in *reverse* document order
@@ -185,8 +182,6 @@ def parse_765_components(fields_765: list[dict],
     caller-supplied ``warnings`` side-channel.
     """
     components: list[str] = []
-    if warnings is None:
-        warnings = []
     for field in reversed(fields_765):
         table = ""
         rootno = ""

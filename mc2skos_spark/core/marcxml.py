@@ -90,8 +90,8 @@ def parse_record_xml(xml_string: str) -> dict:
         if len(records) != 1:
             raise ValueError(
                 "expected one <record>, found %d inside <%s> — split "
-                "multi-record files with records_in_xml_file/"
-                "iter_records_in_file" % (len(records), root.tag))
+                "multi-record files with records_in_xml_file"
+                % (len(records), root.tag))
         root = records[0]
     return record_element_to_dict(root)
 
@@ -139,32 +139,6 @@ def record_element_to_dict(root: ET.Element) -> dict:
         "controlfields": controlfields,
         "datafields": datafields,
     }
-
-
-def iter_records_in_file(path: str):
-    """Stream ``<record>`` elements from a MARCXML file.
-
-    The scan counterpart of /root/reference/mc2skos/reader.py:15-26 —
-    iterative, O(1) memory, clearing each element after yield.  Used for
-    driver-side fixture loading and by the file source; the distributed
-    path reads transcript tables instead.
-    """
-    parser = ET.XMLParser(target=_tree_builder())
-    root = None
-    for event, elem in ET.iterparse(path, events=("start", "end"),
-                                    parser=parser):
-        if event == "start":
-            if root is None:
-                root = elem
-            continue
-        if _localname(elem.tag) == "record":
-            yield record_element_to_dict(elem)
-            elem.clear()
-            # cleared <record> shells stay attached to the growing
-            # root <collection> — drop them or memory grows linearly
-            # with record count despite the per-element clear
-            if root is not None and root is not elem:
-                root.clear()
 
 
 # --------------------------------------------------------------------------

@@ -23,15 +23,13 @@ Scale shape (100 TB):
   independent, so the DuckDB oracle hash-matches under any shuffle
   order (the discipline of :mod:`mc2skos_spark.functions.retrieval`).
 
-The default bucket hash is the FIRST BYTE of md5 (pmod to
-``buckets``): md5 is bit-identical in every engine, which buys a fully
-independent cross-engine oracle.  ``hash_fn="xxhash64"`` is the
-production path — cheaper per gram and supporting the paper's
-10k-bucket feature space — with the IDENTICAL plan shape (only the
-bucket expression changes; verified by the shape-parity pytest).
-Hashing n-grams into buckets is itself the DSIR design (they use 10k
-buckets) — collisions are part of the estimator, not an approximation
-added here.
+The bucket hash is the FIRST BYTE of md5 over ``BUCKETS`` = 256
+buckets: md5 is bit-identical in every engine, which buys a fully
+independent cross-engine oracle.  The paper uses 10k buckets; 256 is
+what the one-byte md5 hash reaches, and it is what the curation job
+and the registered query run.  Hashing n-grams into buckets is itself
+the DSIR design — collisions are part of the estimator, not an
+approximation added here.
 """
 
 from __future__ import annotations
@@ -41,13 +39,14 @@ from pyspark.sql import Column, DataFrame, functions as F
 from mc2skos_spark.functions.textstats import word_grams12
 
 SCALE = 10_000
+BUCKETS = 256
 
 
 def _bucket(gram: Column, buckets: int, hash_fn: str) -> Column:
     """Hash a gram to [0, buckets).  ``md5``: first md5 byte —
     engine-portable by construction (the oracle path, ≤256 buckets).
-    ``xxhash64``: the production path — cheaper per gram and supports
-    the paper's 10k-bucket feature space, but engine-specific."""
+    ``xxhash64``: cheaper per gram and not capped at 256 buckets, but
+    engine-specific; a classifier file may select it."""
     if hash_fn == "md5":
         return F.pmod(
             F.conv(F.substring(F.md5(gram), 1, 2), 16, 10).cast("int"),
@@ -91,9 +90,8 @@ def _quantized_logp(cnt: Column, total: Column, buckets: int) -> Column:
 
 
 def dsir_logweights(documents: DataFrame, is_target: Column,
-                    buckets: int = 256, id_col: str = "doc_id",
-                    text_col: str = "text",
-                    hash_fn: str = "md5") -> DataFrame:
+                    id_col: str = "doc_id",
+                    text_col: str = "text") -> DataFrame:
     """Per-document DSIR log importance weight of every document in
     ``documents`` toward the subset marked by the ``is_target``
     predicate (an in-pool trusted slice; for an external target corpus,
@@ -106,13 +104,6 @@ def dsir_logweights(documents: DataFrame, is_target: Column,
     :func:`mc2skos_spark.functions.sampling.hash_fraction` thresholds)
     to resample.  Positive ⇒ more target-like than the pool average.
     """
-    if hash_fn == "md5" and not 1 <= buckets <= 256:
-        raise ValueError("dsir_logweights: md5 path needs buckets "
-                         "in 1..256")
-    if buckets < 1:
-        raise ValueError("dsir_logweights: buckets must be >= 1")
-    if hash_fn not in ("md5", "xxhash64"):
-        raise ValueError(f"_bucket: unknown hash_fn {hash_fn!r}")
     # per-row hashed bucket-id arrays — ONE tokenize+hash pass, no
     # per-doc grouping exchange at all (guide §2.4: the former
     # (doc, bucket, cnt) shuffle only re-derived what each row already
@@ -122,11 +113,11 @@ def dsir_logweights(documents: DataFrame, is_target: Column,
             .select(F.col(id_col),
                     is_target.cast("boolean").alias("is_t"),
                     F.transform(word_grams12(F.col(text_col)),
-                                lambda g: _bucket(g, buckets, hash_fn))
+                                lambda g: _bucket(g, BUCKETS, "md5"))
                     .alias("__bks"))
             .localCheckpoint(eager=False))
 
-    full = documents.sparkSession.range(buckets) \
+    full = documents.sparkSession.range(BUCKETS) \
         .select(F.col("id").cast("int").alias("bucket"))
     # raw + target counts in ONE conditional aggregate over the
     # exploded bucket ids (count of occurrences == the former sum of
@@ -143,7 +134,7 @@ def dsir_logweights(documents: DataFrame, is_target: Column,
                     F.coalesce("rc", F.lit(0)).cast("long").alias("rc"),
                     F.coalesce("tc", F.lit(0)).cast("long").alias("tc")))
     # corpus totals as a whole-frame window over the `buckets`-row
-    # table: dist is bounded by construction (256 rows here), so the
+    # table: dist is bounded by construction (BUCKETS rows), so the
     # single-partition WindowExec is metadata-scale at any corpus size
     # and replaces the former 1-row totals crossJoin — one broadcast
     # nested-loop attach fewer in the plan, identical arithmetic
@@ -151,9 +142,9 @@ def dsir_logweights(documents: DataFrame, is_target: Column,
     whole = Window.partitionBy()
     ratio = dist.select(
         "bucket",
-        (_quantized_logp(F.col("tc"), F.sum("tc").over(whole), buckets)
+        (_quantized_logp(F.col("tc"), F.sum("tc").over(whole), BUCKETS)
          - _quantized_logp(F.col("rc"), F.sum("rc").over(whole),
-                           buckets)).alias("dlp"))
+                           BUCKETS)).alias("dlp"))
 
     # the `buckets`-row ratio table folds into ONE map row and scoring
     # becomes a per-row long fold over the bucket array — no join back,

@@ -236,15 +236,12 @@ def _decode_stub(payload: bytes, kind: str) -> list[float]:
     return [b / 255.0 for b in digest[:8]]
 
 
-def extract_media_features(media: DataFrame,
-                           balance: bool = True) -> DataFrame:
+def extract_media_features(media: DataFrame) -> DataFrame:
     """mapInPandas feature extraction over binary payloads.
 
-    Binary columns are large: ``balance=True`` hash-repartitions by
+    Binary columns are large: the input is hash-repartitioned by
     media_id so Arrow batches stay size-bounded regardless of upstream
-    skew; pass ``balance=False`` when the input is already well spread
-    (saves a full-payload shuffle — the expensive part when payloads
-    are MBs).  Rows per Arrow batch are governed by the session's
+    skew.  Rows per Arrow batch are governed by the session's
     ``spark.sql.execution.arrow.maxRecordsPerBatch`` — lower it for
     multi-MB payloads.  Payloads never reach the driver.
     """
@@ -276,8 +273,8 @@ def extract_media_features(media: DataFrame,
             }
             yield pd.DataFrame(out)
 
-    source = media.repartition(F.xxhash64("media_id")) if balance else media
-    return source.mapInPandas(fn, schema=FEATURES_SCHEMA)
+    return (media.repartition(F.xxhash64("media_id"))
+            .mapInPandas(fn, schema=FEATURES_SCHEMA))
 
 
 def synth_media(spark, n: int = 64, seed: int = 42) -> DataFrame:

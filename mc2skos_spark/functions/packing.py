@@ -25,17 +25,14 @@ _CHUNK_STRUCT = ("array<struct<chunk_idx: int, chunk_start: int,"
 
 def pack_sequences(docs: DataFrame, capacity: int,
                    id_col: str = "doc_id",
-                   tokens_col: str = "n_tokens",
-                   num_partitions: int | None = None) -> DataFrame:
+                   tokens_col: str = "n_tokens") -> DataFrame:
     """Append ``start_offset`` (exclusive prefix sum of ``tokens_col``
     in ``id_col`` order — must be a unique key) and ``seq_id``
     (``start_offset div capacity``, integer arithmetic end-to-end: a
     double division would lose exactness past 2^53 total tokens).
     """
     spark = docs.sparkSession
-    if num_partitions is None:
-        num_partitions = int(
-            spark.conf.get("spark.sql.shuffle.partitions"))
+    num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # lazy: the totals collect below materializes the checkpoint (one
     # job instead of materialize + collect), the final pass reads the
     # pinned blocks

@@ -535,19 +535,6 @@ def ask_query(triples: DataFrame, patterns, **select_kwargs) -> bool:
                 .limit(1).take(1))
 
 
-def describe_query(triples: DataFrame, resources) -> DataFrame:
-    """SPARQL DESCRIBE (concise-bounded lite): every triple whose
-    subject OR object is one of ``resources`` — two pushed-down
-    isin-filter scans unioned and deduped, no joins."""
-    if isinstance(resources, str):
-        resources = [resources]
-    if not resources:
-        raise ValueError("describe_query needs at least one resource")
-    return (triples.filter(F.col("subj").isin(*resources))
-            .unionByName(triples.filter(F.col("obj").isin(*resources)))
-            .distinct())
-
-
 def materialize_rules(triples: DataFrame, rules,
                       max_rounds: int = 25) -> DataFrame:
     """Forward-chaining rule materialization to FIXPOINT — the datalog

@@ -8,9 +8,7 @@ records/partitions, so we:
 
 1. derive candidate ``sameAs`` edges: subjects sharing a
    ``dcterms:identifier`` literal (a self-equi-join on the identifier
-   value — hash join, AQE-salted when an identifier is hot), plus any
-   explicit ``skos:exactMatch``/``owl:sameAs`` edges already in the
-   graph when requested;
+   value — hash join, AQE-salted when an identifier is hot);
 2. run alternating large-star / small-star connected components
    (Kiveris et al., "Connected Components in MapReduce and Beyond",
    SoCC'14) — each round is two join+aggregate Spark jobs, the driver
@@ -31,11 +29,9 @@ from ..core import constants as C
 from .closure import loop_width
 
 IDENTIFIER_PRED = C.DCTERMS + "identifier"
-SAMEAS_PREDS = (C.OWL + "sameAs", C.SKOS + "exactMatch")
 
 
 def candidate_sameas_edges(triples: DataFrame,
-                           use_exact_match: bool = False,
                            max_ident_freq: int | None = None) -> DataFrame:
     """(src, dst) candidate identity edges between concept URIs.
 
@@ -72,21 +68,11 @@ def candidate_sameas_edges(triples: DataFrame,
     # Self-join on (identifier, authority); keep src<dst to halve edges.
     left = ids.alias("l")
     right = ids.alias("r")
-    edges = (left.join(right, on=["ident", "auth"])
-             .select(F.col("l.subj").alias("src"),
-                     F.col("r.subj").alias("dst"))
-             .filter(F.col("src") < F.col("dst"))
-             .distinct())
-    if use_exact_match:
-        explicit = (triples
-                    .filter(F.col("pred").isin(list(SAMEAS_PREDS)) &
-                            ~F.col("obj_is_literal"))
-                    .select(F.least("subj", "obj").alias("src"),
-                            F.greatest("subj", "obj").alias("dst"))
-                    .filter(F.col("src") != F.col("dst"))
-                    .distinct())
-        edges = edges.unionByName(explicit).distinct()
-    return edges
+    return (left.join(right, on=["ident", "auth"])
+            .select(F.col("l.subj").alias("src"),
+                    F.col("r.subj").alias("dst"))
+            .filter(F.col("src") < F.col("dst"))
+            .distinct())
 
 
 def connected_components(edges: DataFrame,
@@ -205,14 +191,12 @@ def mapping_from_edges(edges: DataFrame) -> DataFrame:
 
 
 def canonical_mapping(triples: DataFrame,
-                      use_exact_match: bool = False,
                       max_ident_freq: int | None = None) -> DataFrame:
     """(uri, canonical_uri) for every URI in a non-trivial component.
     ``max_ident_freq`` is the degenerate-identifier stop-key cap (see
     ``candidate_sameas_edges``) — pass a bound at corpus scale."""
     return mapping_from_edges(
-        candidate_sameas_edges(triples, use_exact_match,
-                               max_ident_freq=max_ident_freq))
+        candidate_sameas_edges(triples, max_ident_freq=max_ident_freq))
 
 
 def rewrite_canonical(triples: DataFrame, mapping: DataFrame) -> DataFrame:

@@ -12,10 +12,6 @@ plain aggregations so they run anywhere:
   full change history — the difference between O(changes) and
   O(distinct keys) network volume at 100 TB.  A key whose LATEST
   change is a delete disappears from the snapshot.
-- :func:`merge_changes` — the persisted form: MERGE a change batch
-  into an Icebergish table, broadcast-pruning the stored state so only
-  touched keys shuffle (O(batch), not O(table)); seq-aware, so stale
-  redeliveries and replays are no-ops.
 - :func:`scd2_history` — slowly-changing-dimension type 2: every
   change becomes a validity interval ``[valid_from, valid_to)`` with
   ``valid_to`` = the next change's event time (null = current row).
@@ -76,61 +72,6 @@ def scd2_history(changes: DataFrame, key_cols: Sequence[str],
             .withColumn("is_current", F.col("valid_to").isNull()))
 
 
-def merge_changes(catalog, table: str, changes: DataFrame,
-                  key_cols: Sequence[str], seq_cols: Sequence[str],
-                  delete_when: Column | None = None,
-                  broadcast_keys: bool = True,
-                  lineage_key: str | None = None,
-                  properties: dict | None = None) -> dict:
-    """Seq-aware MERGE of a keyed change batch into a persisted
-    Icebergish table (what ``MERGE INTO`` / DLT ``apply_changes`` does
-    against Delta/Iceberg): per key the highest-sequence row wins
-    ACROSS stored state and the batch — a late-arriving stale change
-    never overwrites newer stored state, a winning delete removes the
-    key, and a later re-insert re-adds it.  Returns the committed
-    manifest.
-
-    Scale shape (100 TB): the batch's key set is broadcast
-    (``broadcast_keys``; CDC batches are key-small) so the stored
-    table splits with anti/semi joins into an UNTOUCHED part that is
-    never shuffled and a touched part resolved against the batch by
-    :func:`latest_snapshot` — shuffle volume is O(batch + touched
-    rows), not O(table).  The Icebergish shim then rewrites the table
-    files (copy-on-write at table granularity); a real catalog would
-    rewrite only the affected partitions/files, which this plan
-    already isolates.  Replays are idempotent: re-merging an applied
-    batch resolves to identical rows (ties between a stored winner and
-    its own redelivery are content-equal), and the commit stays one
-    atomic manifest rename — a mid-write kill leaves the previous
-    snapshot readable.
-
-    Requires the table to RETAIN its ``seq_cols`` columns (true of
-    anything :func:`latest_snapshot` produced) and the batch schema to
-    equal the table schema.
-    """
-    if not catalog.exists(table):
-        state = latest_snapshot(changes, key_cols, seq_cols, delete_when)
-        return catalog.write(table, state, lineage_key=lineage_key,
-                             properties=properties)
-    current = catalog.read(table)
-    committed = [(f.name, f.dataType) for f in current.schema.fields]
-    incoming = [(f.name, f.dataType) for f in changes.schema.fields]
-    if sorted(committed) != sorted(incoming):
-        raise ValueError(
-            "merge_changes schema mismatch for table %r: committed %s "
-            "vs incoming %s" % (table, committed, incoming))
-    keys = changes.select(*key_cols).distinct()
-    if broadcast_keys:
-        keys = F.broadcast(keys)
-    untouched = current.join(keys, list(key_cols), "left_anti")
-    touched = current.join(keys, list(key_cols), "left_semi")
-    resolved = latest_snapshot(touched.unionByName(changes),
-                               key_cols, seq_cols, delete_when)
-    merged = untouched.unionByName(resolved.select(*current.columns))
-    return catalog.write(table, merged, lineage_key=lineage_key,
-                         properties=properties)
-
-
 def compress_changes(changes: DataFrame, key_cols: Sequence[str],
                      seq_cols: Sequence[str],
                      value_cols: Sequence[str]) -> DataFrame:
@@ -139,13 +80,13 @@ def compress_changes(changes: DataFrame, key_cols: Sequence[str],
     struct compare; the first change per key always survives).
 
     The standard debezium-style change-compression step applied BEFORE
-    :func:`merge_changes` / :func:`scd2_history` — upstream CDC
+    :func:`latest_snapshot` / :func:`scd2_history` — upstream CDC
     pipelines routinely redeliver full-row images where nothing the
-    table cares about changed, and compressing first shrinks both the
-    merge's touched-key set and the SCD2 history.  One exchange on the
-    key + a lag window (the per-key ordered comparison is inherently a
-    window; ``seq_cols`` must be a unique total order per key, same
-    contract as the other operators here).  Composes:
+    table cares about changed, and compressing first shrinks the SCD2
+    history.  One exchange on the key + a lag window (the per-key
+    ordered comparison is inherently a window; ``seq_cols`` must be a
+    unique total order per key, same contract as the other operators
+    here).  Composes:
     ``scd2_history(compress_changes(...))`` collapses repeated images
     into single validity intervals.
     """

@@ -73,12 +73,11 @@ def label_link_candidates(triples: DataFrame, threshold: float = 0.9,
 
 def scored_sameas_edges(triples: DataFrame, threshold: float = 0.9,
                         n: int = 2,
-                        max_shingle_freq: int | None = 100,
-                        use_exact_match: bool = False) -> DataFrame:
+                        max_shingle_freq: int | None = 100) -> DataFrame:
     """(src, dst, score): identifier-equality edges at score 1.0
     unioned with label-similarity candidates; a pair found both ways
     keeps its best score."""
-    ident = (candidate_sameas_edges(triples, use_exact_match)
+    ident = (candidate_sameas_edges(triples)
              .select("src", "dst",
                      F.lit(1.0).cast("double").alias("score")))
     lbl = label_link_candidates(triples, threshold, n, max_shingle_freq)
@@ -89,8 +88,7 @@ def scored_sameas_edges(triples: DataFrame, threshold: float = 0.9,
 def linked_canonical_mapping(triples: DataFrame,
                              link_threshold: float = 0.9,
                              n: int = 2,
-                             max_shingle_freq: int | None = 100,
-                             use_exact_match: bool = False) -> DataFrame:
+                             max_shingle_freq: int | None = 100) -> DataFrame:
     """(uri, canonical) mapping over the scored edge set — the
     entity-linking variant of ``canonical_mapping``: identifier
     equality AND label similarity ≥ link_threshold feed the same
@@ -98,6 +96,6 @@ def linked_canonical_mapping(triples: DataFrame,
     # scored_sameas_edges already applies link_threshold to the label
     # candidates and identifier edges score 1.0 — no re-filter needed
     edges = (scored_sameas_edges(triples, link_threshold, n,
-                                 max_shingle_freq, use_exact_match)
+                                 max_shingle_freq)
              .select("src", "dst"))
     return mapping_from_edges(edges)

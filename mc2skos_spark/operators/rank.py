@@ -24,14 +24,12 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 
 def global_rank(df: DataFrame, order_cols: list[str],
-                rank_col: str = "rank",
-                num_partitions: int | None = None) -> DataFrame:
+                rank_col: str = "rank") -> DataFrame:
     """Append a 1-based global rank over ``order_cols`` (must be a
     unique key — ties across a range boundary would otherwise make the
     rank depend on boundary placement)."""
     spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # counts + final pass must see ONE partitioning: the lazy
     # localCheckpoint pins the partitioning under the counts job
     # itself (no dedicated materialize job), and the blocks are

@@ -19,11 +19,11 @@ here are pure DataFrame compositions with linear shuffle cost:
   volume is rows × (interval/width + 1); callers pick the width near
   the typical interval length.
 
-Determinism: ties on the right side of the as-of join are broken by a
-caller-named tiebreak column (``last`` under ``orderBy(ts, side,
-tiebreak)`` keeps the max), so results are stable under any shuffle
-order.  Null keys / null timestamps on the right never match (SQL
-semantics); unmatched left rows survive with null payloads.
+Determinism: the as-of join expects at most one right row per (key,
+ts); callers de-duplicate the right side first, so results are stable
+under any shuffle order.  Null keys / null timestamps on the right
+never match (SQL semantics); unmatched left rows survive with null
+payloads.
 """
 
 from __future__ import annotations
@@ -41,24 +41,14 @@ _ROW = "__asof_lrow"
 def asof_join(left: DataFrame, right: DataFrame, on: Sequence[str],
               left_ts: str, right_ts: str,
               value_cols: Sequence[str],
-              direction: str = "backward",
-              tolerance_us: int | None = None,
-              right_tiebreak: str | None = None,
               block_us: int | None = None) -> DataFrame:
-    """For each left row, attach the nearest right row per key.
-
-    ``backward``: the right row with the greatest ``right_ts`` <=
-    ``left_ts`` (inclusive, like DuckDB ``ASOF JOIN ... >=`` and
-    pandas ``merge_asof``).  ``forward``: smallest ``right_ts`` >=
-    ``left_ts``.  Left-join semantics: every left row survives; the
+    """For each left row, attach the right row per key with the
+    greatest ``right_ts`` <= ``left_ts`` (a backward as-of match,
+    inclusive, like DuckDB ``ASOF JOIN ... >=`` and pandas
+    ``merge_asof``).  Left-join semantics: every left row survives; the
     attached ``value_cols`` (plus ``matched_ts``) are null when no
-    right row qualifies or the match is farther than ``tolerance_us``
-    (compared on exact integer microseconds when given).
-
-    ``right_tiebreak``: column ordering right rows that share an
-    identical (key, ts) — the max wins deterministically (in either
-    direction).  Without it, callers must pre-deduplicate
-    (key, ts) on the right or accept shuffle-order results.
+    right row qualifies.  Callers de-duplicate (key, ts) on the right:
+    among right rows sharing one, the pick follows shuffle order.
 
     Plan shape: union → ONE Exchange on ``on`` → Sort → running
     ``last(ignorenulls)`` window → filter.  A pathologically hot key
@@ -73,8 +63,6 @@ def asof_join(left: DataFrame, right: DataFrame, on: Sequence[str],
     ``tests/test_temporal.py``); pick ``block_us`` so a hot key's rows
     per block fit a task comfortably.
     """
-    if direction not in ("backward", "forward"):
-        raise ValueError("asof_join: direction must be backward|forward")
     on = list(on)
     bad = set(on) & set(value_cols)
     if bad:
@@ -95,38 +83,18 @@ def asof_join(left: DataFrame, right: DataFrame, on: Sequence[str],
     # Spark's null-grouping partitioner cannot pair them with left
     # null keys
     r_valid = right.na.drop(subset=on + [right_ts])
-    tb = (F.col(right_tiebreak) if right_tiebreak
-          else F.lit(0)).alias("__asof_tb")
     r_side = r_valid.select(
-        *on, F.col(right_ts).alias(_TS), F.lit(0).alias(_SIDE), tb,
+        *on, F.col(right_ts).alias(_TS), F.lit(0).alias(_SIDE),
         F.struct(*payload_cols).alias(_PAY),
         F.lit(None).cast(row_t).alias(_ROW))
     l_side = left.select(
         *on, F.col(left_ts).alias(_TS), F.lit(1).alias(_SIDE),
-        F.lit(0).alias("__asof_tb"),
         F.lit(None).cast(pay_t).alias(_PAY),
         F.struct("*").alias(_ROW))
-
-    if direction == "backward":
-        order = [F.col(_TS).asc_nulls_first(), F.col(_SIDE).asc(),
-                 F.col("__asof_tb").asc()]
-    else:
-        # reverse time: the running last() then carries the NEXT
-        # right row backward; right still sorts before left at ties,
-        # and tb stays ascending so the MAX tiebreak wins in both
-        # directions
-        order = [F.col(_TS).desc_nulls_first(), F.col(_SIDE).asc(),
-                 F.col("__asof_tb").asc()]
+    # right sorts before left at equal ts: the match is inclusive
+    order = [F.col(_TS).asc_nulls_first(), F.col(_SIDE).asc()]
 
     unioned = r_side.unionByName(l_side)
-    dt = dict(unioned.dtypes)[_TS]
-    if dt == "timestamp":
-        us = F.unix_micros
-    elif dt == "timestamp_ntz":
-        us = _ntz_micros
-    else:                           # already-numeric event time
-        us = lambda c: c            # noqa: E731
-
     if block_us is None:
         w = (Window.partitionBy(*on).orderBy(*order)
              .rowsBetween(Window.unboundedPreceding, Window.currentRow))
@@ -137,6 +105,13 @@ def asof_join(left: DataFrame, right: DataFrame, on: Sequence[str],
     else:
         if block_us <= 0:
             raise ValueError("asof_join: block_us must be positive")
+        dt = dict(unioned.dtypes)[_TS]
+        if dt == "timestamp":
+            us = F.unix_micros
+        elif dt == "timestamp_ntz":
+            us = _ntz_micros
+        else:                           # already-numeric event time
+            us = lambda c: c            # noqa: E731
         blk = "__asof_blk"
         unioned = unioned.withColumn(
             blk, F.floor(us(F.col(_TS)) / int(block_us)).cast("long"))
@@ -147,23 +122,16 @@ def asof_join(left: DataFrame, right: DataFrame, on: Sequence[str],
               .rowsBetween(Window.unboundedPreceding, Window.currentRow))
         local = unioned.withColumn(
             _PAY, F.last(_PAY, ignorenulls=True).over(wb))
-        # phase 2: per-(key, block) boundary summary — the extreme
-        # right payload of each block under the SAME total order
-        # (max_by on (ts, tb); time negated for forward so "extreme"
-        # means earliest) — then a running last over the ordered
-        # block table (metadata-scale: one row per (key, block))
-        # shifted one block back yields the carry from earlier blocks
-        ord_us = (us(F.col(_TS)) if direction == "backward"
-                  else -us(F.col(_TS)))
+        # phase 2: per-(key, block) boundary summary — the latest
+        # right payload of each block — then a running last over the
+        # ordered block table (metadata-scale: one row per (key,
+        # block)) shifted one block back yields the carry from earlier
+        # blocks
         summary = (unioned.filter(F.col(_SIDE) == 0)
                    .groupBy(*on, blk)
-                   .agg(F.max_by(_PAY, F.struct(
-                       ord_us.alias("t"),
-                       F.col("__asof_tb").alias("tb")))
+                   .agg(F.max_by(_PAY, us(F.col(_TS)))
                         .alias("__blk_last")))
-        blk_order = (F.col(blk).asc() if direction == "backward"
-                     else F.col(blk).desc())
-        wc = (Window.partitionBy(*on).orderBy(blk_order)
+        wc = (Window.partitionBy(*on).orderBy(F.col(blk).asc())
               .rowsBetween(Window.unboundedPreceding, -1))
         # null-SAFE joins throughout: left rows with a null key or a
         # null ts must survive with a null payload exactly like the
@@ -194,12 +162,6 @@ def asof_join(left: DataFrame, right: DataFrame, on: Sequence[str],
                    .filter(F.col(_SIDE) == 1)
                    .drop(blk, "__carry"))
 
-    if tolerance_us is not None:
-        gap = us(F.col(_TS)) - us(F.col(_PAY)["matched_ts"])
-        if direction == "forward":
-            gap = -gap
-        matched = matched.withColumn(
-            _PAY, F.when(gap <= F.lit(int(tolerance_us)), F.col(_PAY)))
     out_cols = [F.col(_ROW)[f.name].alias(f.name) for f in row_t.fields]
     out_cols += [F.col(_PAY)[c].alias(c) for c in value_cols]
     out_cols.append(F.col(_PAY)["matched_ts"].alias("matched_ts"))

@@ -37,7 +37,7 @@ _NULL_FLAGS = ("nullable", "containsNull", "valueContainsNull")
 # (decimal is excluded: Decimal→JSON loses exactness, and a lexical
 # string compare of "9.5" vs "10.5" would prune WRONG files — worse
 # than no pruning.)
-_STATS_TYPES = ("byte", "short", "int", "bigint", "float", "double",
+_STATS_TYPES = ("tinyint", "smallint", "int", "bigint", "float", "double",
                 "string", "date", "timestamp", "timestamp_ntz",
                 "boolean")
 

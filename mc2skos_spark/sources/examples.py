@@ -29,10 +29,10 @@ FAMILIES = [
 ]
 
 
-def golden_cases(examples_dir: str = EXAMPLES_DIR) -> list[tuple]:
+def golden_cases() -> list[tuple]:
     """(stem, xml_path, ttl_path, options, default_scheme) per pair."""
     cases = []
-    for xml_path in sorted(glob.glob(os.path.join(examples_dir, "*.xml"))):
+    for xml_path in sorted(glob.glob(os.path.join(EXAMPLES_DIR, "*.xml"))):
         stem = os.path.splitext(os.path.basename(xml_path))[0]
         ttl_path = os.path.splitext(xml_path)[0] + ".ttl"
         if not os.path.isfile(ttl_path):
@@ -45,8 +45,8 @@ def golden_cases(examples_dir: str = EXAMPLES_DIR) -> list[tuple]:
     return cases
 
 
-def golden_record_families(exclude: set[str] | frozenset[str] = frozenset(),
-                           examples_dir: str = EXAMPLES_DIR) -> list[tuple]:
+def golden_record_families(
+        exclude: set[str] | frozenset[str] = frozenset()) -> list[tuple]:
     """Group the example records by conversion-flag family.
 
     Returns ``[(options, default_scheme, [(stem, record_xml), ...]), …]``
@@ -57,13 +57,12 @@ def golden_record_families(exclude: set[str] | frozenset[str] = frozenset(),
     from .synth import fixture_records
 
     by_stem = {}
-    for stem, xml in fixture_records(examples_dir):
+    for stem, xml in fixture_records():
         by_stem.setdefault(stem, []).append(xml)
 
     families: dict[tuple, list[tuple[str, str]]] = {}
     meta: dict[tuple, tuple[dict, str | None]] = {}
-    for stem, _, ttl_path, options, default_scheme in \
-            golden_cases(examples_dir):
+    for stem, _, ttl_path, options, default_scheme in golden_cases():
         if stem in exclude or stem not in by_stem:
             continue
         key = (tuple(sorted(options.items())), default_scheme)
@@ -74,15 +73,15 @@ def golden_record_families(exclude: set[str] | frozenset[str] = frozenset(),
             for key in sorted(families, key=repr)]
 
 
-def golden_triples_union(exclude: set[str] | frozenset[str] = frozenset(),
-                         examples_dir: str = EXAMPLES_DIR) -> set[tuple]:
+def golden_triples_union(
+        exclude: set[str] | frozenset[str] = frozenset()) -> set[tuple]:
     """Distinct union of the REFERENCE-produced golden triples across
     the (non-excluded) example files — the expected output of running
     the extraction pipeline over the same records."""
     from ..core.turtle import parse_turtle_file
 
     rows: set[tuple] = set()
-    for stem, _, ttl_path, _, _ in golden_cases(examples_dir):
+    for stem, _, ttl_path, _, _ in golden_cases():
         if stem in exclude:
             continue
         rows.update(parse_turtle_file(ttl_path))

@@ -21,7 +21,7 @@ import random
 import xml.etree.ElementTree as ET
 from datetime import datetime, timedelta
 
-EXAMPLES_DIR = "/root/reference/examples"
+from .examples import EXAMPLES_DIR
 
 _MARC_NS = "http://www.loc.gov/MARC21/slim"
 
@@ -39,13 +39,10 @@ def records_in_xml_file(path: str) -> list[str]:
     semantics) so every consumer — fixtures, goldens, the convert CLI —
     sees the same tree.
     """
-    from ..core.marcxml import _tree_builder
+    from ..core.marcxml import _localname, _tree_builder
     root = ET.parse(path,
                     parser=ET.XMLParser(target=_tree_builder())).getroot()
-    if root.tag.endswith("record"):
-        records = [root]
-    else:
-        records = [el for el in root.iter() if el.tag.endswith("record")]
+    records = [el for el in root.iter() if _localname(el.tag) == "record"]
     out = []
     for element in records:
         element.tail = None  # ET.tostring would serialize the tail
@@ -53,10 +50,10 @@ def records_in_xml_file(path: str) -> list[str]:
     return out
 
 
-def fixture_records(examples_dir: str = EXAMPLES_DIR) -> list[tuple[str, str]]:
+def fixture_records() -> list[tuple[str, str]]:
     """(source_stem, standalone_record_xml) for every reference example."""
     out = []
-    for path in sorted(glob.glob(os.path.join(examples_dir, "*.xml"))):
+    for path in sorted(glob.glob(os.path.join(EXAMPLES_DIR, "*.xml"))):
         stem = os.path.splitext(os.path.basename(path))[0]
         for xml in records_in_xml_file(path):
             out.append((stem, xml))

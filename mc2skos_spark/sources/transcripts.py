@@ -36,7 +36,6 @@ CONTROL_001_PATTERN = r'<(?:\w+:)?controlfield[^>]*tag="001"[^>]*>([^<]*)<'
 
 
 def reassemble_records(transcripts: DataFrame,
-                       payload_tool: str = "marc_export",
                        block_size: int | None = None) -> DataFrame:
     """Transcripts → MARC_RECORDS (record_id, conv_id, record_xml).
 
@@ -63,7 +62,7 @@ def reassemble_records(transcripts: DataFrame,
     path).
     """
     payload_turns = (transcripts
-                     .filter(F.col("tool") == payload_tool)
+                     .filter(F.col("tool") == "marc_export")
                      .select("conv_id", "turn_idx", "text"))
 
     def ordered_concat(order_col, text_col):

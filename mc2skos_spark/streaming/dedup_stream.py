@@ -18,6 +18,9 @@ append skips itself when its table already carries this batch id — so
 a kill at any point replays to byte-identical state.  The first batch
 bootstraps an empty index (same code path; batch-internal pairs still
 emitted).
+
+The handler leaves compaction to ``jobs/dedup_index.py maintain``,
+which rewrites the index tables that per-batch appends fragment.
 """
 
 from __future__ import annotations
@@ -26,8 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pyspark.sql import functions as F
 
-from ..functions.incremental import (BUCKET_SUFFIX, KEEPER_SUFFIX,
-                                     REMAP_SUFFIX, SIG_SUFFIX,
+from ..functions.incremental import (BUCKET_SUFFIX, SIG_SUFFIX,
                                      append_batch_to_index, batch_index_rows,
                                      create_minhash_index,
                                      incremental_minhash_pairs)
@@ -43,8 +45,7 @@ class StreamingDeduper:
                  id_col: str = "doc_id", text_col: str = "text",
                  threshold: float = 0.9, n: int = 3,
                  num_hashes: int = 32, bands: int = 8,
-                 assign_keepers: bool = False,
-                 compact_policy: dict | None = None):
+                 assign_keepers: bool = False):
         self.warehouse = warehouse
         self.name = name
         self.id_col = id_col
@@ -57,19 +58,6 @@ class StreamingDeduper:
         #: batch (incremental_keeper_assign) — the full dedup DECISION
         #: on the stream, not just pair detection
         self.assign_keepers = assign_keepers
-        #: kwargs for ``IcebergishCatalog.maintain`` (``max_files`` /
-        #: ``min_rows_per_file``), evaluated after EVERY batch — streaming
-        #: is where append-per-batch small-file buildup bites hardest
-        #: (one parquet file per table per micro-batch).  The check reads
-        #: only the manifest JSON, and compaction fires exactly when the
-        #: policy says (e.g. a skewed append pattern fragments one table
-        #: long before its siblings); ``{}`` maintains after every batch,
-        #: ``None`` never.  Maintenance runs AFTER the batch's guarded
-        #: commits and is replay-transparent: compaction preserves rows,
-        #: properties (incl. the last_batch_id guards) and the committed
-        #: schema, and a kill mid-compaction leaves the previous snapshot
-        #: current — the next trigger simply retries the maintenance.
-        self.compact_policy = compact_policy
 
     def replay_applied(self, batch: DataFrame, batch_id: int,
                        catalog: IcebergishCatalog | None = None) -> bool:
@@ -126,7 +114,6 @@ class StreamingDeduper:
             incremental_keeper_assign(
                 catalog, self.name, batch, self.id_col, self.text_col,
                 threshold=self.threshold, batch_id=batch_id)
-            self._maybe_maintain(catalog)
             return
         # sign the batch ONCE; pair join and index append share it
         pre = batch_index_rows(catalog, self.name, batch,
@@ -138,81 +125,35 @@ class StreamingDeduper:
         catalog.write(PAIRS_TABLE % batch_id, pairs, lineage_key="id_a")
         append_batch_to_index(catalog, self.name, batch_id=batch_id,
                               precomputed=pre)
-        self._maybe_maintain(catalog)
-
-    def _maybe_maintain(self, catalog: IcebergishCatalog) -> None:
-        """Compact + expire this index's tables per ``compact_policy``
-        (see __init__): each existing table goes through
-        ``catalog.maintain`` with the policy kwargs — the no-op case
-        costs one manifest JSON read per table, and only the tables
-        whose stats trip the policy are rewritten.  Only the index's
-        OWN tables (its four known suffixes) are touched — an
-        open-ended prefix match would also sweep up a sibling index
-        named e.g. ``<name>_v2`` in the same warehouse and expire its
-        snapshot history.  Per-batch pair snapshots are single-write
-        tables that never fragment, so they are skipped too."""
-        if self.compact_policy is None:
-            return
-        existing = set(catalog.tables(prefix=self.name))
-        for suffix in (SIG_SUFFIX, BUCKET_SUFFIX, KEEPER_SUFFIX,
-                       REMAP_SUFFIX):
-            if self.name + suffix in existing:
-                catalog.maintain(self.name + suffix, keep_last=1,
-                                 **self.compact_policy)
-
-
-def start_stream(spark: SparkSession, input_dir: str,
-                 checkpoint_dir: str, handler,
-                 schema: str | None = None,
-                 available_now: bool = True,
-                 max_files_per_trigger: int = 1):
-    """readStream → foreachBatch boilerplate for a streaming handler.
-    ``schema`` defaults to the driver documents shape;
-    ``available_now`` drains the source and returns."""
-    source = (spark.readStream
-              .schema(schema or "doc_id long, text string")
-              .option("maxFilesPerTrigger", str(max_files_per_trigger))
-              .parquet(input_dir))
-    writer = (source.writeStream
-              .foreachBatch(handler)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
-    return writer.start()
-
-
-def union_snapshots(spark: SparkSession, warehouse: str,
-                    prefix: str) -> DataFrame:
-    """Union of all committed per-batch snapshots under a table
-    prefix."""
-    catalog = IcebergishCatalog(warehouse, spark)
-    out = None
-    for t in catalog.tables(prefix):
-        df = catalog.read(t)
-        out = df if out is None else out.unionByName(df)
-    if out is None:
-        raise FileNotFoundError("no %s* snapshots in %s"
-                                % (prefix, warehouse))
-    return out
 
 
 def stream_documents(spark: SparkSession, input_dir: str, warehouse: str,
                      checkpoint_dir: str, schema: str | None = None,
-                     available_now: bool = True,
-                     max_files_per_trigger: int = 1,
                      **dedup_kwargs):
-    """Start (and by default drain) a streaming dedup over a documents
-    directory."""
+    """Drain a documents directory through a streaming dedup, one file
+    per micro-batch.  ``schema`` defaults to the driver documents
+    shape."""
     deduper = StreamingDeduper(warehouse, **dedup_kwargs)
-    return start_stream(spark, input_dir, checkpoint_dir,
-                        deduper.process_batch, schema=schema,
-                        available_now=available_now,
-                        max_files_per_trigger=max_files_per_trigger)
+    source = (spark.readStream
+              .schema(schema or "doc_id long, text string")
+              .option("maxFilesPerTrigger", "1")
+              .parquet(input_dir))
+    query = (source.writeStream
+             .foreachBatch(deduper.process_batch)
+             .option("checkpointLocation", checkpoint_dir)
+             .trigger(availableNow=True).start())
+    query.awaitTermination()
+    return query
 
 
 def streamed_pairs(spark: SparkSession, warehouse: str) -> DataFrame:
     """Union of all committed per-batch pair snapshots."""
-    return union_snapshots(spark, warehouse, "dedup_pairs_batch_")
-
+    catalog = IcebergishCatalog(warehouse, spark)
+    out = None
+    for t in catalog.tables("dedup_pairs_batch_"):
+        df = catalog.read(t)
+        out = df if out is None else out.unionByName(df)
+    if out is None:
+        raise FileNotFoundError("no dedup_pairs_batch_* snapshots in %s"
+                                % warehouse)
+    return out

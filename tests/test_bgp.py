@@ -350,13 +350,11 @@ def test_projection_before_distinct(spark):
     assert [r["o"] for r in out.collect()] == ["b", "c"]
 
 
-def test_construct_ask_describe_query_forms(spark):
+def test_construct_ask_query_forms(spark):
     """The remaining SPARQL query forms: CONSTRUCT materializes a
     template graph per solution (null-position instantiations dropped,
-    result a SET); ASK is an early-exit existence probe; DESCRIBE
-    gathers a resource's triples both directions."""
-    from mc2skos_spark.operators.bgp import (ask_query, construct_query,
-                                             describe_query)
+    result a SET); ASK is an early-exit existence probe."""
+    from mc2skos_spark.operators.bgp import ask_query, construct_query
     t = _t(spark)
     # rule: narrower is the inverse of broader, plus a type marker
     got = construct_query(
@@ -384,10 +382,6 @@ def test_construct_ask_describe_query_forms(spark):
     assert ask_query(t, [("c", "broader", "?p")]) is False
     assert ask_query(t, [("?s", "prefLabel", "?l")],
                      filter="l = 'Gamma'") is True
-    # DESCRIBE: both directions, deduped
-    got = {tuple(r) for r in describe_query(spark and t, "b").collect()}
-    assert got == {("b", "broader", "c"), ("a", "broader", "b"),
-                   ("b", "prefLabel", "Beta")}
 
 
 def test_materialize_rules_fixpoint(spark):

@@ -1,11 +1,10 @@
-"""use_exact_match canonicalization: explicit skos:exactMatch / owl:sameAs
-edges pull subjects into one component via shared external targets."""
+"""Candidate sameAs edges for canonicalization: the degenerate-identifier
+stop-key cap."""
 
 import pytest
 
 from mc2skos_spark.core import constants as C
-from mc2skos_spark.operators.canonicalize import (candidate_sameas_edges,
-                                                  canonical_mapping)
+from mc2skos_spark.operators.canonicalize import candidate_sameas_edges
 from mc2skos_spark.plans import schemas
 
 pytestmark = pytest.mark.spark
@@ -13,39 +12,6 @@ pytestmark = pytest.mark.spark
 
 def triple(subj, pred, obj, lit=False):
     return (subj, pred, obj, lit, None, None, None, "r")
-
-
-@pytest.fixture()
-def triples(spark):
-    rows = [
-        # a and b both exactMatch the same viaf entity
-        triple("http://ex/a", C.SKOS + "exactMatch", "http://viaf.org/7"),
-        triple("http://ex/b", C.SKOS + "exactMatch", "http://viaf.org/7"),
-        # c sameAs d directly
-        triple("http://ex/c", C.OWL + "sameAs", "http://ex/d"),
-        # e is unrelated
-        triple("http://ex/e", C.RDF + "type", C.SKOS + "Concept"),
-        # identifiers exist but all distinct
-        triple("http://ex/a", C.DCTERMS + "identifier", "ida", lit=True),
-        triple("http://ex/b", C.DCTERMS + "identifier", "idb", lit=True),
-    ]
-    return spark.createDataFrame(rows, schema=schemas.TRIPLES)
-
-
-def test_exact_match_edges_and_mapping(spark, triples):
-    # without exact-match edges: no candidates (identifiers all distinct)
-    assert candidate_sameas_edges(triples).count() == 0
-
-    mapping = {r["uri"]: r["canonical"]
-               for r in canonical_mapping(triples,
-                                          use_exact_match=True).collect()}
-    # a, b and the shared viaf vertex form one component rooted at ex/a
-    assert mapping["http://ex/b"] == "http://ex/a"
-    assert mapping["http://viaf.org/7"] == "http://ex/a"
-    # c-d merged, canonical = lexicographic min
-    assert mapping["http://ex/d"] == "http://ex/c"
-    # e untouched
-    assert "http://ex/e" not in mapping
 
 
 def test_max_ident_freq_drops_degenerate_identifier(spark):

@@ -89,6 +89,27 @@ def test_long_key_with_stats_columns(spark, tmp_path):
             aggregate_lineage(spark, cat, "t_" + key, key)
 
 
+def test_tinyint_smallint_stats_columns_prune(spark, tmp_path):
+    """Byte and short columns carry zone-map stats: the manifest's
+    min/max equal a Spark aggregate over the written files, and a range
+    read skips the files whose span misses the bounds."""
+    cat = IcebergishCatalog(str(tmp_path / "wh"), spark)
+    df = (spark.range(0, 400, numPartitions=4)
+          .selectExpr("id", "cast(id % 128 - 64 as tinyint) AS b",
+                      "cast(id * 50 - 10000 as smallint) AS s"))
+    cols = ["b", "s"]
+    m = cat.write("t", df, lineage_key="id", stats_columns=cols,
+                  cluster_by=["s"], num_files=4)
+    assert len(m["lineage"]) == 4
+    assert manifest_lineage(m, cols) == \
+        aggregate_lineage(spark, cat, "t", "id", cols)
+    kept, total = cat.pruned_files("t", {"s": (-10000, -9000)})
+    assert 1 <= len(kept) < total
+    got = sorted(r["id"] for r in
+                 cat.read_where("t", {"s": (-10000, -9000)}).collect())
+    assert got == list(range(0, 21))
+
+
 def test_zero_row_file_is_absent(spark, tmp_path):
     cat = IcebergishCatalog(str(tmp_path / "wh"), spark)
     m0 = cat.write("t", spark.range(0, 10).selectExpr("id"),

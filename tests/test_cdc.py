@@ -68,90 +68,6 @@ def test_latest_snapshot_plan_is_one_aggregate_no_window(spark):
     assert "Window" not in plan
 
 
-def _read_state(spark, wh, table):
-    from mc2skos_spark.sinks.icebergish import IcebergishCatalog
-    cat = IcebergishCatalog(wh, spark)
-    return {r["k"]: (r["seq"], r["v"]) for r in cat.read(table).collect()}
-
-
-def test_merge_changes_sequential_equals_combined(spark, tmp_path):
-    """Applying two batches in sequence must equal applying their
-    union once (the MERGE associativity that makes resume safe)."""
-    from mc2skos_spark.operators.cdc import merge_changes
-    from mc2skos_spark.sinks.icebergish import IcebergishCatalog
-    b1 = spark.createDataFrame(
-        [(1, 1, "I", "a"), (2, 1, "I", "x"), (3, 1, "I", "m")], CH)
-    b2 = spark.createDataFrame(
-        [(1, 2, "U", "a2"),            # update
-         (2, 3, "D", None),            # delete
-         (4, 1, "I", "new")], CH)      # insert
-    dw = F.col("op") == "D"
-
-    cat_a = IcebergishCatalog(str(tmp_path / "a"), spark)
-    merge_changes(cat_a, "t", b1, ["k"], ["seq"], delete_when=dw)
-    merge_changes(cat_a, "t", b2, ["k"], ["seq"], delete_when=dw)
-    cat_b = IcebergishCatalog(str(tmp_path / "b"), spark)
-    merge_changes(cat_b, "t", b1.unionByName(b2), ["k"], ["seq"],
-                  delete_when=dw)
-
-    seq_state = _read_state(spark, str(tmp_path / "a"), "t")
-    assert seq_state == _read_state(spark, str(tmp_path / "b"), "t")
-    assert seq_state == {1: (2, "a2"), 3: (1, "m"), 4: (1, "new")}
-
-
-def test_merge_changes_stale_change_and_replay_are_noops(spark, tmp_path):
-    from mc2skos_spark.operators.cdc import merge_changes
-    from mc2skos_spark.sinks.icebergish import IcebergishCatalog
-    cat = IcebergishCatalog(str(tmp_path / "wh"), spark)
-    dw = F.col("op") == "D"
-    b1 = spark.createDataFrame([(1, 5, "U", "newer")], CH)
-    merge_changes(cat, "t", b1, ["k"], ["seq"], delete_when=dw)
-    # a late-arriving STALE change (seq 3 < stored 5) must not win
-    stale = spark.createDataFrame([(1, 3, "U", "older")], CH)
-    merge_changes(cat, "t", stale, ["k"], ["seq"], delete_when=dw)
-    assert _read_state(spark, str(tmp_path / "wh"), "t") == {1: (5, "newer")}
-    # replaying the ORIGINAL batch is a content no-op (manifest advances)
-    before = cat.current_manifest("t")["snapshot_id"]
-    merge_changes(cat, "t", b1, ["k"], ["seq"], delete_when=dw)
-    assert _read_state(spark, str(tmp_path / "wh"), "t") == {1: (5, "newer")}
-    assert cat.current_manifest("t")["snapshot_id"] > before
-
-
-def test_merge_changes_schema_mismatch_raises(spark, tmp_path):
-    from mc2skos_spark.operators.cdc import merge_changes
-    from mc2skos_spark.sinks.icebergish import IcebergishCatalog
-    cat = IcebergishCatalog(str(tmp_path / "wh"), spark)
-    merge_changes(cat, "t", spark.createDataFrame([(1, 1, "I", "a")], CH),
-                  ["k"], ["seq"])
-    bad = spark.createDataFrame([(1, 2, "b")], "k long, seq long, v string")
-    with pytest.raises(ValueError, match="schema mismatch"):
-        merge_changes(cat, "t", bad, ["k"], ["seq"])
-
-
-def test_merge_changes_untouched_keys_never_shuffle(spark, tmp_path):
-    """Plan assert: the stored-state branch feeding the output directly
-    is an anti-join with BROADCAST distribution of the batch keys —
-    no Exchange (shuffle) is allowed on the stored side."""
-    from mc2skos_spark.operators.cdc import latest_snapshot
-    from mc2skos_spark.sinks.icebergish import IcebergishCatalog
-    cat = IcebergishCatalog(str(tmp_path / "wh"), spark)
-    state = latest_snapshot(
-        spark.createDataFrame([(1, 1, "I", "a"), (2, 1, "I", "b")], CH),
-        ["k"], ["seq"])
-    cat.write("t", state)
-    current = cat.read("t")
-    changes = spark.createDataFrame([(2, 2, "U", "b2")], CH)
-    untouched = current.join(F.broadcast(changes.select("k").distinct()),
-                             ["k"], "left_anti")
-    plan = untouched._jdf.queryExecution().executedPlan().toString()
-    # the anti-join must be broadcast (LeftAnti, no nested loop) ...
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    # ... and the ONLY shuffle is the batch-key distinct (tiny side);
-    # the stored-state scan reaches the join with no Exchange
-    assert plan.count("Exchange hashpartitioning") == 1
-
-
 def test_compress_changes_vectors(spark):
     from mc2skos_spark.operators.cdc import compress_changes
     changes = spark.createDataFrame(

@@ -161,8 +161,13 @@ def test_global_rank_matches_global_window(spark):
     via_window = {(r["k"], r["id"]): r["rk"] for r in
                   df.withColumn("rk", F.row_number().over(
                       Window.orderBy("k", "id"))).collect()}
-    ranked = global_rank(df, ["k", "id"], rank_col="rk", num_partitions=7)
-    via_rank = {(r["k"], r["id"]): r["rk"] for r in ranked.collect()}
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "7")
+        ranked = global_rank(df, ["k", "id"], rank_col="rk")
+        via_rank = {(r["k"], r["id"]): r["rk"] for r in ranked.collect()}
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
     assert via_rank == via_window
     # and the plan has no single-partition global window: every window
     # is keyed by the physical partition id

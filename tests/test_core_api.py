@@ -20,8 +20,7 @@ def _record_xmls(xml_path):
 
     from mc2skos_spark.sources.synth import fixture_records
     stem = os.path.splitext(os.path.basename(xml_path))[0]
-    return [xml for s, xml in fixture_records(os.path.dirname(xml_path))
-            if s == stem]
+    return [xml for s, xml in fixture_records() if s == stem]
 
 
 def test_process_records_matches_golden_turtle():

@@ -7,10 +7,11 @@ import pytest
 
 from mc2skos_spark.core.errors import InvalidRecordError
 from mc2skos_spark.core.extract import extract_concept
-from mc2skos_spark.core.marcxml import iter_records_in_file
+from mc2skos_spark.core.marcxml import parse_record_xml
 from mc2skos_spark.core.triples import concept_to_triples
 from mc2skos_spark.core.turtle import parse_turtle_file, precision_recall
 from mc2skos_spark.core.vocab import Vocabularies
+from mc2skos_spark.sources.synth import records_in_xml_file
 
 from .golden import golden_cases
 
@@ -22,7 +23,8 @@ def convert_file(xml_path, options, default_scheme):
     if default_scheme:
         vocabularies.set_default_scheme(scheme=default_scheme)
     rows = []
-    for rec in iter_records_in_file(xml_path):
+    for xml in records_in_xml_file(xml_path):
+        rec = parse_record_xml(xml)
         try:
             bag = extract_concept(rec, vocabularies, options)
         except InvalidRecordError:
@@ -57,3 +59,31 @@ def test_golden_example(name, xml_path, ttl_path, options, default_scheme):
     min_precision = _KNOWN_STALE_GOLDEN_PRECISION.get(name, 0.95)
     assert precision >= min_precision, ("%d extra triples, e.g. %s"
                                         % (len(extra), sorted(extra)[:5]))
+
+
+def test_record_file_reader_keeps_pis_and_collection_namespace(tmp_path):
+    """The product's record-file reader on a two-record ``<collection>``
+    that declares the MARC namespace once and holds a ``<?ddc …?>`` PI
+    inside a note subfield: both records come back standalone, each
+    carries the namespace, and the PI flattens like the reference."""
+    import re
+
+    from mc2skos_spark.sources.synth import synth_marc_records
+    bodies = [re.sub(r'\s+xmlns="[^"]*"', "", xml, count=1)
+              for _, xml in synth_marc_records(2)[:2]]
+    note = ('<datafield tag="680" ind1=" " ind2=" "><subfield code="i">'
+            'Class here <?ddc top="yes"?>works on knowledge</subfield>'
+            '</datafield>')
+    bodies[0] = bodies[0].replace("</record>", note + "</record>")
+    path = tmp_path / "two.xml"
+    path.write_text('<collection xmlns="http://www.loc.gov/MARC21/slim">'
+                    '%s</collection>' % "".join(bodies))
+    xmls = records_in_xml_file(str(path))
+    assert len(xmls) == 2
+    assert all("http://www.loc.gov/MARC21/slim" in x for x in xmls)
+    recs = [parse_record_xml(x) for x in xmls]
+    notes = [sf for df in recs[0]["datafields"] if df["tag"] == "680"
+             for sf in df["subfields"] if "works" in (sf["value"] or "")]
+    assert notes == [{"code": "i", "value": "works on knowledge",
+                      "has_text": True,
+                      "text_nodes": ["Class here ", "works on knowledge"]}]

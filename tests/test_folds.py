@@ -145,7 +145,7 @@ def test_765_components_root_carry():
         sf("b", "306.6"), sf("a", "306.63"), sf("c", "306.69"),
         sf("r", "2"), sf("s", "804"), sf("u", "306.6804"),
         sf("9", "ess=hn")]}]
-    assert parse_765_components(fields) == ["306.6", "280.4"]
+    assert parse_765_components(fields, []) == ["306.6", "280.4"]
 
 
 def test_765_components_reversed_with_table():
@@ -159,7 +159,7 @@ def test_765_components_reversed_with_table():
                        sf("z", "5"), sf("r", "9"), sf("s", "31"),
                        sf("u", "299.31")]},
     ]
-    assert parse_765_components(fields) == ["299", "5--931", "201.3"]
+    assert parse_765_components(fields, []) == ["299", "5--931", "201.3"]
 
 
 def test_765_blank_s_surfaces_warning():
@@ -184,17 +184,17 @@ def test_765_blank_s_surfaces_warning():
 ])
 def test_parse_008(value, expected):
     created, record_type, number_type, display, synthesized, deprecated = \
-        parse_008_classification(value)
+        parse_008_classification(value, [])
     assert (record_type, number_type, display, synthesized, deprecated) == expected
     assert created is not None
 
 
 def test_parse_008_missing():
-    assert parse_008_classification(None) == (None, None, None, True, False, False)
+    assert parse_008_classification(None, []) == (None, None, None, True, False, False)
 
 
 def test_parse_008_dates():
-    created, *_ = parse_008_classification("091203aaaaaaaa")
+    created, *_ = parse_008_classification("091203aaaaaaaa", [])
     assert created.strftime("%Y-%m-%d") == "2009-12-03"
 
 

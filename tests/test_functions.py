@@ -256,10 +256,9 @@ def test_within_centroid_pairs_dim_path_identical(spark):
     assigned = spark.createDataFrame(
         rows, "vec_id bigint, _vn array<double>, _c bigint")
     hof = {(r["id_a"], r["id_b"]): (r["centroid"], r["cosine"])
-           for r in within_centroid_pairs(assigned, 0.97,
-                                          "vec_id").collect()}
+           for r in within_centroid_pairs(assigned, 0.97).collect()}
     fast = {(r["id_a"], r["id_b"]): (r["centroid"], r["cosine"])
-            for r in within_centroid_pairs(assigned, 0.97, "vec_id",
+            for r in within_centroid_pairs(assigned, 0.97,
                                            dim=8).collect()}
     assert hof == fast
     assert (200, 201) in fast          # ragged pair still scored
@@ -487,7 +486,8 @@ def test_domain_doc_counts(spark):
 
 def test_pack_sequences_matches_serial_prefix_sum(spark):
     """Distributed packing equals the serial exclusive prefix sum and
-    is invariant to the range-partition count."""
+    is invariant to the range-partition count (the session's
+    ``spark.sql.shuffle.partitions``)."""
     from mc2skos_spark.functions.packing import pack_sequences
     df = spark.createDataFrame([(i, (i % 5) + 1) for i in range(50)],
                                "doc_id bigint, n_tokens int")
@@ -495,11 +495,15 @@ def test_pack_sequences_matches_serial_prefix_sum(spark):
     for i in range(50):
         exp[i] = (acc, acc // 7)
         acc += (i % 5) + 1
-    for parts in (1, 5):
-        got = {r["doc_id"]: (r["start_offset"], r["seq_id"])
-               for r in pack_sequences(df, capacity=7,
-                                       num_partitions=parts).collect()}
-        assert got == exp
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for parts in (1, 5):
+            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+            got = {r["doc_id"]: (r["start_offset"], r["seq_id"])
+                   for r in pack_sequences(df, capacity=7).collect()}
+            assert got == exp
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def test_bpe_ish_token_count(spark):
@@ -782,29 +786,6 @@ def test_dsir_logweights_exact(spark):
     assert 4 not in got                       # empty doc: no score row
     # target-slice docs weight higher than the disjoint-vocab slice
     assert min(got[0][1], got[1][1]) > max(got[2][1], got[3][1])
-
-
-def test_dsir_xxhash_path_shape_parity(spark):
-    """The production xxhash64 bucket hash must change ONLY bucket
-    assignment: same scored doc set, same per-doc gram totals, same
-    plan shape (10k buckets supported)."""
-    from mc2skos_spark.functions.dsir import dsir_logweights
-    rows = [(0, "en", "the cat sat on the mat"),
-            (1, "en", "the dog ran to the park"),
-            (2, "zh", "zz qq zz ww qq"),
-            (3, "en", "")]
-    df = spark.createDataFrame(rows, "doc_id long, lang string, text string")
-    tgt = F.col("lang") == "en"
-    md5 = {r["doc_id"]: r["n_grams"]
-           for r in dsir_logweights(df, tgt).collect()}
-    xx = {r["doc_id"]: r["n_grams"]
-          for r in dsir_logweights(df, tgt, buckets=10_000,
-                                   hash_fn="xxhash64").collect()}
-    assert md5 == xx                      # same docs, same gram counts
-    with pytest.raises(ValueError):
-        dsir_logweights(df, tgt, buckets=512)          # md5 cap
-    with pytest.raises(ValueError):
-        dsir_logweights(df, tgt, hash_fn="crc32")
 
 
 def test_word_grams12_matches_two_call_form(spark):

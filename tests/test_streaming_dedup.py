@@ -179,77 +179,3 @@ def test_stream_with_keeper_assignment(spark, tmp_path):
            for r in current_keepers(cat, "docs_minhash").collect()}
     assert got == expected
     assert (11, 1) in got  # the cross-batch dup collapsed
-
-
-def test_stream_dedup_with_auto_compaction(spark, tmp_path):
-    """compact_policy={}: the index tables compact + expire after every
-    micro-batch, and the streamed answer (pairs AND index content AND
-    the replay guard) is identical to the maintenance-free run —
-    auto-maintenance must be invisible to the dedup semantics."""
-    import os
-    src = tmp_path / "docs_in"
-    spark.createDataFrame(BATCH1, "doc_id long, text string") \
-        .coalesce(1).write.parquet(str(src / "f1"))
-    spark.createDataFrame(BATCH2, "doc_id long, text string") \
-        .coalesce(1).write.parquet(str(src / "f2"))
-
-    wh = str(tmp_path / "wh")
-    stream_documents(spark, str(src) + "/*", wh,
-                     str(tmp_path / "ckpt"), threshold=0.9,
-                     compact_policy={}, **PARAMS)
-
-    got = {(r["id_a"], r["id_b"], r["est_jaccard"])
-           for r in streamed_pairs(spark, wh).collect()}
-    assert got == _expected_full(spark)
-
-    catalog = IcebergishCatalog(wh, spark)
-    for suffix in (SIG_SUFFIX, BUCKET_SUFFIX):
-        m = catalog.current_manifest("docs_minhash" + suffix)
-        assert len(m["dirs"]) == 1             # compacted to one snapshot
-        # replay guard survives maintenance (properties carried over)
-        assert int(m["properties"]["last_batch_id"]) == 1
-        tdir = os.path.join(wh, "docs_minhash" + suffix)
-        on_disk = {d for d in os.listdir(tdir) if d.startswith("snap-")}
-        assert on_disk == set(m["dirs"])       # old snapshots expired
-    assert catalog.current_manifest(
-        "docs_minhash" + SIG_SUFFIX)["row_count"] == 7
-
-    # a replayed batch against the compacted index is still a no-op
-    dedup = StreamingDeduper(wh, threshold=0.9, **PARAMS)
-    b2 = spark.createDataFrame(BATCH2, "doc_id long, text string")
-    assert dedup.replay_applied(b2, 1) is True
-
-
-def test_stream_dedup_with_policy_maintenance(spark, tmp_path):
-    """compact_policy: maintenance fires from MANIFEST STATS (file
-    count), not a batch counter — after draining, the fragmented index
-    tables are compacted with the replay guard intact and the dedup
-    answer identical to the maintenance-free run."""
-    src = tmp_path / "docs_in"
-    spark.createDataFrame(BATCH1, "doc_id long, text string") \
-        .coalesce(1).write.parquet(str(src / "f1"))
-    spark.createDataFrame(BATCH2, "doc_id long, text string") \
-        .coalesce(1).write.parquet(str(src / "f2"))
-
-    wh = str(tmp_path / "wh")
-    stream_documents(spark, str(src) + "/*", wh,
-                     str(tmp_path / "ckpt"), threshold=0.9,
-                     compact_policy={"max_files": 1}, **PARAMS)
-
-    got = {(r["id_a"], r["id_b"], r["est_jaccard"])
-           for r in streamed_pairs(spark, wh).collect()}
-    assert got == _expected_full(spark)
-
-    catalog = IcebergishCatalog(wh, spark)
-    for suffix in (SIG_SUFFIX, BUCKET_SUFFIX):
-        m = catalog.current_manifest("docs_minhash" + suffix)
-        assert len(m["lineage"]) == 1          # policy compacted to 1 file
-        assert int(m["properties"]["last_batch_id"]) == 1
-        # the policy is satisfied again → another maintain is a no-op
-        assert not catalog.needs_compaction("docs_minhash" + suffix,
-                                            max_files=1)
-    assert catalog.current_manifest(
-        "docs_minhash" + SIG_SUFFIX)["row_count"] == 7
-    dedup = StreamingDeduper(wh, threshold=0.9, **PARAMS)
-    b2 = spark.createDataFrame(BATCH2, "doc_id long, text string")
-    assert dedup.replay_applied(b2, 1) is True

@@ -1,6 +1,5 @@
 """Watermarked stream-stream interval join: append-mode streaming
-output must equal the batch interval join on the same events; outer
-rows emit exactly once after the watermark proves no match."""
+output must equal the batch interval join on the same events."""
 
 import datetime as dt
 import os
@@ -72,42 +71,13 @@ def test_stream_join_equals_batch_inner(spark, tmp_path):
     assert got == want
 
 
-def test_stream_join_left_outer_emits_unmatched_after_watermark(
-        spark, tmp_path):
-    # sentinel far-future rows on BOTH sides advance the watermark so
-    # unmatched left rows are provably matchless and get emitted
-    sent_a = [(99, 900, _ts(100000), "click")]
-    sent_o = [(99, 950, _ts(100000), "buy"),
-              (99, 951, _ts(100001), "buy")]
-    actions = _write_stream_batches(spark, tmp_path, "act",
-                                    [ACTIONS, sent_a])
-    outcomes = _write_stream_batches(spark, tmp_path, "out",
-                                     [OUTCOMES, sent_o])
-    q = (stream_interval_join(actions, outcomes, within="10 minutes",
-                              how="left")
-         .writeStream.format("parquet")
-         .option("path", str(tmp_path / "res"))
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    rows = [r for r in spark.read.parquet(str(tmp_path / "res"))
-            .collect() if r["user_id"] != 99]
-    matched = {(r["user_id"], r["l_event_id"], r["r_event_id"])
-               for r in rows if r["r_event_id"] is not None}
-    unmatched = {(r["user_id"], r["l_event_id"]) for r in rows
-                 if r["r_event_id"] is None}
-    assert matched == {(1, 10, 50), (1, 11, 51), (2, 20, 60),
-                       (2, 20, 61)}
-    assert unmatched == {(3, 30)}          # exactly once, nulls right
-
-
 def test_batch_frame_agnostic_and_guards(spark):
     a = spark.createDataFrame(ACTIONS, SCHEMA)
     o = spark.createDataFrame(OUTCOMES, SCHEMA)
-    out = stream_interval_join(a, o, within="10 minutes", how="left")
-    assert out.filter(F.col("r_event_id").isNull()).count() == 1
-    with pytest.raises(ValueError, match="how"):
-        stream_interval_join(a, o, how="full")
+    out = stream_interval_join(a, o, within="10 minutes")
+    assert out.columns == ["user_id", "l_event_id", "l_ts", "l_kind",
+                           "r_event_id", "r_ts", "r_kind"]
+    assert out.filter(F.col("r_event_id").isNull()).count() == 0
     with pytest.raises(ValueError, match="within"):
         stream_interval_join(a, o, within="10; DROP TABLE")
 

@@ -1,6 +1,6 @@
 """As-of and interval joins: hand vectors (mirroring a DuckDB ASOF
-probe), tie/tolerance/direction semantics, pair uniqueness across
-buckets, and plan shape (no nested-loop / cartesian anywhere)."""
+probe), null and boundary semantics, pair uniqueness across buckets,
+and plan shape (no nested-loop / cartesian anywhere)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -28,38 +28,6 @@ def test_asof_backward_matches_duckdb_probe(spark):
                               ["v"]).collect()}
     assert got == {(1, 5): ("c", 2), (1, 10): ("a", 10),
                    (1, 20): ("b", 15), (2, 7): (None, None)}
-
-
-def test_asof_forward(spark):
-    left, right = _asof_fixture(spark)
-    got = {(r["k"], r["ts"]): (r["v"], r["matched_ts"])
-           for r in asof_join(left, right, ["k"], "ts", "ts", ["v"],
-                              direction="forward").collect()}
-    assert got == {(1, 5): ("a", 10), (1, 10): ("a", 10),
-                   (1, 20): (None, None), (2, 7): (None, None)}
-
-
-def test_asof_tolerance(spark):
-    left, right = _asof_fixture(spark)
-    got = {(r["k"], r["ts"]): r["v"]
-           for r in asof_join(left, right, ["k"], "ts", "ts", ["v"],
-                              tolerance_us=3).collect()}
-    # (1,5)->c is 3 away (kept, inclusive); (1,20)->b is 5 away (cut)
-    assert got == {(1, 5): "c", (1, 10): "a", (1, 20): None,
-                   (2, 7): None}
-
-
-def test_asof_right_ties_break_deterministically(spark):
-    left = spark.createDataFrame([(1, 10)], "k long, ts long")
-    right = spark.createDataFrame(
-        [(1, 10, 7, "lo"), (1, 10, 9, "hi"), (1, 10, 8, "mid")],
-        "k long, ts long, seq long, v string")
-    got = asof_join(left, right, ["k"], "ts", "ts", ["v"],
-                    right_tiebreak="seq").collect()
-    assert [(r["v"]) for r in got] == ["hi"]
-    fwd = asof_join(left, right, ["k"], "ts", "ts", ["v"],
-                    direction="forward", right_tiebreak="seq").collect()
-    assert [(r["v"]) for r in fwd] == ["hi"]
 
 
 def test_asof_null_right_keys_never_match(spark):
@@ -141,9 +109,8 @@ def test_plans_never_nested_loop(spark):
         assert "BroadcastNestedLoopJoin" not in plan
 
 
-@pytest.mark.parametrize("direction", ["backward", "forward"])
 @pytest.mark.parametrize("block_us", [1, 3, 7, 1000])
-def test_asof_block_salted_equals_unsalted(spark, direction, block_us):
+def test_asof_block_salted_equals_unsalted(spark, block_us):
     """The block-salted two-phase path (hot-key mitigation) must be
     semantically IDENTICAL to the single-window path at every block
     width — including widths of 1 (every row its own block, pure
@@ -151,38 +118,33 @@ def test_asof_block_salted_equals_unsalted(spark, direction, block_us):
     inclusive boundaries, unmatched keys and cross-block matches."""
     left, right = _asof_fixture(spark)
     base = {(r["k"], r["ts"]): (r["v"], r["matched_ts"])
-            for r in asof_join(left, right, ["k"], "ts", "ts", ["v"],
-                               direction=direction).collect()}
+            for r in asof_join(left, right, ["k"], "ts", "ts",
+                               ["v"]).collect()}
     salted = {(r["k"], r["ts"]): (r["v"], r["matched_ts"])
               for r in asof_join(left, right, ["k"], "ts", "ts", ["v"],
-                                 direction=direction,
                                  block_us=block_us).collect()}
     assert salted == base
 
 
-def test_asof_block_salted_hot_key_ties_tolerance_nulls(spark):
-    """Planted 75%-hot key with (key, ts) ties, a tolerance cut, null
-    left keys and null left timestamps — every row must carry the
+def test_asof_block_salted_hot_key_ties_nulls(spark):
+    """Planted 75%-hot key with left rows tied to right timestamps,
+    null left keys and null left timestamps — every row must carry the
     exact same verdict through the salted path."""
     rows = [(1, t) for t in range(0, 300)] + \
         [(2, t) for t in range(0, 50)] + \
         [(None, 10), (1, None)]
     left = spark.createDataFrame(rows, "k long, ts long")
     right = spark.createDataFrame(
-        [(1, t, t, f"r{t}") for t in range(0, 300, 20)]
-        + [(1, 40, 999, "dup_hi"), (2, 25, 0, "x")],
-        "k long, ts long, seq long, v string")
-    for kwargs in ({}, {"tolerance_us": 30},
-                   {"direction": "forward"},
-                   {"right_tiebreak": "seq"}):
-        base = {(r["k"], r["ts"]): (r["v"], r["matched_ts"])
-                for r in asof_join(left, right, ["k"], "ts", "ts",
-                                   ["v"], **kwargs).collect()}
-        salted = {(r["k"], r["ts"]): (r["v"], r["matched_ts"])
-                  for r in asof_join(left, right, ["k"], "ts", "ts",
-                                     ["v"], block_us=16,
-                                     **kwargs).collect()}
-        assert salted == base, f"diverged for {kwargs}"
+        [(1, t, f"r{t}") for t in range(0, 300, 20)] + [(2, 25, "x")],
+        "k long, ts long, v string")
+    base = {(r["k"], r["ts"]): (r["v"], r["matched_ts"])
+            for r in asof_join(left, right, ["k"], "ts", "ts",
+                               ["v"]).collect()}
+    salted = {(r["k"], r["ts"]): (r["v"], r["matched_ts"])
+              for r in asof_join(left, right, ["k"], "ts", "ts", ["v"],
+                                 block_us=16).collect()}
+    assert salted == base
+    assert base[(1, 40)] == ("r40", 40) and base[(1, 59)] == ("r40", 40)
 
 
 def test_interval_join_width_invariance(spark):
