@@ -41,7 +41,6 @@ def build_vocabularies(default_scheme=None) -> Vocabularies:
 
 
 def process_record(xml: str, options: dict | None = None,
-                   default_scheme=None,
                    vocabularies: Vocabularies | None = None) -> list[tuple]:
     """One serialized MARCXML record → its triple rows (unsorted,
     per-record set semantics applied).  Raises
@@ -52,7 +51,7 @@ def process_record(xml: str, options: dict | None = None,
     (mc2skos.py:157-177)."""
     options = options or {}
     if vocabularies is None:
-        vocabularies = build_vocabularies(default_scheme)
+        vocabularies = build_vocabularies()
     bag = extract_concept(parse_record_xml(xml), vocabularies, options)
     if bag is None or not bag["is_public"]:
         # skip flags / publish filter (P2/P3): the reference's

@@ -24,8 +24,7 @@ class UnknownSchemeError(InvalidRecordError):
     message variants (code known vs unknown).
     """
 
-    def __init__(self, code: str | None = None, message: str | None = None,
-                 control_number: str | None = None):
+    def __init__(self, code: str | None = None, message: str | None = None):
         if message is None:
             if code is None:
                 message = ("Could not find classification scheme or subject "
@@ -33,5 +32,5 @@ class UnknownSchemeError(InvalidRecordError):
             else:
                 message = ("Cannot generate URIs for unknown classification "
                            "scheme or subject vocabulary \"%s\"." % code)
-        super().__init__(message, control_number=control_number)
+        super().__init__(message)
         self.code = code

@@ -34,18 +34,21 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from mc2skos_spark.functions.textstats import BPE_ISH_PATTERN
 
+#: a pair seen fewer times than this is never merged
+MIN_PAIR_COUNT = 2
+
 _CHARS = "CASE WHEN length(word) < 1 THEN cast(array() AS array<string>)" \
     " ELSE transform(sequence(1, length(word)), i -> substring(word, i, 1))" \
     " END"
 
 
-def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def word_counts(docs: DataFrame) -> DataFrame:
     """Corpus → (word, cnt, syms) word-frequency table under the
     BPE-ish pre-tokenizer, each word exploded to its character-symbol
     array.  The ONLY corpus-scale stage of BPE training."""
     return (docs
             .select(F.explode(
-                F.regexp_extract_all(F.col(text_col),
+                F.regexp_extract_all(F.col("text"),
                                      F.lit(BPE_ISH_PATTERN), 0))
                 .alias("word"))
             .groupBy("word")
@@ -73,12 +76,11 @@ def pair_counts(words: DataFrame) -> DataFrame:
             .agg(F.sum("cnt").cast("long").alias("pair_count")))
 
 
-def bpe_pair_stats(docs: DataFrame, top_k: int = 20,
-                   text_col: str = "text") -> DataFrame:
+def bpe_pair_stats(docs: DataFrame, top_k: int = 20) -> DataFrame:
     """Round-1 BPE statistics: the ``top_k`` most frequent adjacent
     character pairs (count desc, then (a, b) asc — a total order, so
     the cutoff is deterministic in any engine)."""
-    return (pair_counts(word_counts(docs, text_col))
+    return (pair_counts(word_counts(docs))
             .orderBy(F.desc("pair_count"), "a", "b")
             .limit(top_k))
 
@@ -123,8 +125,7 @@ def encode_word(word: str, merges: list[tuple[str, str]]) -> list[str]:
 
 
 def encode_token_counts(docs: DataFrame,
-                        merges: list[tuple[str, str]],
-                        text_col: str = "text") -> DataFrame:
+                        merges: list[tuple[str, str]]) -> DataFrame:
     """Corpus → BPE token-frequency table ``(token, n)`` for a fixed
     merge table.
 
@@ -146,7 +147,7 @@ def encode_token_counts(docs: DataFrame,
     def enc(words):
         return words.map(lambda w: encode_word(w, frozen))
 
-    return (word_counts(docs, text_col)
+    return (word_counts(docs)
             .select(F.explode(enc("word")).alias("token"), "cnt")
             .groupBy("token")
             .agg(F.sum("cnt").cast("long").alias("n")))
@@ -229,11 +230,9 @@ def _select_merge_batch(cands: list[tuple[str, str, int]],
 
 
 def train_bpe_merges(docs: DataFrame, n_merges: int,
-                     text_col: str = "text",
-                     min_pair_count: int = 2,
                      batch_size: int = 16) -> list[tuple[str, str, int]]:
     """Learn ``n_merges`` BPE merges: [(a, b, pair_count), ...] in
-    merge order.  Stops early when no pair reaches ``min_pair_count``.
+    merge order.  Stops early when no pair reaches ``MIN_PAIR_COUNT``.
 
     Scale shape: one corpus shuffle up front (word counts), then per
     round two jobs over the compact word table (pair aggregate + merge
@@ -254,7 +253,7 @@ def train_bpe_merges(docs: DataFrame, n_merges: int,
     ``tests/test_functions.py``).
     """
     batch_size = max(1, int(batch_size))
-    cur = word_counts(docs, text_col).localCheckpoint()
+    cur = word_counts(docs).localCheckpoint()
     merges: list[tuple[str, str, int]] = []
     prior_tokens: set[str] = set()
     while len(merges) < int(n_merges):
@@ -266,11 +265,11 @@ def train_bpe_merges(docs: DataFrame, n_merges: int,
         cands = [(r["a"], r["b"], int(r["pair_count"])) for r in raw]
         truncated = len(raw) == limit
         boundary = cands[-1][2] if truncated else None
-        cands = [c for c in cands if c[2] >= min_pair_count]
+        cands = [c for c in cands if c[2] >= MIN_PAIR_COUNT]
         if not cands:
             break
-        if boundary is not None and boundary < min_pair_count:
-            boundary = None     # every pair ≥ min_pair_count was seen
+        if boundary is not None and boundary < MIN_PAIR_COUNT:
+            boundary = None     # every pair ≥ MIN_PAIR_COUNT was seen
         chosen = _select_merge_batch(cands, prior_tokens, boundary, want)
         if not chosen:
             # boundary rule rejected even the top pair (a truncated

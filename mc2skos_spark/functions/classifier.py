@@ -36,7 +36,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from mc2skos_spark.functions.dsir import SCALE, hashed_ngram_buckets
+from mc2skos_spark.functions.dsir import (BUCKETS, SCALE,
+                                          hashed_ngram_buckets)
 
 
 def linear_text_scores(documents: DataFrame,
@@ -142,8 +143,7 @@ def _bucket_vectors(documents: DataFrame, buckets: int,
                          array_to_vector(dense).alias("features"))
 
 
-def save_classifier(path: str, weights: dict[int, int], bias_q: int,
-                    buckets: int = 256, hash_fn: str = "md5") -> None:
+def save_classifier(path: str, weights: dict[int, int], bias_q: int) -> None:
     """Persist a trained gate as one JSON file — the model IS a
     dimension table, so its wire format is a dict, not a model-server
     artifact.  Consumed by :func:`load_classifier` /
@@ -152,8 +152,8 @@ def save_classifier(path: str, weights: dict[int, int], bias_q: int,
     with open(path, "w") as fp:
         json.dump({"weights": {str(b): int(w)
                                for b, w in sorted(weights.items())},
-                   "bias_q": int(bias_q), "buckets": int(buckets),
-                   "hash_fn": hash_fn}, fp)
+                   "bias_q": int(bias_q), "buckets": BUCKETS,
+                   "hash_fn": "md5"}, fp)
 
 
 def load_classifier(path: str) -> dict:
@@ -171,11 +171,6 @@ def load_classifier(path: str) -> dict:
 
 
 def train_quality_classifier(documents: DataFrame, is_positive: Column,
-                             buckets: int = 256,
-                             id_col: str = "doc_id",
-                             text_col: str = "text",
-                             hash_fn: str = "md5",
-                             reg_param: float = 0.0,
                              max_iter: int = 100) -> tuple[dict[int, int],
                                                            int]:
     """Train the gate: MLlib LogisticRegression over hashed-bucket
@@ -189,10 +184,10 @@ def train_quality_classifier(documents: DataFrame, is_positive: Column,
     contract as scoring)."""
     from pyspark.ml.classification import LogisticRegression
 
-    train = _bucket_vectors(documents, buckets, id_col, text_col,
-                            is_positive, hash_fn)
+    train = _bucket_vectors(documents, BUCKETS, "doc_id", "text",
+                            is_positive, "md5")
     model = LogisticRegression(
-        maxIter=int(max_iter), regParam=float(reg_param),
+        maxIter=int(max_iter), regParam=0.0,
         standardization=False).fit(train)
     import math
     weights = {b: math.floor(float(w) * SCALE)

@@ -21,15 +21,13 @@ from .dedup import hashed_shingles
 
 
 def benchmark_contamination(docs: DataFrame, bench: DataFrame,
-                            id_col: str = "doc_id",
-                            text_col: str = "text",
                             n: int = 5,
                             min_hits: int = 2) -> DataFrame:
     """Per training doc: how many distinct word ``n``-gram shingles it
     shares with the benchmark corpus, and a ``contaminated`` flag
     (``>= min_hits`` shared shingles).
 
-    Returns ``(id_col, bench_shingles, contaminated)`` with one row per
+    Returns ``(doc_id, bench_shingles, contaminated)`` with one row per
     input training doc (docs with no overlap report 0 / false).
     Shingles are hashed token tuples (:func:`~.dedup.hashed_shingles`):
     no shingle strings are ever materialized, the probe joins on longs,
@@ -37,18 +35,18 @@ def benchmark_contamination(docs: DataFrame, bench: DataFrame,
     the post-join count(*) is the number of DISTINCT shared shingles.
     """
     bsh = (bench
-           .select(F.explode(hashed_shingles(F.col(text_col), n))
+           .select(F.explode(hashed_shingles(F.col("text"), n))
                    .alias("sh"))
            .distinct())
-    tsh = docs.select(F.col(id_col),
-                      F.explode(hashed_shingles(F.col(text_col), n))
+    tsh = docs.select(F.col("doc_id"),
+                      F.explode(hashed_shingles(F.col("text"), n))
                       .alias("sh"))
     hits = (tsh.join(F.broadcast(bsh), "sh")
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("bench_shingles")))
-    return (docs.select(id_col)
-            .join(hits, id_col, "left")
-            .select(F.col(id_col),
+    return (docs.select("doc_id")
+            .join(hits, "doc_id", "left")
+            .select(F.col("doc_id"),
                     F.coalesce("bench_shingles", F.lit(0))
                      .cast("long").alias("bench_shingles"),
                     (F.coalesce("bench_shingles", F.lit(0)) >= min_hits)

@@ -228,8 +228,6 @@ def minhash_similarity(signatures: DataFrame,
 
 
 def embedding_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.95,
-                             id_col: str = "vec_id",
-                             vec_col: str = "embedding",
                              num_planes: int = 0,
                              dim: int | None = None,
                              multiprobe: int = 0) -> DataFrame:
@@ -246,8 +244,8 @@ def embedding_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.95,
     """
     from .similarity import _planes, assign_lsh_buckets, cosine
 
-    base = embeddings.select(F.col(id_col).alias("id"),
-                             F.col(vec_col).cast("array<double>")
+    base = embeddings.select(F.col("vec_id").alias("id"),
+                             F.col("embedding").cast("array<double>")
                              .alias("vec"))
     if num_planes:
         if dim is None:
@@ -338,8 +336,6 @@ def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 def semantic_dedup_pairs(embeddings: DataFrame, num_centroids: int = 16,
                          threshold: float = 0.97, centroid_mod: int = 8,
-                         id_col: str = "vec_id",
-                         vec_col: str = "embedding",
                          dim: int | None = None) -> DataFrame:
     """SemDeDup-style semantic near-dup pairs (Abbas et al. 2023,
     arXiv:2303.09540): partition the embedding space around K
@@ -370,9 +366,10 @@ def semantic_dedup_pairs(embeddings: DataFrame, num_centroids: int = 16,
                              assign_nearest_centroid, unit_vector)
 
     base = embeddings.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v"))
+        F.col("vec_id"),
+        F.col("embedding").cast("array<double>").alias("_v"))
     cents = arithmetic_centroids(base, num_centroids, centroid_mod,
-                                 id_col, "_v")
+                                 "vec_id", "_v")
     # assignment ships the centroid matrix via a broadcast variable and
     # runs one matmul-argmax per Arrow batch — plan size O(1) in K, so
     # the paper-scale K (≈ n / target_cluster_size, e.g. 50k) is a data
@@ -380,19 +377,18 @@ def semantic_dedup_pairs(embeddings: DataFrame, num_centroids: int = 16,
     # inside the helper and the input column is already unit (_vn), so
     # scores stay exact cosines
     assigned = (assign_nearest_centroid(
-                    base.select(F.col(id_col),
+                    base.select(F.col("vec_id"),
                                 unit_vector(F.col("_v")).alias("_vn")),
                     cents, "_vn", "_c", normalize_input=False)
                 .localCheckpoint(eager=False))
-    return within_centroid_pairs(assigned, threshold, id_col, dim=dim)
+    return within_centroid_pairs(assigned, threshold, dim=dim)
 
 
 def within_centroid_pairs(assigned: DataFrame,
                           threshold: float = 0.97,
-                          id_col: str = "vec_id",
                           dim: int | None = None) -> DataFrame:
     """The quadratic half of SemDeDup over an ALREADY-assigned table
-    ``(id_col, _vn unit vector, _c centroid)``: within-cluster
+    ``(vec_id, _vn unit vector, _c centroid)``: within-cluster
     self-join on the centroid key, one dot product per candidate pair.
     Isolated from :func:`semantic_dedup_pairs` so skew evidence can
     stage a pathological assignment directly against the REAL operator
@@ -420,10 +416,10 @@ def within_centroid_pairs(assigned: DataFrame,
         prefix = max(1, int(dim) // 4)
         assigned = assigned.withColumn(
             "_sn", suffix_norm(F.col("_vn"), prefix))
-        a = assigned.select(F.col(id_col).alias("id_a"),
+        a = assigned.select(F.col("vec_id").alias("id_a"),
                             F.col("_vn").alias("_vna"),
                             F.col("_sn").alias("_sna"), "_c")
-        b = assigned.select(F.col(id_col).alias("id_b"),
+        b = assigned.select(F.col("vec_id").alias("id_b"),
                             F.col("_vn").alias("_vnb"),
                             F.col("_sn").alias("_snb"), "_c")
         va, vb = F.col("_vna"), F.col("_vnb")
@@ -435,9 +431,9 @@ def within_centroid_pairs(assigned: DataFrame,
         c4 = F.when((F.size(va) == int(dim)) & (F.size(vb) == int(dim)),
                     guarded).otherwise(F.floor(_dot(va, vb) * 10000))
     else:
-        a = assigned.select(F.col(id_col).alias("id_a"),
+        a = assigned.select(F.col("vec_id").alias("id_a"),
                             F.col("_vn").alias("_vna"), "_c")
-        b = assigned.select(F.col(id_col).alias("id_b"),
+        b = assigned.select(F.col("vec_id").alias("id_b"),
                             F.col("_vn").alias("_vnb"), "_c")
         c4 = F.floor(_dot(F.col("_vna"), F.col("_vnb")) * 10000)
     scored = (a.join(b, ["_c"])
@@ -451,15 +447,13 @@ def within_centroid_pairs(assigned: DataFrame,
 
 def semantic_dedup_keepers(embeddings: DataFrame, num_centroids: int = 16,
                            threshold: float = 0.97, centroid_mod: int = 8,
-                           id_col: str = "vec_id",
-                           vec_col: str = "embedding",
                            dim: int | None = None) -> DataFrame:
     """The full SemDeDup decision: semantic pairs → connected components
     → min-id keeper per duplicate group; every input row gets a
     ``(id, keeper_id)`` verdict (unpaired rows keep themselves)."""
     pairs = semantic_dedup_pairs(embeddings, num_centroids, threshold,
-                                 centroid_mod, id_col, vec_col, dim=dim)
-    return near_dup_keepers(embeddings, pairs, id_col=id_col)
+                                 centroid_mod, dim=dim)
+    return near_dup_keepers(embeddings, pairs, id_col="vec_id")
 
 
 def near_dup_keepers(df: DataFrame, pairs: DataFrame,
@@ -534,9 +528,7 @@ def simhash_near_pairs(sigs: DataFrame, max_hamming: int = 3) -> DataFrame:
 
 
 def repeated_substring_spans(df: DataFrame, window: int = 8,
-                             min_docs: int = 2,
-                             id_col: str = "doc_id",
-                             text_col: str = "text") -> DataFrame:
+                             min_docs: int = 2) -> DataFrame:
     """Exact repeated-substring detection, span-merged per document —
     the token-level counterpart of document-level dedup (Lee et al.,
     "Deduplicating Training Data Makes Language Models Better": remove
@@ -573,7 +565,7 @@ def repeated_substring_spans(df: DataFrame, window: int = 8,
         raise ValueError("repeated_substring_spans: window must be >= 2")
     if min_docs < 2:
         raise ValueError("repeated_substring_spans: min_docs must be >= 2")
-    toks = F.filter(F.split(F.lower(F.col(text_col)), r"\s+"),
+    toks = F.filter(F.split(F.lower(F.col("text")), r"\s+"),
                     lambda t: t != "")
 
     empty_wins = F.array().cast("array<struct<pos:int,wkey:bigint>>")
@@ -598,11 +590,11 @@ def repeated_substring_spans(df: DataFrame, window: int = 8,
         return F.when(nwin >= 1, seq).otherwise(empty_wins)
 
     wins = (df.select(
-                F.col(id_col),
+                F.col("doc_id"),
                 F.explode(F.aggregate(
                     F.array(toks), empty_wins,
                     lambda acc, tk: wins_of(tk))).alias("w"))
-            .select(id_col, "w.pos", "w.wkey")
+            .select("doc_id", "w.pos", "w.wkey")
             # wins feeds the duplicate-key aggregate AND the join back:
             # one lazy lineage cut materializes the (id, pos, 8-byte
             # key) stream instead of re-running the tokenize + window
@@ -610,14 +602,14 @@ def repeated_substring_spans(df: DataFrame, window: int = 8,
             .localCheckpoint(eager=False))
 
     dup_keys = (wins.groupBy("wkey")
-                .agg(F.count_distinct(F.col(id_col)).alias("nd"))
+                .agg(F.count_distinct(F.col("doc_id")).alias("nd"))
                 .filter(F.col("nd") >= min_docs)
                 .select("wkey"))
 
     flagged = wins.join(dup_keys, "wkey").select(
-        id_col, "pos", (F.col("pos") + window).alias("end"))
+        "doc_id", "pos", (F.col("pos") + window).alias("end"))
 
-    by_doc = Window.partitionBy(id_col).orderBy("pos")
+    by_doc = Window.partitionBy("doc_id").orderBy("pos")
     prior = (by_doc.rowsBetween(Window.unboundedPreceding, -1))
     islands = (flagged
                .withColumn("prev_max_end",
@@ -628,19 +620,17 @@ def repeated_substring_spans(df: DataFrame, window: int = 8,
                                          F.lit(-1))).cast("int"))
                .withColumn("island", F.sum("new_island").over(
                    by_doc.rowsBetween(Window.unboundedPreceding, 0))))
-    return (islands.groupBy(id_col, "island")
+    return (islands.groupBy("doc_id", "island")
             .agg(F.min("pos").alias("span_start"),
                  F.max("end").alias("span_end"),
                  F.count(F.lit(1)).alias("n_windows"))
-            .select(id_col, "span_start", "span_end", "n_windows"))
+            .select("doc_id", "span_start", "span_end", "n_windows"))
 
 
 def scrub_substring_spans(df: DataFrame, window: int = 8,
-                          min_docs: int = 2,
-                          id_col: str = "doc_id",
-                          text_col: str = "text") -> DataFrame:
+                          min_docs: int = 2) -> DataFrame:
     """APPLY :func:`repeated_substring_spans` to the text: excise every
-    flagged token span and return the input frame with ``text_col``
+    flagged token span and return the input frame with ``text``
     rewritten (all other columns untouched) — the step Lee et al.
     actually train on, not just the detection.
 
@@ -669,31 +659,28 @@ def scrub_substring_spans(df: DataFrame, window: int = 8,
     spans are position-local, so chunk-wise excision composes.
     """
     spans = repeated_substring_spans(df, window=window,
-                                     min_docs=min_docs,
-                                     id_col=id_col, text_col=text_col)
-    per_doc = (spans.groupBy(id_col)
+                                     min_docs=min_docs)
+    per_doc = (spans.groupBy("doc_id")
                .agg(F.collect_list(
                    F.struct(F.col("span_start").alias("s"),
                             F.col("span_end").alias("e")))
                    .alias("__spans")))
-    toks = F.filter(F.split(F.col(text_col), r"\s+"),
+    toks = F.filter(F.split(F.col("text"), r"\s+"),
                     lambda t: t != "")
     kept_toks = F.filter(
         toks,
         lambda t, i: ~F.exists(
             F.col("__spans"),
             lambda sp: (i >= sp["s"]) & (i < sp["e"])))
-    scrubbed = F.when(F.col("__spans").isNull(), F.col(text_col)) \
+    scrubbed = F.when(F.col("__spans").isNull(), F.col("text")) \
         .otherwise(F.concat_ws(" ", kept_toks))
-    out_cols = [scrubbed.alias(c) if c == text_col else F.col(c)
+    out_cols = [scrubbed.alias(c) if c == "text" else F.col(c)
                 for c in df.columns]
-    return (df.join(per_doc, id_col, "left")
+    return (df.join(per_doc, "doc_id", "left")
             .select(*out_cols))
 
 
-def paragraph_dedup(df: DataFrame, para_tokens: int = 16,
-                    id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
+def paragraph_dedup(df: DataFrame, para_tokens: int = 16) -> DataFrame:
     """Cross-document PARAGRAPH dedup — MassiveText / Gopher's
     "repeated passage removal" (Rae et al. 2021, appendix A): chunk
     every document into non-overlapping ``para_tokens``-token
@@ -706,7 +693,7 @@ def paragraph_dedup(df: DataFrame, para_tokens: int = 16,
     within one (two identical chunks in the same doc keep only the
     earlier).
 
-    Returns ``(id_col, n_paras, n_kept, kept_text)`` — total over
+    Returns ``(doc_id, n_paras, n_kept, kept_text)`` — total over
     input docs: a document whose every paragraph loses keeps its row
     with ``n_kept = 0`` and ``kept_text = ''``.
 
@@ -725,21 +712,20 @@ def paragraph_dedup(df: DataFrame, para_tokens: int = 16,
     if para_tokens < 1:
         raise ValueError("para_tokens must be >= 1, got %d"
                          % para_tokens)
-    chunks = chunk_documents(df.select(id_col, text_col),
-                             para_tokens, para_tokens,
-                             id_col, text_col)
+    chunks = chunk_documents(df.select("doc_id", "text"),
+                             para_tokens, para_tokens)
     # chunks feeds THREE consumers (winner election, the join back,
     # per-doc totals) — cut the lineage so the tokenize+explode
     # chunking pass runs once per action, not three times
     chunks = chunks.localCheckpoint(eager=False)
     winners = (chunks.groupBy("chunk_text")
-               .agg(F.min(F.struct(F.col(id_col).alias("i"),
+               .agg(F.min(F.struct(F.col("doc_id").alias("i"),
                                    F.col("chunk_idx").alias("x")))
                     .alias("w")))
     kept = (chunks.join(winners, "chunk_text")
-            .filter((F.col("w.i") == F.col(id_col))
+            .filter((F.col("w.i") == F.col("doc_id"))
                     & (F.col("w.x") == F.col("chunk_idx"))))
-    rebuilt = (kept.groupBy(id_col)
+    rebuilt = (kept.groupBy("doc_id")
                .agg(F.count(F.lit(1)).alias("n_kept"),
                     F.array_join(
                         F.transform(
@@ -747,10 +733,10 @@ def paragraph_dedup(df: DataFrame, para_tokens: int = 16,
                                 F.struct("chunk_idx", "chunk_text"))),
                             lambda s: s["chunk_text"]), " ")
                     .alias("kept_text")))
-    totals = chunks.groupBy(id_col).agg(
+    totals = chunks.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_paras"))
-    return (totals.join(rebuilt, id_col, "left")
-            .select(id_col, "n_paras",
+    return (totals.join(rebuilt, "doc_id", "left")
+            .select("doc_id", "n_paras",
                     F.coalesce("n_kept", F.lit(0)).cast("long")
                     .alias("n_kept"),
                     F.coalesce("kept_text", F.lit("")).alias("kept_text")))

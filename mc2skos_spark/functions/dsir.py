@@ -89,16 +89,14 @@ def _quantized_logp(cnt: Column, total: Column, buckets: int) -> Column:
         .cast("long")
 
 
-def dsir_logweights(documents: DataFrame, is_target: Column,
-                    id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
+def dsir_logweights(documents: DataFrame, is_target: Column) -> DataFrame:
     """Per-document DSIR log importance weight of every document in
     ``documents`` toward the subset marked by the ``is_target``
     predicate (an in-pool trusted slice; for an external target corpus,
     union it in with a flag column and pass that flag).  A NULL
     predicate value counts as non-target.
 
-    Returns ``(id_col, n_grams, logw_q)``: ``logw_q`` is the exact
+    Returns ``(doc_id, n_grams, logw_q)``: ``logw_q`` is the exact
     integer Σ_b cnt·(lp_target − lp_raw) at 1e-4 quantization — sort
     descending and keep the top fraction (or feed through
     :func:`mc2skos_spark.functions.sampling.hash_fraction` thresholds)
@@ -110,9 +108,9 @@ def dsir_logweights(documents: DataFrame, is_target: Column,
     # holds); the lineage cut materializes the 4-byte-per-gram arrays
     # once for both consumers (distribution + scoring)
     base = (documents
-            .select(F.col(id_col),
+            .select(F.col("doc_id"),
                     is_target.cast("boolean").alias("is_t"),
-                    F.transform(word_grams12(F.col(text_col)),
+                    F.transform(word_grams12(F.col("text")),
                                 lambda g: _bucket(g, BUCKETS, "md5"))
                     .alias("__bks"))
             .localCheckpoint(eager=False))
@@ -155,7 +153,7 @@ def dsir_logweights(documents: DataFrame, is_target: Column,
         F.struct("bucket", "dlp")))).alias("__dlp"))
     return (base.filter(F.size("__bks") > 0)
             .crossJoin(F.broadcast(rmap))
-            .select(F.col(id_col),
+            .select(F.col("doc_id"),
                     F.size("__bks").cast("long").alias("n_grams"),
                     F.aggregate(F.col("__bks"), F.lit(0).cast("long"),
                                 lambda acc, b:

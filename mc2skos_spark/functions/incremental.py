@@ -85,22 +85,13 @@ def batch_index_rows(catalog: IcebergishCatalog, name: str,
 
 
 def append_batch_to_index(catalog: IcebergishCatalog, name: str,
-                          batch: DataFrame | None = None,
-                          id_col: str = "doc_id", text_col: str = "text",
-                          batch_id: int | None = None,
-                          precomputed: tuple[DataFrame, DataFrame] |
-                          None = None) -> None:
-    """Append one batch's signatures + buckets to the index, guarded
-    per table by ``last_batch_id`` so a REPLAY of an already-applied
-    batch id is a no-op (exactly-once per table even when a kill lands
-    between the two appends).  Pass ``precomputed`` (from
-    ``batch_index_rows``) to reuse signatures already computed for the
-    pair join instead of signing the batch again."""
-    if precomputed is None:
-        if batch is None:
-            raise ValueError("either batch or precomputed is required")
-        precomputed = batch_index_rows(catalog, name, batch,
-                                       id_col, text_col)
+                          precomputed: tuple[DataFrame, DataFrame],
+                          batch_id: int | None = None) -> None:
+    """Append one batch's signatures + buckets (``precomputed``, from
+    ``batch_index_rows``: the rows the pair join already signed) to the
+    index, guarded per table by ``last_batch_id`` so a REPLAY of an
+    already-applied batch id is a no-op (exactly-once per table even
+    when a kill lands between the two appends)."""
     new_sigs, new_buckets = precomputed
     for suffix, df in ((SIG_SUFFIX, new_sigs), (BUCKET_SUFFIX, new_buckets)):
         _guarded_append(catalog, name + suffix, df, "id", batch_id)
@@ -498,8 +489,8 @@ def incremental_semantic_keeper_assign(catalog: IcebergishCatalog,
                                        id_col: str = "vec_id",
                                        vec_col: str = "embedding",
                                        threshold: float = 0.97,
-                                       batch_id: int | None = None,
-                                       commit: bool = True) -> DataFrame:
+                                       batch_id: int | None = None
+                                       ) -> DataFrame:
     """The full incremental SemDeDup DECISION for one batch — the
     embedding twin of :func:`incremental_keeper_assign`, sharing the
     same keeper/remap state machinery (``keeper_updates`` /
@@ -514,8 +505,6 @@ def incremental_semantic_keeper_assign(catalog: IcebergishCatalog,
         commit=False, precomputed=pre).localCheckpoint()
     batch_assign = _assign_and_commit_keepers(
         catalog, name, pairs, batch.select(F.col(id_col).alias("id")),
-        batch_id, commit)
-    if commit:
-        append_batch_to_semantic_index(catalog, name, pre,
-                                       batch_id=batch_id)
+        batch_id, True)
+    append_batch_to_semantic_index(catalog, name, pre, batch_id=batch_id)
     return batch_assign

@@ -43,34 +43,32 @@ from mc2skos_spark.functions.textstats import tokens
 SCALE = 10_000
 
 
-def doc_term_freq(documents: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text") -> DataFrame:
-    """Per-document distinct-token frequencies ``(id, token, tf)``:
+def doc_term_freq(documents: DataFrame) -> DataFrame:
+    """Per-document distinct-token frequencies ``(doc_id, token, tf)``:
     lowercased whitespace tokens, one row per (doc, distinct token).
     Documents with no tokens contribute no rows."""
     return (documents
-            .select(F.col(id_col),
-                    F.explode(tokens(F.lower(F.col(text_col))))
+            .select(F.col("doc_id"),
+                    F.explode(tokens(F.lower(F.col("text"))))
                     .alias("token"))
-            .groupBy(id_col, "token")
+            .groupBy("doc_id", "token")
             .agg(F.count(F.lit(1)).cast("long").alias("tf")))
 
 
-def unigram_lm(documents: DataFrame, text_col: str = "text") -> DataFrame:
+def unigram_lm(documents: DataFrame) -> DataFrame:
     """Train a unigram LM: corpus-wide ``(token, cnt)`` counts.  In
     production this is written once per reference-corpus snapshot and
     passed to :func:`lm_nll_scores` for every scoring run."""
-    return (doc_term_freq(documents, text_col=text_col)
+    return (doc_term_freq(documents)
             .groupBy("token")
             .agg(F.sum("tf").alias("cnt")))
 
 
-def lm_nll_scores(documents: DataFrame, lm: DataFrame | None = None,
-                  id_col: str = "doc_id",
-                  text_col: str = "text") -> DataFrame:
+def lm_nll_scores(documents: DataFrame,
+                  lm: DataFrame | None = None) -> DataFrame:
     """Per-document unigram negative log-likelihood under ``lm``.
 
-    Returns ``(id_col, n_tokens, nll_q, avg_nll)`` where ``nll_q`` is
+    Returns ``(doc_id, n_tokens, nll_q, avg_nll)`` where ``nll_q`` is
     the exact integer sum of 1e-4-quantized per-token NLLs (long —
     order-independent, so the hash-compare is deterministic under any
     shuffle order) and ``avg_nll`` = per-token average in nats, floor-
@@ -84,7 +82,7 @@ def lm_nll_scores(documents: DataFrame, lm: DataFrame | None = None,
     produces) — duplicate token rows would fan out the score join.
     Empty documents have no tokens and therefore no score row.
     """
-    tf = doc_term_freq(documents, id_col, text_col)
+    tf = doc_term_freq(documents)
     if lm is None:
         # one extra aggregate over the SAME tf table — the corpus scan
         # is not repeated; lineage-cut so tf materializes once for both
@@ -115,7 +113,7 @@ def lm_nll_scores(documents: DataFrame, lm: DataFrame | None = None,
     scored = (tf.join(logp, "token", "left")
               .crossJoin(F.broadcast(stats))
               .select(
-                  F.col(id_col), "tf",
+                  F.col("doc_id"), "tf",
                   F.coalesce(
                       F.col("lp"),
                       F.floor(F.log(1.0 / (F.col("total")
@@ -123,7 +121,7 @@ def lm_nll_scores(documents: DataFrame, lm: DataFrame | None = None,
                       .cast("long")).alias("lp")))
 
     return (scored
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.sum("tf").alias("n_tokens"),
                  (-F.sum(F.col("tf") * F.col("lp"))).alias("nll_q"),
                  (F.floor(-F.sum(F.col("tf") * F.col("lp"))
@@ -132,9 +130,7 @@ def lm_nll_scores(documents: DataFrame, lm: DataFrame | None = None,
 
 
 def ngram_nll_scores(documents: DataFrame, order: int,
-                     lams: list | None = None,
-                     id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
+                     lams: list | None = None) -> DataFrame:
     """Per-document NLL under a self-trained INTERPOLATED order-n LM —
     the distributed re-expression of CCNet's KenLM filter (Wenzek et
     al. 2020; their production order is 5), one builder for every
@@ -179,7 +175,7 @@ def ngram_nll_scores(documents: DataFrame, order: int,
     come from their OWN positions — deriving c_{n−1} from the c_n
     table would miss each document's final (n−1)-gram.
 
-    Returns ``(id_col, n_transitions, nll_q, avg_nll)`` (callers
+    Returns ``(doc_id, n_transitions, nll_q, avg_nll)`` (callers
     wanting order-suffixed names alias them — see
     :func:`bigram_nll_scores` / :func:`trigram_nll_scores`).
     """
@@ -240,17 +236,17 @@ def ngram_nll_scores(documents: DataFrame, order: int,
         return _once(h1, pos_of, F.array().cast(hp_type))
 
     hs = (documents
-          .select(F.col(id_col),
-                  _once(tokens(F.lower(F.col(text_col))), hp_of,
+          .select(F.col("doc_id"),
+                  _once(tokens(F.lower(F.col("text"))), hp_of,
                         F.array().cast(hp_type)).alias("__hp"))
           .localCheckpoint(eager=False))
 
     # per-doc DISTINCT-transition table: (id, h_n, tf) — the only
     # corpus-scale shuffle, keyed by one long
-    tfn = (hs.select(F.col(id_col), F.explode("__hp").alias("p"))
-           .select(F.col(id_col), F.col("p.h%d" % n).alias("h"))
+    tfn = (hs.select(F.col("doc_id"), F.explode("__hp").alias("p"))
+           .select(F.col("doc_id"), F.col("p.h%d" % n).alias("h"))
            .filter(F.col("h").isNotNull())
-           .groupBy(id_col, "h")
+           .groupBy("doc_id", "h")
            .agg(F.count(F.lit(1)).cast("long").alias("tf")))
     tfn = tfn.localCheckpoint(eager=False)      # feeds scoring twice
 
@@ -333,7 +329,7 @@ def ngram_nll_scores(documents: DataFrame, order: int,
                     .cast("long").alias("lp")))
 
     return (tfn.join(logp, "h")
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.sum("tf").alias("n_transitions"),
                  (-F.sum(F.col("tf") * F.col("lp"))).alias("nll_q"),
                  (F.floor(-F.sum(F.col("tf") * F.col("lp"))
@@ -341,34 +337,26 @@ def ngram_nll_scores(documents: DataFrame, order: int,
                  .alias("avg_nll")))
 
 
-def bigram_nll_scores(documents: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text",
-                      lam: float = 0.5) -> DataFrame:
+def bigram_nll_scores(documents: DataFrame) -> DataFrame:
     """Order-2 member of :func:`ngram_nll_scores` with its historical
-    column names ``(id_col, n_transitions, nll2_q, avg_nll2)``."""
-    out = ngram_nll_scores(documents, 2, [lam], id_col, text_col)
-    return out.select(F.col(id_col), "n_transitions",
+    column names ``(doc_id, n_transitions, nll2_q, avg_nll2)``."""
+    out = ngram_nll_scores(documents, 2, [0.5])
+    return out.select(F.col("doc_id"), "n_transitions",
                       F.col("nll_q").alias("nll2_q"),
                       F.col("avg_nll").alias("avg_nll2"))
 
 
-def trigram_nll_scores(documents: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text",
-                       lam3: float = 0.5,
-                       lam2: float = 0.25) -> DataFrame:
+def trigram_nll_scores(documents: DataFrame) -> DataFrame:
     """Order-3 member of :func:`ngram_nll_scores` with its historical
-    column names ``(id_col, n_transitions3, nll3_q, avg_nll3)``."""
-    out = ngram_nll_scores(documents, 3, [lam3, lam2], id_col, text_col)
-    return out.select(F.col(id_col),
+    column names ``(doc_id, n_transitions3, nll3_q, avg_nll3)``."""
+    out = ngram_nll_scores(documents, 3, [0.5, 0.25])
+    return out.select(F.col("doc_id"),
                       F.col("n_transitions").alias("n_transitions3"),
                       F.col("nll_q").alias("nll3_q"),
                       F.col("avg_nll").alias("avg_nll3"))
 
 
-def perplexity_buckets(documents: DataFrame, order: int = 2,
-                       id_col: str = "doc_id",
-                       text_col: str = "text",
-                       lang_col: str = "lang") -> DataFrame:
+def perplexity_buckets(documents: DataFrame, order: int = 2) -> DataFrame:
     """CCNet's head/middle/tail split (Wenzek et al. 2020 §4.3):
     score every document under the self-trained order-n LM
     (:func:`ngram_nll_scores`), then bucket each LANGUAGE's documents
@@ -393,12 +381,12 @@ def perplexity_buckets(documents: DataFrame, order: int = 2,
     the per-language cutoff table (1 row per language) broadcast-joins
     back.  No window ever partitions over the full document table.
 
-    Returns ``(id_col, lang, avg_q, bucket)``.
+    Returns ``(doc_id, lang, avg_q, bucket)``.
     """
     from pyspark.sql.window import Window
-    nll = ngram_nll_scores(documents, order, None, id_col, text_col)
-    scored = (nll.join(documents.select(id_col, lang_col), id_col)
-              .select(id_col, F.col(lang_col).alias("lang"),
+    nll = ngram_nll_scores(documents, order)
+    scored = (nll.join(documents.select("doc_id", "lang"), "doc_id")
+              .select("doc_id", F.col("lang").alias("lang"),
                       F.floor(F.col("nll_q") / F.col("n_transitions"))
                       .cast("long").alias("avg_q"))
               .localCheckpoint(eager=False))   # feeds histogram + label
@@ -416,7 +404,7 @@ def perplexity_buckets(documents: DataFrame, order: int = 2,
         F.min(F.when(F.col("cum") * 3 >= F.col("n") * 2,
                      F.col("avg_q"))).alias("c2"))
     return (scored.join(F.broadcast(cuts), "lang")
-            .select(id_col, "lang", "avg_q",
+            .select("doc_id", "lang", "avg_q",
                     F.when(F.col("avg_q") <= F.col("c1"), "head")
                     .when(F.col("avg_q") <= F.col("c2"), "middle")
                     .otherwise("tail").alias("bucket")))

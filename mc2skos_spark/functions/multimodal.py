@@ -171,40 +171,36 @@ def _decode_headers(payload: bytes) -> tuple:
     return (None, None, None, None, None, None)
 
 
-def make_wav(sample_rate: int, channels: int, n_frames: int,
-             bits: int = 16, tone: int = 0) -> bytes:
-    """Deterministic minimal PCM WAV writer (stdlib struct only) — the
-    synth side of the decode round-trip tests/oracle."""
-    block = channels * bits // 8
-    data = bytes((tone + i) % 251 for i in range(n_frames * block))
+def make_wav(sample_rate: int, channels: int, n_frames: int) -> bytes:
+    """Deterministic minimal 16-bit PCM WAV writer (stdlib struct only)
+    — the synth side of the decode round-trip tests/oracle."""
+    block = channels * 2
+    data = bytes(i % 251 for i in range(n_frames * block))
     fmt = struct.pack("<HHIIHH", 1, channels, sample_rate,
-                      sample_rate * block, block, bits)
+                      sample_rate * block, block, 16)
     body = (b"WAVE"
             + b"fmt " + struct.pack("<I", len(fmt)) + fmt
             + b"data" + struct.pack("<I", len(data)) + data)
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def make_png(width: int, height: int, bit_depth: int = 8) -> bytes:
-    """Deterministic minimal grayscale PNG writer (stdlib struct +
+def make_png(width: int, height: int) -> bytes:
+    """Deterministic minimal 8-bit grayscale PNG writer (stdlib struct +
     zlib): real IHDR/IDAT/IEND chunks with correct CRCs."""
     def chunk(cid: bytes, body: bytes) -> bytes:
         return (struct.pack(">I", len(body)) + cid + body
                 + struct.pack(">I", zlib.crc32(cid + body)))
 
-    ihdr = struct.pack(">IIBBBBB", width, height, bit_depth, 0, 0, 0, 0)
-    row_bytes = (width * bit_depth + 7) // 8
-    raw = b"".join(b"\x00" + bytes((x * 7) % 256
-                                   for x in range(row_bytes))
+    ihdr = struct.pack(">IIBBBBB", width, height, 8, 0, 0, 0, 0)
+    raw = b"".join(b"\x00" + bytes((x * 7) % 256 for x in range(width))
                    for _ in range(height))
     return (_PNG_SIG + chunk(b"IHDR", ihdr)
             + chunk(b"IDAT", zlib.compress(raw))
             + chunk(b"IEND", b""))
 
 
-def make_jpeg(width: int, height: int, components: int = 3,
-              precision: int = 8) -> bytes:
-    """Deterministic minimal JPEG header writer (stdlib struct only):
+def make_jpeg(width: int, height: int, components: int = 3) -> bytes:
+    """Deterministic minimal 8-bit JPEG header writer (stdlib struct only):
     SOI + JFIF APP0 + SOF0 frame header with per-component specs +
     EOI — the synth side of the decode round-trip tests/oracle (no
     entropy-coded scan; the header walk is what's under test)."""
@@ -215,7 +211,7 @@ def make_jpeg(width: int, height: int, components: int = 3,
     app0 = (b"JFIF\x00" + bytes([1, 2, 0])
             + struct.pack(">HH", 72, 72) + b"\x00\x00")
     comps = b"".join(bytes([i + 1, 0x11, 0]) for i in range(components))
-    sof0 = struct.pack(">BHHB", precision, height, width,
+    sof0 = struct.pack(">BHHB", 8, height, width,
                        components) + comps
     return b"\xff\xd8" + seg(0xE0, app0) + seg(0xC0, sof0) + b"\xff\xd9"
 
@@ -277,10 +273,10 @@ def extract_media_features(media: DataFrame) -> DataFrame:
             .mapInPandas(fn, schema=FEATURES_SCHEMA))
 
 
-def synth_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
+def synth_media(spark, n: int = 64) -> DataFrame:
     """Deterministic fake media table for tests."""
     import random
-    rng = random.Random(seed)
+    rng = random.Random(42)
     rows = []
     for i in range(n):
         kind = ("image", "audio", "video")[i % 3]

@@ -23,11 +23,9 @@ _CHUNK_STRUCT = ("array<struct<chunk_idx: int, chunk_start: int,"
                  " n_chunk_tokens: int, chunk_text: string>>")
 
 
-def pack_sequences(docs: DataFrame, capacity: int,
-                   id_col: str = "doc_id",
-                   tokens_col: str = "n_tokens") -> DataFrame:
-    """Append ``start_offset`` (exclusive prefix sum of ``tokens_col``
-    in ``id_col`` order — must be a unique key) and ``seq_id``
+def pack_sequences(docs: DataFrame, capacity: int) -> DataFrame:
+    """Append ``start_offset`` (exclusive prefix sum of ``n_tokens``
+    in ``doc_id`` order — must be a unique key) and ``seq_id``
     (``start_offset div capacity``, integer arithmetic end-to-end: a
     double division would lose exactness past 2^53 total tokens).
     """
@@ -36,12 +34,12 @@ def pack_sequences(docs: DataFrame, capacity: int,
     # lazy: the totals collect below materializes the checkpoint (one
     # job instead of materialize + collect), the final pass reads the
     # pinned blocks
-    parted = (docs.repartitionByRange(num_partitions, id_col)
+    parted = (docs.repartitionByRange(num_partitions, "doc_id")
               .withColumn("__pid", F.spark_partition_id())
               .localCheckpoint(eager=False))
     totals = {r["__pid"]: r["tot"]
               for r in (parted.groupBy("__pid")
-                        .agg(F.sum(tokens_col).cast("long").alias("tot"))
+                        .agg(F.sum("n_tokens").cast("long").alias("tot"))
                         .collect())}
     if not totals:
         # empty input: an empty literal map types as map<void,void> and
@@ -56,10 +54,10 @@ def pack_sequences(docs: DataFrame, capacity: int,
         acc += totals[pid]
     off_map = F.create_map(*[F.lit(x) for pid in sorted(offsets)
                              for x in (pid, offsets[pid])])
-    w = (Window.partitionBy("__pid").orderBy(id_col)
+    w = (Window.partitionBy("__pid").orderBy("doc_id")
          .rowsBetween(Window.unboundedPreceding, -1))
     start = (off_map[F.col("__pid")].cast("long")
-             + F.coalesce(F.sum(tokens_col).over(w).cast("long"),
+             + F.coalesce(F.sum("n_tokens").over(w).cast("long"),
                           F.lit(0).cast("long")))
     return (parted
             .withColumn("start_offset", start)
@@ -68,9 +66,7 @@ def pack_sequences(docs: DataFrame, capacity: int,
             .drop("__pid"))
 
 
-def chunk_documents(docs: DataFrame, max_len: int, stride: int,
-                    id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
+def chunk_documents(docs: DataFrame, max_len: int, stride: int) -> DataFrame:
     """Sliding-window chunking — the long-document counterpart of
     :func:`pack_sequences`: split each document's whitespace-token
     stream into windows of ``max_len`` tokens advancing by ``stride``
@@ -99,7 +95,7 @@ def chunk_documents(docs: DataFrame, max_len: int, stride: int,
     if not 0 < stride <= max_len:
         raise ValueError("need 0 < stride <= max_len, got "
                          f"stride={stride} max_len={max_len}")
-    toks = F.filter(F.split(F.col(text_col), r"\s+"), lambda t: t != "")
+    toks = F.filter(F.split(F.col("text"), r"\s+"), lambda t: t != "")
 
     def chunks_of(tk):
         n = F.size(tk)
@@ -124,7 +120,7 @@ def chunk_documents(docs: DataFrame, max_len: int, stride: int,
                         F.array().cast(_CHUNK_STRUCT),
                         lambda acc, tk: chunks_of(tk))
     return (docs
-            .select(id_col, bound.alias("__chunks"))
-            .select(id_col, F.explode("__chunks").alias("c"))
-            .select(id_col, "c.chunk_idx", "c.chunk_start",
+            .select("doc_id", bound.alias("__chunks"))
+            .select("doc_id", F.explode("__chunks").alias("c"))
+            .select("doc_id", "c.chunk_idx", "c.chunk_start",
                     "c.n_chunk_tokens", "c.chunk_text"))

@@ -41,13 +41,12 @@ def scrub_pii(col) -> Column:
     return out
 
 
-def pii_profile(documents: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
+def pii_profile(documents: DataFrame) -> DataFrame:
     """Per-document PII audit row: span counts per type + scrubbed
     text.  Downstream policy decides drop vs keep-scrubbed."""
-    col = F.col(text_col)
+    col = F.col("text")
     return documents.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[pii_count(col, kind).alias("n_" + kind)
           for kind in PII_PATTERNS],
         scrub_pii(col).alias("scrubbed"))

@@ -12,10 +12,8 @@ Scale shape (100 TB):
   shuffle volume is O(matching tokens), never O(corpus tokens);
 * per-term document frequencies are a ≤|query| row aggregate, broadcast
   back onto the tf table;
-* corpus statistics (N, avgdl) are one full-scan aggregate joined in as
-  a broadcast 1-row frame — in production these are precomputed once per
-  corpus snapshot and passed via ``corpus_stats=``, so a query touches
-  only the postings it matches;
+* corpus statistics (N, avgdl) are one aggregate over the same
+  tokenize pass, joined in as a broadcast 1-row frame;
 * the final ranking is a TakeOrdered (partial top-k per partition, k
   rows to the driver), never a global sort.
 
@@ -32,18 +30,19 @@ from pyspark.sql import DataFrame, functions as F
 
 from mc2skos_spark.functions.textstats import tokens
 
+#: the Lucene BM25 defaults: term-frequency saturation and length
+#: normalization
+K1 = 1.2
+B = 0.75
 
-def bm25_topk(documents: DataFrame, query_terms: list[str], k: int = 10,
-              k1: float = 1.2, b: float = 0.75,
-              id_col: str = "doc_id", text_col: str = "text",
-              corpus_stats: tuple[float, float] | None = None) -> DataFrame:
+
+def bm25_topk(documents: DataFrame, query_terms: list[str],
+              k: int = 10) -> DataFrame:
     """Top-``k`` documents for a bag-of-words query under BM25.
 
-    Returns ``(doc_id, bm25)`` ordered by score descending, ``id_col``
-    ascending on ties.  ``corpus_stats=(n_docs, avgdl)`` skips the
-    corpus-statistics scan (the production path — stats come from the
-    snapshot manifest); when omitted they are computed in one aggregate
-    pass.
+    Returns ``(doc_id, bm25)`` ordered by score descending, ``doc_id``
+    ascending on ties.  The corpus statistics come from the same pass
+    that tokenizes the documents.
     """
     if not query_terms:
         raise ValueError("bm25_topk: empty query")
@@ -59,32 +58,26 @@ def bm25_topk(documents: DataFrame, query_terms: list[str], k: int = 10,
     # will not inline the non-cheap tokens() into both consumers, so
     # the split projection tokenizes once.
     base = (documents
-            .select(F.col(id_col),
-                    tokens(F.lower(F.col(text_col))).alias("tk"))
-            .select(F.col(id_col),
+            .select(F.col("doc_id"),
+                    tokens(F.lower(F.col("text"))).alias("tk"))
+            .select(F.col("doc_id"),
                     F.size("tk").alias("dl"),
                     F.filter(F.col("tk"),
                              lambda t: F.array_contains(qarr, t))
                     .alias("hits"))
             .localCheckpoint(eager=False))
 
-    if corpus_stats is None:
-        stats = base.agg(
-            F.count(F.lit(1)).cast("double").alias("n_docs"),
-            F.avg("dl").alias("avgdl"))
-    else:
-        n_docs, avgdl = corpus_stats
-        stats = documents.sparkSession.range(1).select(
-            F.lit(float(n_docs)).alias("n_docs"),
-            F.lit(float(avgdl)).alias("avgdl"))
+    stats = base.agg(
+        F.count(F.lit(1)).cast("double").alias("n_docs"),
+        F.avg("dl").alias("avgdl"))
 
     # term filter happened BEFORE the explode: non-matching tokens
     # never leave the scan stage, so the exploded stream (and the
     # shuffle it feeds) is proportional to query hits only
     tf = (base
-          .select(F.col(id_col), "dl",
+          .select(F.col("doc_id"), "dl",
                   F.explode("hits").alias("term"))
-          .groupBy(id_col, "dl", "term")
+          .groupBy("doc_id", "dl", "term")
           .agg(F.count(F.lit(1)).cast("double").alias("tf")))
     # tf feeds both the df aggregate and the scoring join: lineage-cut
     # (lazily) so its aggregate runs once, not per consumer
@@ -98,13 +91,13 @@ def bm25_topk(documents: DataFrame, query_terms: list[str], k: int = 10,
               .crossJoin(F.broadcast(stats)))
     idf = F.log(1.0 + (F.col("n_docs") - F.col("df") + 0.5)
                 / (F.col("df") + 0.5))
-    tf_part = (F.col("tf") * (k1 + 1.0)
+    tf_part = (F.col("tf") * (K1 + 1.0)
                / (F.col("tf")
-                  + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))))
+                  + K1 * (1.0 - B + B * F.col("dl") / F.col("avgdl"))))
     contrib = F.floor(idf * tf_part * 10000).cast("long")
 
     return (scored
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg((F.sum(contrib) / 10000.0).alias("bm25"))
-            .orderBy(F.desc("bm25"), F.col(id_col))
+            .orderBy(F.desc("bm25"), F.col("doc_id"))
             .limit(k))

@@ -55,8 +55,8 @@ def hash_fraction(id_col) -> Column:
 
 
 def stratified_sample(df: DataFrame, strata_col: str,
-                      rates: dict[str, float], default_rate: float = 1.0,
-                      id_col: str = "doc_id") -> DataFrame:
+                      rates: dict[str, float],
+                      default_rate: float = 1.0) -> DataFrame:
     """Keep each row with its stratum's probability, decided by the
     row's deterministic hash fraction.  One codegen filter on the scan
     — no shuffle, no RNG state, stable under retries/resume.
@@ -84,13 +84,11 @@ def stratified_sample(df: DataFrame, strata_col: str,
     for value, r in sorted(rates.items()):
         rate = F.when(F.col(strata_col) == value, F.lit(float(r))) \
                 .otherwise(rate)
-    return df.filter(hash_fraction(F.col(id_col)) < rate)
+    return df.filter(hash_fraction(F.col("doc_id")) < rate)
 
 
 def mixture_weighted_sample(df: DataFrame, strata_col: str,
-                            budget_frac: float,
-                            tokens_col: str = "n_tokens",
-                            id_col: str = "doc_id") -> DataFrame:
+                            budget_frac: float) -> DataFrame:
     """Temperature-scaled corpus mixing (multilingual alpha-sampling
     with alpha = 0.5): derive per-stratum keep rates so the SAMPLED
     token mixture follows sqrt-scaled stratum shares — scarce strata
@@ -127,7 +125,7 @@ def mixture_weighted_sample(df: DataFrame, strata_col: str,
     (0/0 → NaN, and ``x < NaN`` is false).
     """
     st = (df.groupBy(strata_col)
-          .agg(F.sum(tokens_col).cast("long").alias("__st_tokens")))
+          .agg(F.sum("n_tokens").cast("long").alias("__st_tokens")))
     st = st.withColumn(
         "__w",
         F.floor(F.sqrt(F.col("__st_tokens").cast("double"))).cast("long"))
@@ -145,5 +143,5 @@ def mixture_weighted_sample(df: DataFrame, strata_col: str,
     rates = (st.crossJoin(F.broadcast(tot))
              .select(strata_col, rate.alias("__rate")))
     return (df.join(F.broadcast(rates), strata_col)
-            .filter(hash_fraction(F.col(id_col)) < F.col("__rate"))
+            .filter(hash_fraction(F.col("doc_id")) < F.col("__rate"))
             .drop("__rate"))

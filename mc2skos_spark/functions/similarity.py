@@ -76,15 +76,15 @@ def cosine(a, b):
                       F.lit(0.0))
 
 
-def cosine_topk(embeddings: DataFrame, query_vec: list[float], k: int = 10,
-                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def cosine_topk(embeddings: DataFrame, query_vec: list[float],
+                k: int = 10) -> DataFrame:
     """Exact top-k by cosine against a literal query vector."""
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     scored = embeddings.select(
-        F.col(id_col),
-        F.round(cosine(F.col(vec_col).cast("array<double>"), q), 4)
+        F.col("vec_id"),
+        F.round(cosine(F.col("embedding").cast("array<double>"), q), 4)
          .alias("cosine"))
-    return scored.orderBy(F.desc("cosine"), F.col(id_col)).limit(k)
+    return scored.orderBy(F.desc("cosine"), F.col("vec_id")).limit(k)
 
 
 def _planes(dim: int, num_planes: int, seed: int = 7) -> list[list[float]]:
@@ -149,16 +149,14 @@ def assign_lsh_buckets(df: DataFrame, planes: list[list[float]],
 
 def lsh_bucketed_topk(embeddings: DataFrame, query_vec: list[float],
                       k: int = 10, num_planes: int = 8,
-                      multiprobe: int = 1,
-                      id_col: str = "vec_id",
-                      vec_col: str = "embedding") -> DataFrame:
+                      multiprobe: int = 1) -> DataFrame:
     """ANN top-k: exact re-rank within the query's LSH bucket plus all
     buckets within Hamming distance ``multiprobe`` (multi-probe LSH —
     recall rises steeply per probe while candidates stay a tiny fraction
     of the corpus)."""
     dim = len(query_vec)
     planes = _planes(dim, num_planes)
-    bucketed = assign_lsh_buckets(embeddings, planes, vec_col, "bucket")
+    bucketed = assign_lsh_buckets(embeddings, planes, "embedding", "bucket")
     qbits = 0
     for i, plane in enumerate(planes):
         if sum(px * qx for px, qx in zip(plane, query_vec)) >= 0:
@@ -169,7 +167,7 @@ def lsh_bucketed_topk(embeddings: DataFrame, query_vec: list[float],
         frontier = {b ^ (1 << i) for b in frontier for i in range(num_planes)}
         probes |= frontier
     candidates = bucketed.filter(F.col("bucket").isin([*probes]))
-    return cosine_topk(candidates, query_vec, k, id_col, vec_col)
+    return cosine_topk(candidates, query_vec, k)
 
 
 def unit_vector(vec_col) -> "F.Column":
@@ -293,43 +291,46 @@ def arithmetic_centroids(embeddings: DataFrame, num_centroids: int,
     return [(r["cid"], [float(x) for x in r["cvec"]]) for r in rows]
 
 
+#: ivf_topk samples its centroids from the rows whose id hash is 0
+#: modulo this
+SAMPLE_MOD = 8
+
+
 def ivf_topk(embeddings: DataFrame, query_vec: list[float], k: int = 10,
-             num_centroids: int = 16, nprobe: int = 4,
-             sample_mod: int = 8,
-             id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+             num_centroids: int = 16, nprobe: int = 4) -> DataFrame:
     """IVF-lite ANN: deterministic sampled centroids, probe the nprobe
     nearest lists, exact re-rank inside them.
 
     Centroid pick: a deterministic hash slice (``xxhash64(id) %
-    sample_mod == 0`` — a Bernoulli sample that, unlike ``df.sample``,
+    SAMPLE_MOD == 0`` — a Bernoulli sample that, unlike ``df.sample``,
     is independent of how the scan happened to be partitioned) followed
     by a TakeOrdered *within the slice only*.  Nothing hash-ranks the
     full corpus; the full scan touches each row once with a cheap
-    filter.  Size ``sample_mod`` so corpus/sample_mod is comfortably ≥
+    filter.  Size ``SAMPLE_MOD`` so corpus/SAMPLE_MOD is comfortably ≥
     num_centroids but small — at 100 TB something like 2**20 keeps the
     ranked slice metadata-scale.
     """
     sample = (embeddings
-              .filter(F.pmod(F.xxhash64(F.col(id_col)),
-                             F.lit(sample_mod)) == 0)
-              .orderBy(F.xxhash64(F.col(id_col)))
+              .filter(F.pmod(F.xxhash64(F.col("vec_id")),
+                             F.lit(SAMPLE_MOD)) == 0)
+              .orderBy(F.xxhash64(F.col("vec_id")))
               .limit(num_centroids)
-              .select(F.col(id_col).alias("cid"),
-                      F.col(vec_col).alias("cvec"))
+              .select(F.col("vec_id").alias("cid"),
+                      F.col("embedding").alias("cvec"))
               .collect())
     if len(sample) < num_centroids:
-        # thin slice → the corpus is at most ~sample_mod*num_centroids
+        # thin slice → the corpus is at most ~SAMPLE_MOD*num_centroids
         # rows, where the pre-slice full TakeOrdered is cheap anyway
-        # (a mis-sized sample_mod on a big corpus pays that rank once
+        # (a mis-sized SAMPLE_MOD on a big corpus pays that rank once
         # rather than returning degraded centroids silently)
-        sample = (embeddings.orderBy(F.xxhash64(F.col(id_col)))
+        sample = (embeddings.orderBy(F.xxhash64(F.col("vec_id")))
                   .limit(num_centroids)
-                  .select(F.col(id_col).alias("cid"),
-                          F.col(vec_col).alias("cvec"))
+                  .select(F.col("vec_id").alias("cid"),
+                          F.col("embedding").alias("cvec"))
                   .collect())
     if not sample:
         raise ValueError("ivf_topk: empty embeddings input")
-    # keep the native id value — the API supports non-numeric id_col
+    # keep the native id value — vec_id need not be numeric
     centroids = [(r["cid"], [float(x) for x in r["cvec"]])
                  for r in sample]
 
@@ -342,7 +343,7 @@ def ivf_topk(embeddings: DataFrame, query_vec: list[float], k: int = 10,
     probe = sorted(centroids, key=lambda c: -cos_py(c[1], query_vec))[:nprobe]
     probe_ids = [cid for cid, _ in probe]
 
-    assigned = assign_nearest_centroid(embeddings, centroids, vec_col,
+    assigned = assign_nearest_centroid(embeddings, centroids, "embedding",
                                        "centroid", normalize_input=True)
     candidates = assigned.filter(F.col("centroid").isin(probe_ids))
-    return cosine_topk(candidates, query_vec, k, id_col, vec_col)
+    return cosine_topk(candidates, query_vec, k)

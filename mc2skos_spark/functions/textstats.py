@@ -131,11 +131,11 @@ def gopher_quality_flags(text_col) -> Column:
                     passed.alias("gopher_pass"))
 
 
-def gopher_gate(df: DataFrame, text_col: str = "text") -> DataFrame:
+def gopher_gate(df: DataFrame) -> DataFrame:
     """Keep only documents passing ALL Gopher rules — one codegen
     filter, no shuffle."""
     return df.filter(
-        gopher_quality_flags(F.col(text_col))["gopher_pass"])
+        gopher_quality_flags(F.col("text"))["gopher_pass"])
 
 
 def langid_guess(text_col) -> Column:
@@ -357,9 +357,7 @@ def _top_ngram_from(tkl, n: int) -> Column:
 
 
 def profile_and_gate(df: DataFrame, min_quality: float = 0.0,
-                     max_top_bigram: float = 1.0,
-                     id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
+                     max_top_bigram: float = 1.0) -> DataFrame:
     """The curation profile + quality gate of ``jobs/curate.py``:
     per-doc token count, quality score, language guess and top-bigram
     repetition, filtered to ``quality >= min_quality`` and
@@ -374,7 +372,7 @@ def profile_and_gate(df: DataFrame, min_quality: float = 0.0,
     boundary keeps the filter above the one evaluation.  Values are
     identical: each feature's expression tree over the bound arrays is
     the one the per-column functions build."""
-    col = F.col(text_col)
+    col = F.col("text")
 
     def feats_of(p):
         tk, tkl = p["tk"], p["tkl"]
@@ -391,7 +389,7 @@ def profile_and_gate(df: DataFrame, min_quality: float = 0.0,
         F.array(F.struct(tokens(col).alias("tk"),
                          tokens(F.lower(col)).alias("tkl"))),
         init, lambda acc, p: feats_of(p))
-    return (df.select(F.col(id_col), col, F.inline(F.array(feats)))
+    return (df.select(F.col("doc_id"), col, F.inline(F.array(feats)))
             .filter((F.col("quality") >= min_quality) &
                     (F.col("top_bigram_frac") <= max_top_bigram)))
 

@@ -22,17 +22,16 @@ URL_PATTERN = r"https?://[^\s]+"
 HOST_PATTERN = r"https?://([A-Za-z0-9.-]+)"
 
 
-def domain_doc_counts(docs: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text") -> DataFrame:
+def domain_doc_counts(docs: DataFrame) -> DataFrame:
     """Per-domain ``(domain, n_docs, n_urls)``: distinct documents
     mentioning the domain and total URL mentions."""
     urls = docs.select(
-        F.col(id_col),
-        F.explode(F.regexp_extract_all(F.col(text_col),
+        F.col("doc_id"),
+        F.explode(F.regexp_extract_all(F.col("text"),
                                        F.lit(URL_PATTERN), 0)).alias("url"))
     domains = urls.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.regexp_extract("url", HOST_PATTERN, 1).alias("domain"))
     return (domains.groupBy("domain")
-            .agg(F.count_distinct(F.col(id_col)).alias("n_docs"),
+            .agg(F.count_distinct(F.col("doc_id")).alias("n_docs"),
                  F.count(F.lit(1)).alias("n_urls")))

@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from mc2skos_spark.core.constants import SKOS
+
 
 def loop_width(rows: int) -> int:
     """Partition count of an iterative loop's join exchange: ~1M rows
@@ -92,16 +94,14 @@ def cycle_members(edges: DataFrame) -> DataFrame:
             .select(F.col("src").alias("vertex")))
 
 
-def _broader_edges(triples: DataFrame, skos_ns: str) -> DataFrame:
+def _broader_edges(triples: DataFrame) -> DataFrame:
     return (triples
-            .filter((F.col("pred") == skos_ns + "broader") &
+            .filter((F.col("pred") == SKOS + "broader") &
                     ~F.col("obj_is_literal"))
             .select(F.col("subj").alias("src"), F.col("obj").alias("dst")))
 
 
 def broader_cycle_warnings(triples: DataFrame,
-                           skos_ns: str =
-                           "http://www.w3.org/2004/02/skos/core#",
                            closed: bool = False) -> DataFrame:
     """``skos:broader`` cycle report in the warning-channel shape
     ``(record_id, reason)`` — a concept hierarchy must be a DAG, so any
@@ -114,26 +114,24 @@ def broader_cycle_warnings(triples: DataFrame,
     are not closed a second time."""
     if closed:
         members = (triples
-                   .filter((F.col("pred") == skos_ns + "broaderTransitive")
+                   .filter((F.col("pred") == SKOS + "broaderTransitive")
                            & (F.col("subj") == F.col("obj")))
                    .select(F.col("subj").alias("vertex")))
     else:
-        members = cycle_members(_broader_edges(triples, skos_ns))
+        members = cycle_members(_broader_edges(triples))
     return members.select(
         F.col("vertex").alias("record_id"),
         F.lit("skos:broader cycle").alias("reason"))
 
 
-def broader_transitive(triples: DataFrame,
-                       skos_ns: str = "http://www.w3.org/2004/02/skos/core#"
-                       ) -> DataFrame:
+def broader_transitive(triples: DataFrame) -> DataFrame:
     """Materialize ``skos:broaderTransitive`` triples from the asserted
     ``skos:broader`` edges — the Spark counterpart of skosify's
     hierarchical transitive inference."""
-    closure = transitive_closure(_broader_edges(triples, skos_ns))
+    closure = transitive_closure(_broader_edges(triples))
     return closure.select(
         F.col("src").alias("subj"),
-        F.lit(skos_ns + "broaderTransitive").alias("pred"),
+        F.lit(SKOS + "broaderTransitive").alias("pred"),
         F.col("dst").alias("obj"),
         F.lit(False).alias("obj_is_literal"),
         F.lit(None).cast("string").alias("obj_lang"),

@@ -71,31 +71,27 @@ def label_link_candidates(triples: DataFrame, threshold: float = 0.9,
             .distinct())
 
 
-def scored_sameas_edges(triples: DataFrame, threshold: float = 0.9,
-                        n: int = 2,
-                        max_shingle_freq: int | None = 100) -> DataFrame:
+def scored_sameas_edges(triples: DataFrame,
+                        threshold: float = 0.9) -> DataFrame:
     """(src, dst, score): identifier-equality edges at score 1.0
     unioned with label-similarity candidates; a pair found both ways
     keeps its best score."""
     ident = (candidate_sameas_edges(triples)
              .select("src", "dst",
                      F.lit(1.0).cast("double").alias("score")))
-    lbl = label_link_candidates(triples, threshold, n, max_shingle_freq)
+    lbl = label_link_candidates(triples, threshold)
     return (ident.unionByName(lbl)
             .groupBy("src", "dst").agg(F.max("score").alias("score")))
 
 
 def linked_canonical_mapping(triples: DataFrame,
-                             link_threshold: float = 0.9,
-                             n: int = 2,
-                             max_shingle_freq: int | None = 100) -> DataFrame:
+                             link_threshold: float = 0.9) -> DataFrame:
     """(uri, canonical) mapping over the scored edge set — the
     entity-linking variant of ``canonical_mapping``: identifier
     equality AND label similarity ≥ link_threshold feed the same
     union-find."""
     # scored_sameas_edges already applies link_threshold to the label
     # candidates and identifier edges score 1.0 — no re-filter needed
-    edges = (scored_sameas_edges(triples, link_threshold, n,
-                                 max_shingle_freq)
+    edges = (scored_sameas_edges(triples, link_threshold)
              .select("src", "dst"))
     return mapping_from_edges(edges)

@@ -37,15 +37,13 @@ def event_micros(col: Column | str) -> Column:
         c.cast("timestamp_ntz"))
 
 
-def sessionize(events: DataFrame, gap_seconds: int = 7200,
-               user_col: str = "user_id", ts_col: str = "ts",
-               tiebreak_col: str = "event_id") -> DataFrame:
+def sessionize(events: DataFrame, gap_seconds: int = 7200) -> DataFrame:
     """Per-event session assignment: adds ``session_id`` (1-based,
     per user, in time order) to every event row."""
     if gap_seconds <= 0:
         raise ValueError("sessionize: gap_seconds must be positive")
-    order = Window.partitionBy(user_col).orderBy(ts_col, tiebreak_col)
-    us = event_micros(ts_col)
+    order = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    us = event_micros("ts")
     prev_us = F.lag(us).over(order)
     new_session = (F.when(
         prev_us.isNull() | ((us - prev_us) > gap_seconds * 1_000_000),
@@ -56,17 +54,14 @@ def sessionize(events: DataFrame, gap_seconds: int = 7200,
             order.rowsBetween(Window.unboundedPreceding, 0)))
 
 
-def session_stats(events: DataFrame, gap_seconds: int = 7200,
-                  user_col: str = "user_id", ts_col: str = "ts",
-                  tiebreak_col: str = "event_id") -> DataFrame:
+def session_stats(events: DataFrame, gap_seconds: int = 7200) -> DataFrame:
     """Per-session rollup: ``(user_id, session_id, session_start,
     session_end, n_events, duration_us)`` — duration as an exact
     microsecond integer (no float time math)."""
-    tagged = sessionize(events, gap_seconds, user_col, ts_col,
-                        tiebreak_col)
-    return (tagged.groupBy(user_col, "session_id")
-            .agg(F.min(ts_col).alias("session_start"),
-                 F.max(ts_col).alias("session_end"),
+    tagged = sessionize(events, gap_seconds)
+    return (tagged.groupBy("user_id", "session_id")
+            .agg(F.min("ts").alias("session_start"),
+                 F.max("ts").alias("session_end"),
                  F.count(F.lit(1)).alias("n_events"),
-                 (event_micros(F.max(ts_col))
-                  - event_micros(F.min(ts_col))).alias("duration_us")))
+                 (event_micros(F.max("ts"))
+                  - event_micros(F.min("ts"))).alias("duration_us")))

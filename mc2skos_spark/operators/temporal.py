@@ -239,13 +239,11 @@ def interval_join(left: DataFrame, right: DataFrame,
 
 def fixed_band_self_pairs(df: DataFrame, on: Sequence[str],
                           id_col: str, start_col: str,
-                          band: int,
-                          out_a: str = "a_id",
-                          out_b: str = "b_id") -> DataFrame:
+                          band: int) -> DataFrame:
     """Unordered pairs of same-``on``-key rows whose fixed-length
     closed intervals ``[start, start + band]`` overlap — equivalently
     ``|s_a − s_b| <= band`` — each emitted EXACTLY once as
-    ``(*on, out_a, out_b)`` with ``out_a < out_b`` (ids must be
+    ``(*on, a_id, b_id)`` with ``a_id < b_id`` (ids must be
     distinct per row; start/id any orderable integer columns).
 
     The specialized self-join case of :func:`interval_join` (which
@@ -288,5 +286,5 @@ def fixed_band_self_pairs(df: DataFrame, on: Sequence[str],
              .filter(later & (b_s <= a_s + F.lit(w))))
     return pairs.select(
         *on,
-        F.least(a_id, b_id).alias(out_a),
-        F.greatest(a_id, b_id).alias(out_b))
+        F.least(a_id, b_id).alias("a_id"),
+        F.greatest(a_id, b_id).alias("b_id"))

@@ -577,15 +577,14 @@ class IcebergishCatalog:
             rows, "snapshot_id int, committed_at double,"
                   " operation string, row_count long, n_data_dirs int")
 
-    def lineage(self, table: str | None = None) -> DataFrame:
-        """All committed lineage rows as a queryable DataFrame
-        (stage, part_id, file, input span, row_count) — the ops
-        introspection surface the north_rule's per-partition lineage
-        exists for."""
+    def lineage(self) -> DataFrame:
+        """All committed lineage rows of every table as a queryable
+        DataFrame (stage, part_id, file, input span, row_count) — the
+        ops introspection surface the north_rule's per-partition
+        lineage exists for."""
         rows = []
-        tables = [table] if table else sorted(
-            t for t in os.listdir(self.root)
-            if os.path.isdir(self._table_dir(t)))
+        tables = sorted(t for t in os.listdir(self.root)
+                        if os.path.isdir(self._table_dir(t)))
         for t in tables:
             manifest = self.current_manifest(t)
             if manifest is None:

@@ -162,9 +162,12 @@ def synth_marc_records(n: int, seed: int = 42,
     return out
 
 
+#: records per generated conversation
+RECORDS_PER_CONV = 3
+
+
 def make_transcript_rows(records: list[tuple[str, str]], seed: int = 42,
                          max_chunks: int = 8,
-                         records_per_conv: int = 3,
                          skew_factor: int = 0) -> list[tuple]:
     """Shard record XML strings into transcript rows (input_hint schema).
 
@@ -188,7 +191,7 @@ def make_transcript_rows(records: list[tuple[str, str]], seed: int = 42,
             conv_records[0].append(item)
             continue
         current.append(item)
-        if len(current) >= records_per_conv:
+        if len(current) >= RECORDS_PER_CONV:
             conv_records.append(current)
             current = []
     if current:
@@ -232,7 +235,6 @@ def _conversation_rows(conv_no: int, items: list[tuple[str, str]],
 
 
 def transcripts_dataframe(spark, n_records: int, seed: int = 42,
-                          records_per_conv: int = 3, max_chunks: int = 8,
                           partitions: int | None = None):
     """DISTRIBUTED transcript generation: ``spark.range`` over
     conversation indices → ``mapInPandas`` emitting each conversation's
@@ -247,7 +249,7 @@ def transcripts_dataframe(spark, n_records: int, seed: int = 42,
 
     from ..plans.schemas import TRANSCRIPTS
 
-    n_convs = max(1, math.ceil(n_records / records_per_conv))
+    n_convs = max(1, math.ceil(n_records / RECORDS_PER_CONV))
     base_ts = datetime(2026, 1, 1)
     columns = [f.name for f in TRANSCRIPTS.fields]
 
@@ -256,14 +258,14 @@ def transcripts_dataframe(spark, n_records: int, seed: int = 42,
             rows: list[tuple] = []
             for conv_no in pdf["id"]:
                 conv_no = int(conv_no)
-                lo = conv_no * records_per_conv
-                hi = min(lo + records_per_conv, n_records)
+                lo = conv_no * RECORDS_PER_CONV
+                hi = min(lo + RECORDS_PER_CONV, n_records)
                 items: list[tuple[str, str]] = []
                 for i in range(lo, hi):
                     items.extend(synth_records_for_index(i, seed))
                 rng = random.Random("%d:conv:%d" % (seed, conv_no))
-                rows.extend(_conversation_rows(conv_no, items, rng,
-                                               max_chunks, base_ts))
+                rows.extend(_conversation_rows(conv_no, items, rng, 8,
+                                               base_ts))
             yield pd.DataFrame(rows, columns=columns)
 
     if partitions is None:

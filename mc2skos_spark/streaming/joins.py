@@ -29,23 +29,20 @@ _INTERVAL_RE = re.compile(
     r"^\d+\s+(microsecond|millisecond|second|minute|hour|day|week)s?$")
 
 
-def _as_instant(df: DataFrame, ts_col: str) -> DataFrame:
-    """NTZ event time → LTZ instant (watermarks accept only LTZ);
+def _as_instant(df: DataFrame) -> DataFrame:
+    """NTZ event time ``ts`` → LTZ instant (watermarks accept only LTZ);
     epoch-micros route so the wall clock is read as UTC regardless of
     session timezone — same discipline as streaming/sessions.py."""
-    if dict(df.dtypes).get(ts_col) == "timestamp_ntz":
-        df = df.withColumn(ts_col,
-                           F.timestamp_micros(event_micros(ts_col)))
+    if dict(df.dtypes).get("ts") == "timestamp_ntz":
+        df = df.withColumn("ts", F.timestamp_micros(event_micros("ts")))
     return df
 
 
 def stream_interval_join(left: DataFrame, right: DataFrame,
-                         key_col: str = "user_id",
-                         ts_col: str = "ts",
                          within: str = "10 minutes",
                          watermark_delay: str = "1 minute") -> DataFrame:
     """Inner-join each LEFT row to the RIGHT rows with the same
-    ``key_col`` whose event time falls in ``[left_ts, left_ts +
+    ``user_id`` whose event time falls in ``[left_ts, left_ts +
     within]`` (inclusive both ends, the attribution convention).
 
     Every non-key column is prefixed (``l_``/``r_``) so the two sides
@@ -57,20 +54,20 @@ def stream_interval_join(left: DataFrame, right: DataFrame,
     if not _INTERVAL_RE.match(within.strip()):
         raise ValueError("within must look like '<n> <unit>', got %r"
                          % within)
-    lts, rts = "l_" + ts_col, "r_" + ts_col
+    lts, rts = "l_ts", "r_ts"
 
     def side(df, prefix):
-        df = _as_instant(df, ts_col)
+        df = _as_instant(df)
         df = df.select(
-            key_col, *[F.col(c).alias(prefix + c)
-                       for c in df.columns if c != key_col])
-        return df.withWatermark(prefix + ts_col, watermark_delay)
+            "user_id", *[F.col(c).alias(prefix + c)
+                         for c in df.columns if c != "user_id"])
+        return df.withWatermark(prefix + "ts", watermark_delay)
 
     lhs = side(left, "l_")
     rhs = side(right, "r_")
-    cond = ((lhs[key_col] == rhs[key_col])
+    cond = ((lhs["user_id"] == rhs["user_id"])
             & (F.col(rts) >= F.col(lts))
             & (F.col(rts) <= F.expr(
                 "%s + INTERVAL %s" % (lts, within))))
     # one key column out, not two
-    return lhs.join(rhs, cond, "inner").drop(rhs[key_col])
+    return lhs.join(rhs, cond, "inner").drop(rhs["user_id"])

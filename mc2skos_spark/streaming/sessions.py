@@ -29,9 +29,7 @@ from mc2skos_spark.operators.sessionize import event_micros
 
 def streaming_session_stats(events: DataFrame,
                             gap: str = "1 hour",
-                            watermark_delay: str = "2 hours",
-                            user_col: str = "user_id",
-                            ts_col: str = "ts") -> DataFrame:
+                            watermark_delay: str = "2 hours") -> DataFrame:
     """Streaming (or batch) events → per-session rollup.
 
     Output: ``(user_id, session_start, session_end_gap, n_events)``
@@ -46,15 +44,15 @@ def streaming_session_stats(events: DataFrame,
     # timestamp_micros builds the instant directly, so the NTZ wall
     # clock is read as UTC regardless of the session timezone (a plain
     # cast would shift by the session-TZ offset and drift across DST)
-    if dict(events.dtypes).get(ts_col) == "timestamp_ntz":
+    if dict(events.dtypes).get("ts") == "timestamp_ntz":
         events = events.withColumn(
-            ts_col, F.timestamp_micros(event_micros(ts_col)))
+            "ts", F.timestamp_micros(event_micros("ts")))
     return (events
-            .withWatermark(ts_col, watermark_delay)
-            .groupBy(F.session_window(F.col(ts_col), gap).alias("w"),
-                     F.col(user_col))
+            .withWatermark("ts", watermark_delay)
+            .groupBy(F.session_window(F.col("ts"), gap).alias("w"),
+                     F.col("user_id"))
             .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(F.col(user_col),
+            .select(F.col("user_id"),
                     F.col("w.start").alias("session_start"),
                     F.col("w.end").alias("session_end_gap"),
                     "n_events"))

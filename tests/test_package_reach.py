@@ -9,17 +9,22 @@ one identifier (``jobs/sparql_query.py`` dispatches path operators with
 string statements do not count.
 
 The names are the package's public top-level functions and classes and
-the public methods of its public classes, matched by attribute name.  A
-method that overrides a pyspark base-class method is reached, because
-Spark calls it.  The options are the defaulted parameters of those
-functions, methods and class ``__init__``s.  A parameter is set by
-keyword, by position or through ``functools.partial``; a call with
-``*args`` or ``**kwargs`` sets every parameter.  An argument that only
-passes on the caller's own defaulted parameter (same default), or its
-own ``**kwargs``, sets the option only where that parameter is set.
+the public methods of its public classes.  A method is reached only by
+an attribute name (``obj.lineage()``), never by a variable or a dict key
+that shares its name.  A method that overrides a pyspark base-class
+method is reached, because Spark calls it.  The options are the
+defaulted parameters of those functions, methods and class
+``__init__``s.  A parameter is set by keyword, by position or through
+``functools.partial``; a call with ``*args`` or ``**kwargs`` sets every
+parameter.  An argument that only passes on the caller's own defaulted
+parameter (same default), or its own ``**kwargs``, sets the option only
+where that parameter is set.
 
-A name only tests reach, or an option only tests set, is dead weight
-unless ``KEPT`` / ``KEPT_OPTIONS`` gives the reason it stays.
+A name only tests reach is dead weight unless ``KEPT`` gives the reason
+it stays.  An option no caller outside the tests sets is a constant in
+disguise unless it belongs to a ``KEPT`` name and a test sets it (tests
+are a kept name's only callers), or ``KEPT_OPTIONS`` gives the reason it
+stays.
 """
 
 import ast
@@ -32,7 +37,7 @@ TESTS = ROOT / "tests"
 CALLER_DIRS = ("mc2skos_spark", "jobs", "tools", "perfbench")
 CALLER_FILES = ("__spark_entry__.py", "bench.py", "bench_extra.py")
 
-#: test-only names that stay, each with the reason it stays
+#: names only tests reach that stay, each with the reason it stays
 KEPT = {
     "train_bpe_merges": "the training half of the BPE family whose "
                         "encoder is benchmarked",
@@ -55,9 +60,13 @@ KEPT = {
     "save_classifier": "writes the classifier file jobs/curate.py loads",
     "IcebergishCatalog.invalidate": "simulates a killed driver for the "
                                     "resume tests",
+    "IcebergishCatalog.lineage": "the queryable per-partition lineage the "
+                                 "north_rule names; test_scale_paths "
+                                 "checks it",
 }
 
-#: test-only options that stay, each with the reason it stays
+#: options no caller outside the tests sets that stay, each with the
+#: reason it stays
 KEPT_OPTIONS = {
     "transitive_closure.max_rounds": "a loop that does not converge "
                                      "raises at this bound",
@@ -72,6 +81,11 @@ KEPT_OPTIONS = {
     "process_record.options": "the reference API's conversion flags, "
                               "which the record-level tests drive",
     "streaming_session_stats.watermark_delay": "a deployment setting",
+    "stream_interval_join.watermark_delay": "a deployment setting",
+    "turn_rate_metrics.watermark_delay": "a deployment setting",
+    "incremental_semantic_pairs.batch_id": "the exactly-once replay "
+                                           "guard, same contract as "
+                                           "append_batch_to_index",
     "make_transcript_rows.max_chunks": "the shape of the generated "
                                        "test data",
     "make_transcript_rows.skew_factor": "the shape of the generated "
@@ -99,8 +113,13 @@ def _test_trees():
     return list(_parse_all(sorted(TESTS.rglob("*.py"))).values())
 
 
-def references(tree):
-    """Every name the code of ``tree`` refers to."""
+def references(tree, method=False):
+    """Every name the code of ``tree`` refers to.  With ``method``, only
+    the attribute names: code reaches a method through an attribute, and
+    a variable or a dict key that shares its name does not reach it."""
+    if method:
+        return {n.attr for n in ast.walk(tree)
+                if isinstance(n, ast.Attribute)}
     prose = {id(n.value) for n in ast.walk(tree) if isinstance(n, ast.Expr)}
     refs = set()
     for node in ast.walk(tree):
@@ -289,23 +308,36 @@ def inventory(trees):
     return names, options
 
 
-def _unreached():
-    names, _ = inventory(_package_trees())
-    words = set().union(*map(references, _caller_trees()))
+def unreached(package, callers):
+    """``{name: path}`` for every public name of the ``package`` trees
+    that no tree in ``callers`` refers to; a method needs an attribute
+    reference."""
+    names, _ = inventory(package)
+    words = set().union(*(references(t) for t in callers))
+    attrs = set().union(*(references(t, method=True) for t in callers))
     return {n: str(path) for n, (word, path) in names.items()
-            if word not in words}
+            if word not in (attrs if "." in n else words)}
 
 
-def _test_only_options():
-    """``{option: path}`` for every option a test sets and no caller
-    outside the tests does, less those of ``KEPT`` names."""
-    package = _package_trees()
+def unset_options(package, callers, tests, kept):
+    """``{option: path}`` for every option of the ``package`` trees that no
+    call in ``callers`` sets, less those of ``kept`` names that a call in
+    ``tests`` sets: tests are the only callers of a kept name."""
     _, options = inventory(package)
-    by_callers = set_keys(_caller_trees())
-    by_tests = set_keys(_test_trees(), via=package.values())
+    by_callers = set_keys(callers)
+    by_tests = set_keys(tests, via=package.values())
     return {q: str(path) for q, (key, path) in options.items()
-            if key in by_tests - by_callers
-            and q.rpartition(".")[0] not in KEPT}
+            if key not in by_callers
+            and not (q.rpartition(".")[0] in kept and key in by_tests)}
+
+
+def _unreached():
+    return unreached(_package_trees(), _caller_trees())
+
+
+def _unset_options():
+    return unset_options(_package_trees(), _caller_trees(), _test_trees(),
+                         KEPT)
 
 
 def test_every_public_name_has_a_caller():
@@ -322,17 +354,18 @@ def test_kept_names_are_still_test_only():
                        "%s" % stale)
 
 
-def test_every_option_a_test_sets_has_a_caller():
-    test_only = {q: p for q, p in _test_only_options().items()
-                 if q not in KEPT_OPTIONS}
-    assert not test_only, (
-        "options only tests set (delete them, or add them to "
-        "KEPT_OPTIONS with a reason): %s" % sorted(test_only.items()))
+def test_every_option_has_a_caller():
+    unset = {q: p for q, p in _unset_options().items()
+             if q not in KEPT_OPTIONS}
+    assert not unset, (
+        "options no caller outside the tests sets (make them constants, "
+        "or add them to KEPT_OPTIONS with a reason): %s"
+        % sorted(unset.items()))
 
 
-def test_kept_options_are_still_test_only():
-    test_only = _test_only_options()
-    stale = sorted(q for q in KEPT_OPTIONS if q not in test_only)
+def test_kept_options_still_lack_a_caller():
+    unset = _unset_options()
+    stale = sorted(q for q in KEPT_OPTIONS if q not in unset)
     assert not stale, ("KEPT_OPTIONS entries that are gone or now have a "
                        "caller: %s" % stale)
 
@@ -391,3 +424,33 @@ def test_pyspark_override_is_reached():
     names, options = inventory({Path("m.py"): tree})
     assert "R.read" not in names and "R.extra" in names
     assert set(options) == {"R.extra.k"}
+
+
+def _unset(source, tests, kept=()):
+    # the package is among its own callers
+    return set(unset_options({Path("m.py"): _DEFS},
+                             [_DEFS, ast.parse(source)], [ast.parse(tests)],
+                             kept))
+
+
+def test_option_nobody_sets_fails():
+    assert _unset("f(1)\n", "f(1)\n") == {"f.x", "f.y"}
+    assert _unset("f(1, 2)\n", "f(1, y=2)\n") == {"f.y"}
+
+
+def test_option_a_test_sets_passes_only_on_a_kept_name():
+    assert _unset("", "f(1, y=2)\n") == {"f.x", "f.y"}
+    assert _unset("", "f(1, y=2)\n", kept={"f"}) == {"f.x"}
+
+
+def test_method_is_reached_only_through_an_attribute():
+    cls = ast.parse("class C:\n    def lineage(self, t=None):\n"
+                    "        pass\n")
+
+    def reached(source):
+        return "C.lineage" not in unreached({Path("m.py"): cls},
+                                            [ast.parse(source)])
+
+    assert not reached("lineage = f()\nlineage.x\n")
+    assert not reached('meta = {"lineage": []}\nmeta["lineage"]\n')
+    assert reached("obj.lineage()\n")
